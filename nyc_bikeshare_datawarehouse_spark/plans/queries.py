@@ -7018,10 +7018,11 @@ def q_delete_mor(spark, sf_dir):
     (sources/versioned.delete_where(strategy="merge-on-read"), r14) —
     the Iceberg-v2 equality-delete sibling of q_delete_where's
     copy-on-write: the delete commit is O(manifest) with ZERO data I/O
-    (runtime-guarded: no v2 data directory exists, the file list is
-    byte-identical to v1's), and reads apply NOT(pred) to exactly the
-    files that existed at the delete (the sequence-number scoping rule
-    flattened to explicit file lists). The commit sequence makes the
+    (runtime-guarded: the commit adds only its manifest to the table
+    directory, and the file list is byte-identical to v1's), and reads
+    apply NOT(pred) to exactly the files that existed at the delete
+    (the sequence-number scoping rule flattened to explicit file
+    lists). The commit sequence makes the
     scoping itself the checked artifact: v1 = all orders, v2 = MoR
     DELETE of every 'P' row, v3 = APPEND of the high-value 'P' slice
     (cents > 20M) — rows that MATCH the v2 predicate but were appended
@@ -7050,10 +7051,11 @@ def q_delete_mor(spark, sf_dir):
     if _os.path.isdir(base):
         _shutil.rmtree(base)
     versioned.write_snapshot(o, base)
+    entries = set(_os.listdir(base))
     v2, n_rw, n_kept = versioned.delete_where(
         spark, base, where={"o_orderstatus": "P"}, strategy="merge-on-read"
     )
-    if n_rw != 0 or _os.path.isdir(_os.path.join(base, f"v{v2}")):
+    if n_rw != 0 or set(_os.listdir(base)) - entries != {f"_manifest_v{v2}.json"}:
         raise RuntimeError("merge-on-read delete performed data I/O")
     with open(versioned._manifest_path(base, 1)) as fh:
         m1 = _json.load(fh)

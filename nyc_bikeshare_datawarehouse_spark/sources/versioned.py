@@ -17,14 +17,26 @@ nothing but parquet + JSON sidecars:
 - manifest files start with `_`, which Spark's parquet reader skips
   (the sidecar-marker rule, streaming/sketches.py `_last_batch_id`) —
   so the data directory stays directly scannable as "latest" too.
+- every commit goes through ONE publish step (`_commit`): the writer
+  stages its data in a fresh directory of its own (`_stage`, named by
+  uuid, so concurrent writers never share or delete each other's
+  files), then creates `_manifest_v{head+1}.json` IF ABSENT — the
+  manifest is written to a private temp file and hard-linked into
+  place, and a link that finds the name taken means another writer won
+  that version (Delta Lake's put-if-absent log, Armbrust et al., VLDB
+  2020). The loser of an APPEND rebuilds its manifest on the new head
+  and retries (its files are still valid on top of any head); every
+  other commit (overwrite, merge, compaction, DML, rollback, schema
+  evolution) computed its file list from one particular head and is
+  REJECTED with `CommitConflict`, naming the version it lost to.
 
 Scale: the manifest is O(files), not O(rows); reads are plain
 `spark.read.parquet(*files)` so column pruning / predicate pushdown /
-AQE all apply unchanged. File listing here uses the local filesystem
-(the sandbox has no object store); on a real cluster the two
+AQE all apply unchanged. File listing here uses the local (POSIX)
+filesystem; on a cluster with an object store the
 `os.listdir`/`os.path.exists` sites swap for the Hadoop FileSystem API
-with the manifest write made atomic via rename — the read protocol is
-unchanged.
+and the hard-link publish for the store's conditional create (a put
+with If-None-Match) — the read protocol is unchanged.
 """
 
 from __future__ import annotations
@@ -33,6 +45,8 @@ import json
 import os
 import shutil
 import urllib.parse
+import uuid
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructType
@@ -49,6 +63,117 @@ _PT_PREFIX = "__pt_"
 
 def _manifest_path(base_dir: str, version: int) -> str:
     return os.path.join(base_dir, f"_manifest_v{version}.json")
+
+
+def _load_manifest(base_dir: str, version: int) -> dict | None:
+    """Manifest `version` under `base_dir`, None when it does not exist
+    (never committed, or expired)."""
+    try:
+        with open(_manifest_path(base_dir, version)) as fh:
+            return json.load(fh)
+    except FileNotFoundError:
+        return None
+
+
+def _head(base_dir: str) -> tuple[int, dict]:
+    """(version, manifest) of the current snapshot — refusing an empty
+    table, which every in-place operation needs a snapshot to act on."""
+    version = latest_version(base_dir)
+    if version == 0:
+        raise ValueError(f"no snapshot under {base_dir}")
+    return version, _load_manifest(base_dir, version)
+
+
+class CommitConflict(RuntimeError):
+    """A commit planned against one head lost the race for the next
+    version to a concurrent writer. Nothing was published; re-run the
+    operation against the new head."""
+
+
+def _commit(
+    base_dir: str,
+    build: Callable[[int, dict | None], dict],
+    expected: int | None = None,
+) -> int:
+    """Publish `build(head_version, head_manifest)` as version head+1 and
+    return that version — the ONE place a manifest is written.
+
+    The manifest goes to a temp name private to this call and is then
+    hard-linked to `_manifest_v{head+1}.json`: `os.link` is
+    create-if-absent (it never replaces an existing name), so exactly
+    one writer wins each version, and a crash leaves at most a temp
+    file that `latest_version` does not count. `expected=None` is the
+    APPEND rule: on losing, rebuild on the new head and retry.
+    Otherwise the caller planned against head `expected`, and any other
+    outcome raises CommitConflict naming the version it lost to."""
+    while True:
+        head = latest_version(base_dir)
+        if expected is not None and head != expected:
+            break
+        manifest = {"version": head + 1, **build(head, _load_manifest(base_dir, head))}
+        mp = _manifest_path(base_dir, head + 1)
+        tmp = f"{mp}.{uuid.uuid4().hex}.tmp"
+        with open(tmp, "w") as fh:
+            json.dump(manifest, fh)
+        try:
+            os.link(tmp, mp)
+            return head + 1
+        except FileExistsError:
+            if expected is not None:
+                break
+        finally:
+            os.unlink(tmp)
+    raise CommitConflict(
+        f"commit to {base_dir} was planned against v{expected} and lost "
+        f"to concurrent commit v{expected + 1}"
+    )
+
+
+def _stage(df: DataFrame, base_dir: str, partition_by: Sequence[str] = ()) -> list[str]:
+    """Write `df` into a fresh directory of its own under `base_dir` and
+    return its parquet leaves. The directory is named by uuid, not by
+    version: a writer never learns its version until `_commit` wins
+    one, and no writer ever overwrites or deletes a directory it did
+    not create. `partition_by` lays the files out under
+    `__pt_<col>=<value>/` mirror directories (see _PT_PREFIX)."""
+    data_dir = os.path.join(base_dir, uuid.uuid4().hex)
+    for c in partition_by:
+        df = df.withColumn(_PT_PREFIX + c, F.col(c).cast("string"))
+    df.write.parquet(data_dir, partitionBy=[_PT_PREFIX + c for c in partition_by] or None)
+    return _leaf_files(data_dir)
+
+
+def _uri_path(uri: str) -> str:
+    """The local path of an `input_file_name()` URI, in the form
+    `_leaf_files` lists it."""
+    return os.path.abspath(urllib.parse.unquote(urllib.parse.urlparse(uri).path))
+
+
+def _zone_maps(
+    spark: SparkSession, schema: StructType, files: list[str], cols: list[str]
+) -> dict[str, dict]:
+    """Per-file min/max of `cols` over just-staged `files`: ONE job
+    grouped by physical file — O(new data), never the table; the
+    collect is O(files) driver state (bounded like every manifest
+    operation)."""
+    if not cols or not files:
+        return {}
+    aggs = []
+    for c in cols:
+        aggs += [F.min(c).alias(f"__mn_{c}"), F.max(c).alias(f"__mx_{c}")]
+    rows = (
+        spark.read.schema(schema).parquet(*files)
+        .groupBy(F.input_file_name().alias("__f"))
+        .agg(*aggs)
+        .collect()
+    )
+    return {
+        _uri_path(r["__f"]): {
+            c: [_stat_value(r[f"__mn_{c}"]), _stat_value(r[f"__mx_{c}"])]
+            for c in cols
+        }
+        for r in rows
+    }
 
 
 def _stat_value(v):
@@ -120,11 +245,12 @@ def _leaf_files(d: str) -> list[str]:
     return sorted(out)
 
 
-def _pt_values(path: str, data_dir: str) -> dict[str, str]:
-    """Partition values encoded in `path`'s directory segments (STRING
-    form, Hive-escaped by Spark's writer — unescaped here)."""
+def _pt_values(path: str, root: str) -> dict[str, str]:
+    """Partition values encoded in `path`'s directory segments below
+    `root` (STRING form, Hive-escaped by Spark's writer — unescaped
+    here)."""
     vals: dict[str, str] = {}
-    rel = os.path.relpath(path, data_dir)
+    rel = os.path.relpath(path, root)
     for seg in rel.split(os.sep)[:-1]:
         if "=" in seg:
             k, v = seg.split("=", 1)
@@ -153,11 +279,8 @@ def manifest_metadata(base_dir: str, version: int | None = None) -> dict:
     replay guard depends on."""
     if version is None:
         version = latest_version(base_dir)
-    mp = _manifest_path(base_dir, version)
-    if version == 0 or not os.path.exists(mp):
-        return {}
-    with open(mp) as fh:
-        return json.load(fh).get("metadata", {})
+    manifest = _load_manifest(base_dir, version)
+    return manifest.get("metadata", {}) if manifest else {}
 
 
 def last_metadata_value(base_dir: str, key: str, default=None):
@@ -175,12 +298,16 @@ def last_metadata_value(base_dir: str, key: str, default=None):
     no keep_last retention — run `expire_snapshots` periodically on such
     tables, or accept the scan (manifests are tiny JSON)."""
     base_dir = os.path.abspath(base_dir)
-    for v in range(latest_version(base_dir), 0, -1):
-        mp = _manifest_path(base_dir, v)
-        if not os.path.exists(mp):
-            continue
-        with open(mp) as fh:
-            md = json.load(fh).get("metadata", {})
+    return _metadata_as_of(base_dir, key, latest_version(base_dir), default)
+
+
+def _metadata_as_of(base_dir: str, key: str, version: int, default=None):
+    """The scan-back behind `last_metadata_value`, bounded above: the
+    `key` metadata of the newest manifest at or below `version` that
+    carries it (rollback_to asks "as of the target", commits that
+    planned against a head ask "as of that head")."""
+    for v in range(version, 0, -1):
+        md = (_load_manifest(base_dir, v) or {}).get("metadata", {})
         if key in md:
             # an explicit null (rollback_to's "no batches seen as of the
             # target" marker) STOPS the scan-back — continuing past it
@@ -247,80 +374,51 @@ def write_snapshot(
     hash by their Spark string cast — intended for integer/string key
     columns; float keys are discouraged (string-form mismatch risk).
     Cost: one O(commit) job per bloom column + ~512 manifest bytes per
-    (file, column)."""
+    (file, column).
+
+    Concurrent commits: an append that loses the race for its version
+    re-adds its (already staged) files on top of the new head and
+    retries, so concurrent appends all land, in distinct consecutive
+    versions; an overwrite replaces the head it started from and raises
+    CommitConflict if another commit landed first."""
     if mode not in ("append", "overwrite"):
         raise ValueError(f"unknown snapshot mode: {mode!r}")
-    partition_by = list(partition_by or [])
-    stats_for = list(stats_for or [])
-    bloom_for = list(bloom_for or [])
-    missing = [c for c in partition_by if c not in df.columns]
-    if missing:
-        raise ValueError(f"partition_by columns not in dataframe: {missing}")
-    missing = [c for c in bloom_for if c not in df.columns]
-    if missing:
-        raise ValueError(f"bloom_for columns not in dataframe: {missing}")
-    missing = [c for c in stats_for if c not in df.columns]
-    if missing:
-        raise ValueError(f"stats_for columns not in dataframe: {missing}")
     # absolute from here on: manifests store these paths verbatim, and a
     # relative base_dir would make spark.read.parquet(*files) resolve
     # against Spark's default FS / working dir, which can differ from
     # the Python cwd that listed them
     base_dir = os.path.abspath(base_dir)
-    prev = latest_version(base_dir)
-    version = prev + 1
-    data_dir = os.path.join(base_dir, f"v{version}")
-    if os.path.isdir(data_dir):  # torn uncommitted write from a dead run
-        shutil.rmtree(data_dir)
-    if partition_by:
-        writer = df
-        for c in partition_by:
-            writer = writer.withColumn(_PT_PREFIX + c, F.col(c).cast("string"))
-        writer.write.mode("overwrite").partitionBy(
-            *[_PT_PREFIX + c for c in partition_by]
-        ).parquet(data_dir)
-    else:
-        df.write.mode("overwrite").parquet(data_dir)
-    new_files = _leaf_files(data_dir)
-    files = list(new_files)
-    schema = df.schema
-    # spec history: reuse the prior spec version when the column list
-    # matches, else append a new spec (evolution)
-    prev_manifest = None
-    if prev > 0 and os.path.exists(_manifest_path(base_dir, prev)):
-        with open(_manifest_path(base_dir, prev)) as fh:
-            prev_manifest = json.load(fh)
-    specs = list(prev_manifest.get("partition_specs", [])) if prev_manifest else []
-    spec_id = next(
-        (s["spec_id"] for s in specs if s["columns"] == partition_by), None
+    return _write_snapshot(
+        df, base_dir, mode, metadata, partition_by, stats_for, bloom_for,
+        expected=None if mode == "append" else latest_version(base_dir),
     )
-    if spec_id is None:
-        spec_id = len(specs) + 1
-        specs.append({"spec_id": spec_id, "columns": partition_by})
-    # zone maps: ONE job over the just-written commit, grouped by
-    # physical file — O(new data), never the table; the collect is
-    # O(files) driver state (bounded like every manifest operation)
-    col_stats: dict[str, dict] = {}
-    if stats_for and new_files:
-        aggs = []
-        for c in stats_for:
-            aggs += [F.min(c).alias(f"__mn_{c}"), F.max(c).alias(f"__mx_{c}")]
-        rows = (
-            df.sparkSession.read.parquet(data_dir)
-            .groupBy(F.input_file_name().alias("__f"))
-            .agg(*aggs)
-            .collect()
-        )
-        for r in rows:
-            # input_file_name returns a URI; normalize to the os path
-            # _leaf_files produced
-            p = os.path.abspath(
-                urllib.parse.unquote(urllib.parse.urlparse(r["__f"]).path)
-            )
-            col_stats[p] = {
-                c: [_stat_value(r[f"__mn_{c}"]), _stat_value(r[f"__mx_{c}"])]
-                for c in stats_for
-            }
+
+
+def _write_snapshot(
+    df: DataFrame,
+    base_dir: str,
+    mode: str,
+    metadata: dict | None = None,
+    partition_by: list[str] | None = None,
+    stats_for: list[str] | None = None,
+    bloom_for: list[str] | None = None,
+    expected: int | None = None,
+) -> int:
+    """write_snapshot's body, for an absolute `base_dir`. `expected` is
+    the head an overwrite replaces (merge/compaction pass the head they
+    read), None for an append that rebases."""
+    partition_by = list(partition_by or [])
+    stats_for = list(stats_for or [])
+    bloom_for = list(bloom_for or [])
+    for arg, cols in (
+        ("partition_by", partition_by), ("bloom_for", bloom_for), ("stats_for", stats_for)
+    ):
+        missing = [c for c in cols if c not in df.columns]
+        if missing:
+            raise ValueError(f"{arg} columns not in dataframe: {missing}")
+    new_files = _stage(df, base_dir, partition_by)
+    spark = df.sparkSession
+    col_stats = _zone_maps(spark, df.schema, new_files, stats_for)
     # bloom filters: one O(commit) job per column — explode the k bit
     # positions per row, distinct (file, bit), fold into a bitmap
     # driver-side. The distinct bounds the collect at m bits per file.
@@ -328,7 +426,7 @@ def write_snapshot(
     if bloom_for and new_files:
         import base64
 
-        scan = df.sparkSession.read.parquet(data_dir)
+        scan = spark.read.schema(df.schema).parquet(*new_files)
         for c in bloom_for:
             rows = (
                 scan.filter(F.col(c).isNotNull())
@@ -347,126 +445,126 @@ def write_snapshot(
                 .collect()
             )
             for r in rows:
-                p = os.path.abspath(
-                    urllib.parse.unquote(urllib.parse.urlparse(r["__f"]).path)
-                )
                 bm = bytearray(_BLOOM_BITS // 8)
                 for b in r["__bits"]:
                     bm[b // 8] |= 1 << (b % 8)
-                col_blooms.setdefault(p, {})[c] = {
+                col_blooms.setdefault(_uri_path(r["__f"]), {})[c] = {
                     "m": _BLOOM_BITS,
                     "k": _BLOOM_HASHES,
                     "bits": base64.b64encode(bytes(bm)).decode(),
                 }
-    file_meta = {
-        f: {
-            "pt": _pt_values(f, data_dir),
-            "spec_id": spec_id,
-            **({"stats": col_stats[f]} if f in col_stats else {}),
-            **({"bloom": col_blooms[f]} if f in col_blooms else {}),
-        }
-        for f in new_files
-    }
-    row_filters: list = []
-    if mode == "append" and prev > 0:
-        files = prev_manifest["files"] + files
-        # prior files keep their own recorded partition values/spec;
-        # legacy manifests without file_meta contribute nothing (their
-        # files are then never prunable — conservative). Entries that
-        # predate the field-id history are tagged with the schema that
-        # was current when they were written (= the previous current —
-        # sound because pre-history commits can only be add-only).
-        _, prev_cur0 = _schemas_of(prev_manifest)
-        carried = {
-            f: {**meta, "sid": _file_sid(meta, prev_cur0)}
-            for f, meta in prev_manifest.get("file_meta", {}).items()
-        }
-        file_meta = {**carried, **file_meta}
-        # merge-on-read delete filters ride appends (their recorded file
-        # lists never include this commit's new files, so appended rows
-        # are not filtered); an overwrite rewrites content post-filter,
-        # so filters reset — which is how compaction materializes them
-        row_filters = list(prev_manifest.get("row_filters", []))
-        # add-only schema evolution: the recorded schema is the previous
-        # schema plus any NEW fields this append introduces — so an
-        # append missing an old column keeps it readable (NULL for the
-        # new files) and an append adding a column backfills NULLs for
-        # the old files; a type change is refused like any table format
-        prev_schema = StructType.fromJson(prev_manifest["schema"])
-        merged = list(prev_schema.fields)
-        by_name = {f.name: f for f in merged}
-        for f in schema.fields:
-            if f.name not in by_name:
-                merged.append(f)
-            elif by_name[f.name].dataType != f.dataType:
-                raise ValueError(
-                    f"append changes column '{f.name}' from "
-                    f"{by_name[f.name].dataType} to {f.dataType} — "
-                    "type evolution is not supported (add-only; use "
-                    "alter_column_type for widenings)"
-                )
-        schema = StructType(merged)
-    # field-id schema history (r15 evolution support): every name is
-    # assigned an id ONCE and ids are never reused — matching by id is
-    # what makes rename/widen/drop (rename_column/alter_column_type/
-    # drop_column) metadata-only and resurrection-proof. A commit whose
-    # fields match the previous current schema reuses its entry.
-    if prev_manifest is not None:
-        prev_schemas, prev_cur = _schemas_of(prev_manifest)
-        prev_fields = _schema_fields(prev_schemas, prev_cur)
-        by_fid = {f["name"]: f for f in prev_fields}
-        next_id = max(f["id"] for s in prev_schemas for f in s["fields"]) + 1
-        fields = []
-        for f in schema.fields:
-            p = by_fid.get(f.name)
-            if p is not None:
-                # append mode validated type equality above; overwrite
-                # (REPLACE TABLE) keeps the id under the replaced type
-                t = f.dataType.jsonValue() if mode == "overwrite" else p["type"]
-                fields.append({"id": p["id"], "name": f.name, "type": t})
-            else:
-                fields.append(
-                    {"id": next_id, "name": f.name, "type": f.dataType.jsonValue()}
-                )
-                next_id += 1
-        schemas = list(prev_schemas)
-        if fields == prev_fields:
-            cur_sid = prev_cur
-        else:
-            cur_sid = max(s["schema_id"] for s in schemas) + 1
-            schemas.append({"schema_id": cur_sid, "fields": fields})
-    else:
-        fields = [
-            {"id": i + 1, "name": f.name, "type": f.dataType.jsonValue()}
-            for i, f in enumerate(schema.fields)
-        ]
-        schemas = [{"schema_id": 1, "fields": fields}]
-        cur_sid = 1
-    for f in new_files:
-        file_meta[f]["sid"] = cur_sid
-    # last: the manifest IS the commit point — written to a temp name
-    # and renamed, so a crash mid-write leaves no half-manifest that
-    # latest_version() would count as committed (os.replace is atomic
-    # on POSIX; v{version}/ stays an invisible orphan either way)
-    mp = _manifest_path(base_dir, version)
-    with open(mp + ".tmp", "w") as fh:
-        json.dump(
-            {
-                "version": version,
-                "files": files,
-                "schema": schema.jsonValue(),
-                "metadata": metadata or {},
-                "partition_specs": specs,
-                "current_spec": spec_id,
-                "file_meta": file_meta,
-                "row_filters": row_filters,
-                "schemas": schemas,
-                "current_schema": cur_sid,
-            },
-            fh,
+
+    def build(_prev: int, prev_manifest: dict | None) -> dict:
+        files = list(new_files)
+        schema = df.schema
+        # spec history: reuse the prior spec version when the column list
+        # matches, else append a new spec (evolution)
+        specs = list(prev_manifest.get("partition_specs", [])) if prev_manifest else []
+        spec_id = next(
+            (s["spec_id"] for s in specs if s["columns"] == partition_by), None
         )
-    os.replace(mp + ".tmp", mp)
-    return version
+        if spec_id is None:
+            spec_id = len(specs) + 1
+            specs.append({"spec_id": spec_id, "columns": partition_by})
+        file_meta = {
+            f: {
+                "pt": _pt_values(f, base_dir),
+                "spec_id": spec_id,
+                **({"stats": col_stats[f]} if f in col_stats else {}),
+                **({"bloom": col_blooms[f]} if f in col_blooms else {}),
+            }
+            for f in new_files
+        }
+        row_filters: list = []
+        if mode == "append" and prev_manifest is not None:
+            files = prev_manifest["files"] + files
+            # prior files keep their own recorded partition values/spec;
+            # legacy manifests without file_meta contribute nothing (their
+            # files are then never prunable — conservative). Entries that
+            # predate the field-id history are tagged with the schema that
+            # was current when they were written (= the previous current —
+            # sound because pre-history commits can only be add-only).
+            _, prev_cur0 = _schemas_of(prev_manifest)
+            carried = {
+                f: {**meta, "sid": _file_sid(meta, prev_cur0)}
+                for f, meta in prev_manifest.get("file_meta", {}).items()
+            }
+            file_meta = {**carried, **file_meta}
+            # merge-on-read delete filters ride appends (their recorded file
+            # lists never include this commit's new files, so appended rows
+            # are not filtered); an overwrite rewrites content post-filter,
+            # so filters reset — which is how compaction materializes them
+            row_filters = list(prev_manifest.get("row_filters", []))
+            # add-only schema evolution: the recorded schema is the previous
+            # schema plus any NEW fields this append introduces — so an
+            # append missing an old column keeps it readable (NULL for the
+            # new files) and an append adding a column backfills NULLs for
+            # the old files; a type change is refused like any table format
+            prev_schema = StructType.fromJson(prev_manifest["schema"])
+            merged = list(prev_schema.fields)
+            by_name = {f.name: f for f in merged}
+            for f in schema.fields:
+                if f.name not in by_name:
+                    merged.append(f)
+                elif by_name[f.name].dataType != f.dataType:
+                    raise ValueError(
+                        f"append changes column '{f.name}' from "
+                        f"{by_name[f.name].dataType} to {f.dataType} — "
+                        "type evolution is not supported (add-only; use "
+                        "alter_column_type for widenings)"
+                    )
+            schema = StructType(merged)
+        # field-id schema history (r15 evolution support): every name is
+        # assigned an id ONCE and ids are never reused — matching by id is
+        # what makes rename/widen/drop (rename_column/alter_column_type/
+        # drop_column) metadata-only and resurrection-proof. A commit whose
+        # fields match the previous current schema reuses its entry.
+        if prev_manifest is not None:
+            prev_schemas, prev_cur = _schemas_of(prev_manifest)
+            prev_fields = _schema_fields(prev_schemas, prev_cur)
+            by_fid = {f["name"]: f for f in prev_fields}
+            next_id = max(f["id"] for s in prev_schemas for f in s["fields"]) + 1
+            fields = []
+            for f in schema.fields:
+                p = by_fid.get(f.name)
+                if p is not None:
+                    # append mode validated type equality above; overwrite
+                    # (REPLACE TABLE) keeps the id under the replaced type
+                    t = f.dataType.jsonValue() if mode == "overwrite" else p["type"]
+                    fields.append({"id": p["id"], "name": f.name, "type": t})
+                else:
+                    fields.append(
+                        {"id": next_id, "name": f.name, "type": f.dataType.jsonValue()}
+                    )
+                    next_id += 1
+            schemas = list(prev_schemas)
+            if fields == prev_fields:
+                cur_sid = prev_cur
+            else:
+                cur_sid = max(s["schema_id"] for s in schemas) + 1
+                schemas.append({"schema_id": cur_sid, "fields": fields})
+        else:
+            fields = [
+                {"id": i + 1, "name": f.name, "type": f.dataType.jsonValue()}
+                for i, f in enumerate(schema.fields)
+            ]
+            schemas = [{"schema_id": 1, "fields": fields}]
+            cur_sid = 1
+        for f in new_files:
+            file_meta[f]["sid"] = cur_sid
+        return {
+            "files": files,
+            "schema": schema.jsonValue(),
+            "metadata": metadata or {},
+            "partition_specs": specs,
+            "current_spec": spec_id,
+            "file_meta": file_meta,
+            "row_filters": row_filters,
+            "schemas": schemas,
+            "current_schema": cur_sid,
+        }
+
+    return _commit(base_dir, build, expected)
 
 
 def _spark_str(v) -> str:
@@ -763,11 +861,9 @@ def read_snapshot(
     base_dir = os.path.abspath(base_dir)
     if version is None:
         version = latest_version(base_dir)
-    mp = _manifest_path(base_dir, version)
-    if not os.path.exists(mp):
+    manifest = _load_manifest(base_dir, version)
+    if manifest is None:
         raise ValueError(f"no snapshot v{version} under {base_dir}")
-    with open(mp) as fh:
-        manifest = json.load(fh)
     files = manifest["files"]
     schema = StructType.fromJson(manifest["schema"])
     if where or where_range:
@@ -893,11 +989,9 @@ def read_increment(
         )
     manifests: dict[int, dict] = {}
     for v in range(from_version, to_version + 1):
-        mp = _manifest_path(base_dir, v)
-        if not os.path.exists(mp):
+        manifests[v] = _load_manifest(base_dir, v)
+        if manifests[v] is None:
             raise ValueError(f"no snapshot v{v} under {base_dir} (expired?)")
-        with open(mp) as fh:
-            manifests[v] = json.load(fh)
     for v in range(from_version + 1, to_version + 1):
         if not set(manifests[v - 1]["files"]) <= set(manifests[v]["files"]):
             raise ValueError(
@@ -938,10 +1032,11 @@ def merge_into_snapshot(
     keys take the update row wholesale, unmatched keys insert, optional
     delete-by-key via `deletes`), committed as ONE new overwrite
     snapshot. Version N stays readable after the merge (time travel
-    across an upsert), the commit point is the manifest rename, so a
-    crash mid-merge leaves the table at N with no torn state, and the
-    streaming sink's scan-back batch-id guard is unaffected (this
-    manifest carries no batch_id).
+    across an upsert). The commit point is the create-if-absent publish
+    of manifest N+1 (`_commit`): a crash mid-merge leaves the table at
+    N with no torn state, and a merge that loses N+1 to a concurrent
+    commit raises CommitConflict rather than overwrite rows it never
+    read.
 
     Copy-on-write strategy, like Delta/Iceberg CoW: the merge result is
     rewritten wholesale. At 100 TB scope the rewrite to the partitions
@@ -957,15 +1052,16 @@ def merge_into_snapshot(
     from nyc_bikeshare_datawarehouse_spark.operators.merge import merge_upsert
 
     base_dir = os.path.abspath(base_dir)
-    if latest_version(base_dir) == 0:
+    head = latest_version(base_dir)
+    if head == 0:
         merged = updates
     else:
-        merged = merge_upsert(read_snapshot(spark, base_dir), updates, key)
+        merged = merge_upsert(read_snapshot(spark, base_dir, head), updates, key)
     if deletes is not None:
         merged = merged.join(deletes.select(key), key, "left_anti")
-    last_bid = last_metadata_value(base_dir, "batch_id")
+    last_bid = _metadata_as_of(base_dir, "batch_id", head)
     metadata = {"batch_id": last_bid} if last_bid is not None else None
-    return write_snapshot(merged, base_dir, mode="overwrite", metadata=metadata)
+    return _write_snapshot(merged, base_dir, "overwrite", metadata, expected=head)
 
 
 def compact_snapshot(
@@ -986,8 +1082,9 @@ def compact_snapshot(
     Delta OPTIMIZE) pays that debt back. Content is unchanged (pytest
     pins multiset equality via checksum), historical snapshots keep
     reading their original files (immutable — expire reclaims them
-    later), and the commit point is the manifest rename, so a crashed
-    compaction changes nothing. At scale, partition the rewrite
+    later), and the commit point is the create-if-absent manifest
+    publish, so a crashed compaction changes nothing and one that loses
+    the race to a concurrent commit raises CommitConflict. At scale, partition the rewrite
     (compact one partition's files per commit) instead of one global
     repartition; the manifest protocol is unchanged.
 
@@ -1006,19 +1103,22 @@ def compact_snapshot(
     clustered compaction is how the table earns its skipping back.
     `stats_for` defaults to `cluster_by` so the fresh layout's zone
     maps land in the same commit (pass explicitly to record more)."""
-    current = read_snapshot(spark, base_dir)
+    base_dir = os.path.abspath(base_dir)
+    head = latest_version(base_dir)
+    current = read_snapshot(spark, base_dir, head)
     if cluster_by:
         rewritten = current.repartitionByRange(
             target_files, *cluster_by
         ).sortWithinPartitions(*cluster_by)
     else:
         rewritten = current.repartition(target_files)
-    return write_snapshot(
+    return _write_snapshot(
         rewritten,
         base_dir,
-        mode="overwrite",
-        metadata=metadata,
+        "overwrite",
+        metadata,
         stats_for=stats_for if stats_for is not None else cluster_by,
+        expected=head,
     )
 
 
@@ -1053,7 +1153,10 @@ def delete_where(
     clustered compaction re-earns the skipping).
 
     Historical snapshots keep reading the original files (immutable;
-    retention reclaims them); the commit point is the manifest rename.
+    retention reclaims them). The commit point is the create-if-absent
+    publish of the next manifest: the delete was planned against one
+    head, so losing that version to a concurrent commit raises
+    CommitConflict (re-run it) rather than drop the winner's rows.
     The streaming replay guard's batch id is carried forward like
     compaction/merge: the delete rewrites exactly the state those
     batches produced, so re-asserting their id is truthful.
@@ -1074,152 +1177,7 @@ def delete_where(
 
     Returns (version, n_files_rewritten, n_files_kept) —
     (version, 0, n_files) for merge-on-read."""
-    if strategy not in ("copy-on-write", "merge-on-read"):
-        raise ValueError(f"unknown delete strategy: {strategy!r}")
-    base_dir = os.path.abspath(base_dir)
-    prev = latest_version(base_dir)
-    if prev == 0:
-        raise ValueError(f"no snapshot under {base_dir}")
-    with open(_manifest_path(base_dir, prev)) as fh:
-        manifest = json.load(fh)
-    schema = StructType.fromJson(manifest["schema"])
-    if not where and not where_range:
-        raise ValueError("delete_where needs a predicate (where/where_range)")
-    for k in list(where or {}) + list(where_range or {}):
-        if k not in schema.fieldNames():
-            raise ValueError(f"predicate column {k!r} not in table schema")
-    version = prev + 1
-    last_bid = last_metadata_value(base_dir, "batch_id")
-
-    if strategy == "merge-on-read":
-        _validate_mor_values(where, where_range)
-        filters = list(manifest.get("row_filters", []))
-        filters.append(
-            {
-                "where": dict(where or {}),
-                "where_range": {
-                    k: [lo, hi] for k, (lo, hi) in (where_range or {}).items()
-                },
-                "files": manifest["files"],
-            }
-        )
-        mp = _manifest_path(base_dir, version)
-        with open(mp + ".tmp", "w") as fh:
-            json.dump(
-                {
-                    "version": version,
-                    "files": manifest["files"],
-                    "schema": manifest["schema"],
-                    "metadata": {
-                        "delete_where": {
-                            "strategy": "merge-on-read",
-                            "where": {k: str(v) for k, v in (where or {}).items()},
-                            "where_range": {
-                                k: [_stat_value(lo), _stat_value(hi)]
-                                for k, (lo, hi) in (where_range or {}).items()
-                            },
-                        },
-                        **({"batch_id": last_bid} if last_bid is not None else {}),
-                    },
-                    "partition_specs": manifest.get("partition_specs", []),
-                    "current_spec": manifest.get("current_spec", 1),
-                    "file_meta": manifest.get("file_meta", {}),
-                    "row_filters": filters,
-                    **_schema_keys(manifest),
-                },
-                fh,
-            )
-        os.replace(mp + ".tmp", mp)
-        return version, 0, len(manifest["files"])
-
-    candidates = prune_files(manifest, where, where_range)
-    cand_set = set(candidates)
-    kept = [f for f in manifest["files"] if f not in cand_set]
-    new_files: list[str] = []
-    col_stats: dict[str, dict] = {}
-    if candidates:
-        # read THROUGH any existing merge-on-read filters: a CoW rewrite
-        # of a file must not resurrect rows an earlier MoR delete hid
-        df = _read_files(spark, manifest, candidates)
-        # conjunctive delete predicate — NULL-safe: DELETE removes rows
-        # where the predicate is TRUE; NULL/FALSE rows survive
-        pred = _delete_pred(schema, where, where_range)
-        surviving = df.filter(~F.coalesce(pred, F.lit(False)))
-        data_dir = os.path.join(base_dir, f"v{version}")
-        if os.path.isdir(data_dir):  # torn uncommitted write from a dead run
-            shutil.rmtree(data_dir)
-        surviving.write.mode("overwrite").parquet(data_dir)
-        new_files = _leaf_files(data_dir)
-        if stats_for and new_files:
-            aggs = []
-            for c in stats_for:
-                aggs += [F.min(c).alias(f"__mn_{c}"), F.max(c).alias(f"__mx_{c}")]
-            rows = (
-                spark.read.schema(schema).parquet(data_dir)
-                .groupBy(F.input_file_name().alias("__f"))
-                .agg(*aggs)
-                .collect()
-            )
-            for r in rows:
-                p = os.path.abspath(
-                    urllib.parse.unquote(urllib.parse.urlparse(r["__f"]).path)
-                )
-                col_stats[p] = {
-                    c: [_stat_value(r[f"__mn_{c}"]), _stat_value(r[f"__mx_{c}"])]
-                    for c in stats_for
-                }
-    spec_id = manifest.get("current_spec", 1)
-    _, _cur_sid = _schemas_of(manifest)
-    prev_meta = manifest.get("file_meta", {})
-    file_meta = {f: prev_meta[f] for f in kept if f in prev_meta}
-    for f in new_files:
-        # rewrites read through _read_files (current names), so the new
-        # files carry the CURRENT schema id
-        file_meta[f] = {
-            "pt": {},
-            "spec_id": spec_id,
-            "sid": _cur_sid,
-            **({"stats": col_stats[f]} if f in col_stats else {}),
-        }
-    # existing MoR filters survive for the files they still cover; the
-    # rewritten files are NEW paths (absent from every filter's list)
-    # whose content was already read through the filters above. Entries
-    # covering no kept file are dropped.
-    kept_set = set(kept)
-    row_filters = [
-        flt
-        for flt in manifest.get("row_filters", [])
-        if kept_set & set(flt["files"])
-    ]
-    mp = _manifest_path(base_dir, version)
-    with open(mp + ".tmp", "w") as fh:
-        json.dump(
-            {
-                "version": version,
-                "files": kept + new_files,
-                "schema": manifest["schema"],
-                "metadata": {
-                    "delete_where": {
-                        "where": {k: str(v) for k, v in (where or {}).items()},
-                        "where_range": {
-                            k: [_stat_value(lo), _stat_value(hi)]
-                            for k, (lo, hi) in (where_range or {}).items()
-                        },
-                        "files_rewritten": len(candidates),
-                        "files_kept": len(kept),
-                    },
-                    **({"batch_id": last_bid} if last_bid is not None else {}),
-                },
-                "partition_specs": manifest.get("partition_specs", []),
-                "current_spec": spec_id,
-                "file_meta": file_meta,
-                "row_filters": row_filters,
-                **_schema_keys(manifest),
-            },
-            fh,
-        )
-    os.replace(mp + ".tmp", mp)
-    return version, len(candidates), len(kept)
+    return _dml(spark, base_dir, where, where_range, stats_for, strategy)
 
 
 def update_where(
@@ -1263,194 +1221,139 @@ def update_where(
     Returns (version, n_files_rewritten, n_files_kept) —
     merge-on-read returns (version, 0, n_files_prev) and its I/O is
     the matching rows only."""
+    return _dml(spark, base_dir, where, where_range, stats_for, strategy, set_values)
+
+
+def _dml(
+    spark: SparkSession,
+    base_dir: str,
+    where: dict | None,
+    where_range: dict | None,
+    stats_for: list[str] | None,
+    strategy: str,
+    set_values: dict | None = None,
+) -> tuple[int, int, int]:
+    """The one body behind delete_where (`set_values` None) and
+    update_where. Both strategies share the planning, staging and
+    commit; copy-on-write delete and update differ only in the row
+    transform applied to the candidate files and in the metadata key.
+    The commit is planned against the head read here, so it is rejected
+    (CommitConflict) if another commit takes the next version first."""
+    op = "delete" if set_values is None else "update"
     if strategy not in ("copy-on-write", "merge-on-read"):
-        raise ValueError(f"unknown update strategy: {strategy!r}")
+        raise ValueError(f"unknown {op} strategy: {strategy!r}")
     base_dir = os.path.abspath(base_dir)
-    prev = latest_version(base_dir)
-    if prev == 0:
-        raise ValueError(f"no snapshot under {base_dir}")
-    with open(_manifest_path(base_dir, prev)) as fh:
-        manifest = json.load(fh)
+    prev, manifest = _head(base_dir)
     schema = StructType.fromJson(manifest["schema"])
-    if not set_values:
+    if set_values is not None and not set_values:
         raise ValueError("update_where needs at least one SET column")
     if not where and not where_range:
-        raise ValueError("update_where needs a predicate (where/where_range)")
-    for k in (
-        list(where or {}) + list(where_range or {}) + list(set_values)
-    ):
+        raise ValueError(f"{op}_where needs a predicate (where/where_range)")
+    for k in set_values or {}:
         if k not in schema.fieldNames():
             raise ValueError(f"column {k!r} not in table schema")
-
-    if strategy == "merge-on-read":
+    # NULL-safe: DELETE/UPDATE act where the predicate is TRUE;
+    # NULL/FALSE rows keep their values (_delete_pred also validates the
+    # predicate columns)
+    pred = F.coalesce(_delete_pred(schema, where, where_range), F.lit(False))
+    mor = strategy == "merge-on-read"
+    if mor:
         _validate_mor_values(where, where_range)
-        version = prev + 1
-        pred = F.coalesce(
-            _delete_pred(schema, where, where_range), F.lit(False)
-        )
+    if set_values is None:
+        def transform(df: DataFrame) -> DataFrame:
+            return df.filter(~pred)
+    else:
         types = {f.name: f.dataType for f in schema.fields}
-        candidates = prune_files(manifest, where, where_range)
-        matching = _read_files(spark, manifest, candidates).filter(pred)
-        updated = matching.select(
-            *[
-                F.lit(set_values[c]).cast(types[c]).alias(c)
-                if c in set_values
-                else F.col(c)
-                for c in schema.fieldNames()
-            ]
-        )
-        data_dir = os.path.join(base_dir, f"v{version}")
-        if os.path.isdir(data_dir):  # torn uncommitted write from a dead run
-            shutil.rmtree(data_dir)
-        updated.write.mode("overwrite").parquet(data_dir)
-        new_files = _leaf_files(data_dir)
-        spec_id = manifest.get("current_spec", 1)
-        _, _cur_sid = _schemas_of(manifest)
-        file_meta = dict(manifest.get("file_meta", {}))
-        for f in new_files:
-            file_meta[f] = {"pt": {}, "spec_id": spec_id, "sid": _cur_sid}
-        filters = list(manifest.get("row_filters", []))
-        # Scope the row filter to the SAME file set the re-inserted
-        # updated rows were built from (candidates), not the whole
-        # manifest: equivalent under correct pruning, and a pruning
-        # false-negative then degrades to a missed update instead of
-        # silent row LOSS (row hidden by a wider filter but never
-        # re-inserted).
-        filters.append(
-            {
-                "where": dict(where or {}),
-                "where_range": {
-                    k: [lo, hi] for k, (lo, hi) in (where_range or {}).items()
-                },
-                "files": candidates,
-            }
-        )
-        last_bid = last_metadata_value(base_dir, "batch_id")
-        mp = _manifest_path(base_dir, version)
-        with open(mp + ".tmp", "w") as fh:
-            json.dump(
-                {
-                    "version": version,
-                    "files": manifest["files"] + new_files,
-                    "schema": manifest["schema"],
-                    "metadata": {
-                        "update_where": {
-                            "strategy": "merge-on-read",
-                            "set": {
-                                k: _stat_value(v) for k, v in set_values.items()
-                            },
-                            "where": {k: str(v) for k, v in (where or {}).items()},
-                            "where_range": {
-                                k: [_stat_value(lo), _stat_value(hi)]
-                                for k, (lo, hi) in (where_range or {}).items()
-                            },
-                        },
-                        **({"batch_id": last_bid} if last_bid is not None else {}),
-                    },
-                    "partition_specs": manifest.get("partition_specs", []),
-                    "current_spec": spec_id,
-                    "file_meta": file_meta,
-                    "row_filters": filters,
-                    **_schema_keys(manifest),
-                },
-                fh,
-            )
-        os.replace(mp + ".tmp", mp)
-        return version, 0, len(manifest["files"])
 
-    candidates = prune_files(manifest, where, where_range)
-    cand_set = set(candidates)
-    kept = [f for f in manifest["files"] if f not in cand_set]
-    version = prev + 1
-    new_files: list[str] = []
-    col_stats: dict[str, dict] = {}
-    if candidates:
-        df = _read_files(spark, manifest, candidates)
-        pred = F.coalesce(
-            _delete_pred(schema, where, where_range), F.lit(False)
-        )
-        types = {f.name: f.dataType for f in schema.fields}
-        updated = df.select(
-            *[
+        def transform(df: DataFrame) -> DataFrame:
+            return df.select(*[
                 F.when(pred, F.lit(set_values[c]).cast(types[c]))
                 .otherwise(F.col(c))
                 .alias(c)
                 if c in set_values
                 else F.col(c)
                 for c in schema.fieldNames()
-            ]
+            ])
+    desc = {
+        **({"strategy": strategy} if mor else {}),
+        **({"set": {k: _stat_value(v) for k, v in set_values.items()}}
+           if set_values else {}),
+        "where": {k: str(v) for k, v in (where or {}).items()},
+        "where_range": {
+            k: [_stat_value(lo), _stat_value(hi)]
+            for k, (lo, hi) in (where_range or {}).items()
+        },
+    }
+    # candidates: the files that MIGHT hold matching rows (partition
+    # values + zone maps + blooms); they are read THROUGH any existing
+    # merge-on-read filters, so no rewrite resurrects rows a MoR delete hid
+    candidates = prune_files(manifest, where, where_range)
+    filters = manifest.get("row_filters", [])
+    if mor:
+        # every file stays; the new filter hides matches in the files it
+        # was committed against. A MoR update re-inserts the matching
+        # rows with SET applied, and scopes its filter to the SAME
+        # candidates those rows came from: a pruning false negative then
+        # degrades to a missed update, never to silent row loss.
+        kept = manifest["files"]
+        scope = kept if set_values is None else candidates
+        rows = (
+            transform(_read_files(spark, manifest, candidates).filter(pred))
+            if set_values is not None and candidates else None
         )
-        data_dir = os.path.join(base_dir, f"v{version}")
-        if os.path.isdir(data_dir):  # torn uncommitted write from a dead run
-            shutil.rmtree(data_dir)
-        updated.write.mode("overwrite").parquet(data_dir)
-        new_files = _leaf_files(data_dir)
-        if stats_for and new_files:
-            aggs = []
-            for c in stats_for:
-                aggs += [F.min(c).alias(f"__mn_{c}"), F.max(c).alias(f"__mx_{c}")]
-            rows = (
-                spark.read.schema(schema).parquet(data_dir)
-                .groupBy(F.input_file_name().alias("__f"))
-                .agg(*aggs)
-                .collect()
-            )
-            for r in rows:
-                p = os.path.abspath(
-                    urllib.parse.unquote(urllib.parse.urlparse(r["__f"]).path)
-                )
-                col_stats[p] = {
-                    c: [_stat_value(r[f"__mn_{c}"]), _stat_value(r[f"__mx_{c}"])]
-                    for c in stats_for
-                }
+        filters = filters + [{
+            "where": dict(where or {}),
+            "where_range": {
+                k: [lo, hi] for k, (lo, hi) in (where_range or {}).items()
+            },
+            "files": scope,
+        }]
+    else:
+        cand_set = set(candidates)
+        kept = [f for f in manifest["files"] if f not in cand_set]
+        rows = transform(_read_files(spark, manifest, candidates)) if candidates else None
+        # existing MoR filters survive for the files they still cover;
+        # the rewritten files are NEW paths (absent from every filter's
+        # list) whose content was already read through the filters.
+        # Entries covering no kept file are dropped.
+        kept_set = set(kept)
+        filters = [flt for flt in filters if kept_set & set(flt["files"])]
+        desc.update(files_rewritten=len(candidates), files_kept=len(kept))
+    new_files = _stage(rows, base_dir) if rows is not None else []
+    col_stats = _zone_maps(spark, schema, new_files, list(stats_for or []))
     spec_id = manifest.get("current_spec", 1)
-    _, _cur_sid = _schemas_of(manifest)
+    _, cur_sid = _schemas_of(manifest)
     prev_meta = manifest.get("file_meta", {})
     file_meta = {f: prev_meta[f] for f in kept if f in prev_meta}
     for f in new_files:
+        # rewrites read through _read_files (current names), so the new
+        # files carry the CURRENT schema id; they lose their partition
+        # layout, and keep zone maps only when `stats_for` re-records them
         file_meta[f] = {
             "pt": {},
             "spec_id": spec_id,
-            "sid": _cur_sid,
+            "sid": cur_sid,
             **({"stats": col_stats[f]} if f in col_stats else {}),
         }
-    kept_set = set(kept)
-    row_filters = [
-        flt
-        for flt in manifest.get("row_filters", [])
-        if kept_set & set(flt["files"])
-    ]
-    last_bid = last_metadata_value(base_dir, "batch_id")
-    mp = _manifest_path(base_dir, version)
-    with open(mp + ".tmp", "w") as fh:
-        json.dump(
-            {
-                "version": version,
-                "files": kept + new_files,
-                "schema": manifest["schema"],
-                "metadata": {
-                    "update_where": {
-                        "set": {k: _stat_value(v) for k, v in set_values.items()},
-                        "where": {k: str(v) for k, v in (where or {}).items()},
-                        "where_range": {
-                            k: [_stat_value(lo), _stat_value(hi)]
-                            for k, (lo, hi) in (where_range or {}).items()
-                        },
-                        "files_rewritten": len(candidates),
-                        "files_kept": len(kept),
-                    },
-                    **({"batch_id": last_bid} if last_bid is not None else {}),
-                },
-                "partition_specs": manifest.get("partition_specs", []),
-                "current_spec": spec_id,
-                "file_meta": file_meta,
-                "row_filters": row_filters,
-                **_schema_keys(manifest),
+    last_bid = _metadata_as_of(base_dir, "batch_id", prev)
+    version = _commit(
+        base_dir,
+        lambda _v, _m: {
+            "files": kept + new_files,
+            "schema": manifest["schema"],
+            "metadata": {
+                f"{op}_where": desc,
+                **({"batch_id": last_bid} if last_bid is not None else {}),
             },
-            fh,
-        )
-    os.replace(mp + ".tmp", mp)
-    return version, len(candidates), len(kept)
+            "partition_specs": manifest.get("partition_specs", []),
+            "current_spec": spec_id,
+            "file_meta": file_meta,
+            "row_filters": filters,
+            **_schema_keys(manifest),
+        },
+        expected=prev,
+    )
+    return version, 0 if mor else len(candidates), len(kept)
 
 
 def rollback_to(base_dir: str, version: int) -> int:
@@ -1473,73 +1376,54 @@ def rollback_to(base_dir: str, version: int) -> int:
     manifest arithmetic, O(1) data I/O."""
     base_dir = os.path.abspath(base_dir)
     last = latest_version(base_dir)
-    mp = _manifest_path(base_dir, version)
-    if version <= 0 or not os.path.exists(mp):
+    target = _load_manifest(base_dir, version) if version > 0 else None
+    if target is None:
         raise ValueError(f"no snapshot v{version} under {base_dir} (expired?)")
-    with open(mp) as fh:
-        target = json.load(fh)
-    # replay guard AS OF the target: newest batch_id carried by any
-    # manifest <= version (same scan-back as last_metadata_value, bounded)
-    bid = None
-    for v in range(version, 0, -1):
-        p = _manifest_path(base_dir, v)
-        if not os.path.exists(p):
-            continue
-        with open(p) as fh:
-            md = json.load(fh).get("metadata", {})
-        if "batch_id" in md:
-            bid = md["batch_id"]
-            break
-    new_version = last + 1
-    nmp = _manifest_path(base_dir, new_version)
-    with open(nmp + ".tmp", "w") as fh:
-        json.dump(
-            {
-                "version": new_version,
-                "files": target["files"],
-                "schema": target["schema"],
-                "metadata": {
-                    "rollback_of": version,
-                    # always present, explicitly null when no manifest at
-                    # or below the target carried one: last_metadata_value
-                    # scans back past manifests WITHOUT the key, so
-                    # omitting it here would let the scan reach the UNDONE
-                    # commits and return a rolled-back batch id — a
-                    # replaying source would then skip those batches,
-                    # silently losing their rows on recovery.
-                    "batch_id": bid,
-                },
-                "partition_specs": target.get("partition_specs", []),
-                "current_spec": target.get("current_spec", 1),
-                "file_meta": target.get("file_meta", {}),
-                # merge-on-read filters are part of the rolled-back
-                # state: restoring v without them would resurrect rows
-                # a MoR delete before v had hidden
-                "row_filters": target.get("row_filters", []),
-                **_schema_keys(target),
-            },
-            fh,
-        )
-    os.replace(nmp + ".tmp", nmp)
-    return new_version
+    # replay guard AS OF the target; explicitly null when no manifest at
+    # or below the target carried one: last_metadata_value scans back
+    # past manifests WITHOUT the key, so omitting it here would let the
+    # scan reach the UNDONE commits and return a rolled-back batch id — a
+    # replaying source would then skip those batches, silently losing
+    # their rows on recovery.
+    bid = _metadata_as_of(base_dir, "batch_id", version)
+    return _commit(
+        base_dir,
+        lambda _v, _m: {
+            "files": target["files"],
+            "schema": target["schema"],
+            "metadata": {"rollback_of": version, "batch_id": bid},
+            "partition_specs": target.get("partition_specs", []),
+            "current_spec": target.get("current_spec", 1),
+            "file_meta": target.get("file_meta", {}),
+            # merge-on-read filters are part of the rolled-back state:
+            # restoring v without them would resurrect rows a MoR delete
+            # before v had hidden
+            "row_filters": target.get("row_filters", []),
+            **_schema_keys(target),
+        },
+        expected=last,
+    )
 
 
-def _evolve_schema(base_dir: str, new_fields: list[dict], metadata: dict) -> int:
+def _evolve_schema(
+    base_dir: str,
+    col: str,
+    op: str,
+    change: Callable[[list[dict]], tuple[list[dict], dict]],
+) -> int:
     """Commit a METADATA-ONLY schema change: a new manifest with the
     same file list and a new current schema entry appended to the
     field-id history. Pure manifest arithmetic — zero data I/O, which
     is the whole point of field-id evolution at 100 TB (a rename must
-    never rewrite a table). Shared by rename/widen/drop."""
+    never rewrite a table). Shared by rename/widen/drop: `change` maps
+    the current fields to (new fields, commit metadata), raising on an
+    invalid request, and `_evolution_guard` then vets `col` for `op`."""
     base_dir = os.path.abspath(base_dir)
-    prev = latest_version(base_dir)
-    if prev == 0:
-        raise ValueError(f"no snapshot under {base_dir}")
-    with open(_manifest_path(base_dir, prev)) as fh:
-        manifest = json.load(fh)
+    prev, manifest = _head(base_dir)
     schemas, cur = _schemas_of(manifest)
-    schemas = list(schemas)
+    new_fields, metadata = change(_schema_fields(schemas, cur))
+    _evolution_guard(manifest, col, op)
     new_sid = max(s["schema_id"] for s in schemas) + 1
-    schemas.append({"schema_id": new_sid, "fields": new_fields})
     # legacy upgrade rides the same commit: files written before the
     # history existed are tagged with the schema that was current
     # (= the synthesized schema 1 for a legacy manifest)
@@ -1547,26 +1431,21 @@ def _evolve_schema(base_dir: str, new_fields: list[dict], metadata: dict) -> int
         f: {**meta, "sid": _file_sid(meta, cur)}
         for f, meta in manifest.get("file_meta", {}).items()
     }
-    version = prev + 1
-    mp = _manifest_path(base_dir, version)
-    with open(mp + ".tmp", "w") as fh:
-        json.dump(
-            {
-                "version": version,
-                "files": manifest["files"],
-                "schema": _fields_struct(new_fields).jsonValue(),
-                "metadata": metadata,
-                "partition_specs": manifest.get("partition_specs", []),
-                "current_spec": manifest.get("current_spec", 1),
-                "file_meta": file_meta,
-                "row_filters": manifest.get("row_filters", []),
-                "schemas": schemas,
-                "current_schema": new_sid,
-            },
-            fh,
-        )
-    os.replace(mp + ".tmp", mp)
-    return version
+    return _commit(
+        base_dir,
+        lambda _v, _m: {
+            "files": manifest["files"],
+            "schema": _fields_struct(new_fields).jsonValue(),
+            "metadata": metadata,
+            "partition_specs": manifest.get("partition_specs", []),
+            "current_spec": manifest.get("current_spec", 1),
+            "file_meta": file_meta,
+            "row_filters": manifest.get("row_filters", []),
+            "schemas": [*schemas, {"schema_id": new_sid, "fields": new_fields}],
+            "current_schema": new_sid,
+        },
+        expected=prev,
+    )
 
 
 def _evolution_guard(manifest: dict, col: str, op: str) -> None:
@@ -1606,26 +1485,18 @@ def rename_column(base_dir: str, old: str, new: str) -> int:
     silently returning NULL for every pre-rename file. Old snapshots
     time-travel under their own names; appends after the rename write
     the new name. Zero data I/O."""
-    base_dir = os.path.abspath(base_dir)
-    prev = latest_version(base_dir)
-    if prev == 0:
-        raise ValueError(f"no snapshot under {base_dir}")
-    with open(_manifest_path(base_dir, prev)) as fh:
-        manifest = json.load(fh)
-    schemas, cur = _schemas_of(manifest)
-    fields = _schema_fields(schemas, cur)
-    names = [f["name"] for f in fields]
-    if old not in names:
-        raise ValueError(f"column {old!r} not in table schema")
-    if new in names:
-        raise ValueError(f"column {new!r} already exists")
-    _evolution_guard(manifest, old, "rename")
-    new_fields = [
-        {**f, "name": new} if f["name"] == old else f for f in fields
-    ]
-    return _evolve_schema(
-        base_dir, new_fields, {"rename_column": {"from": old, "to": new}}
-    )
+    def change(fields: list[dict]) -> tuple[list[dict], dict]:
+        names = [f["name"] for f in fields]
+        if old not in names:
+            raise ValueError(f"column {old!r} not in table schema")
+        if new in names:
+            raise ValueError(f"column {new!r} already exists")
+        return (
+            [{**f, "name": new} if f["name"] == old else f for f in fields],
+            {"rename_column": {"from": old, "to": new}},
+        )
+
+    return _evolve_schema(base_dir, old, "rename", change)
 
 
 def alter_column_type(base_dir: str, col: str, new_type: str) -> int:
@@ -1635,33 +1506,23 @@ def alter_column_type(base_dir: str, col: str, new_type: str) -> int:
     int→long, long→double, float→double, …): reads cast old files UP,
     which is lossless, while a narrowing would corrupt silently.
     Old snapshots keep their own type; zero data I/O."""
-    base_dir = os.path.abspath(base_dir)
-    prev = latest_version(base_dir)
-    if prev == 0:
-        raise ValueError(f"no snapshot under {base_dir}")
-    with open(_manifest_path(base_dir, prev)) as fh:
-        manifest = json.load(fh)
-    schemas, cur = _schemas_of(manifest)
-    fields = _schema_fields(schemas, cur)
-    f = next((f for f in fields if f["name"] == col), None)
-    if f is None:
-        raise ValueError(f"column {col!r} not in table schema")
-    old_type = f["type"] if isinstance(f["type"], str) else None
-    if (old_type, new_type) not in _WIDENINGS:
-        raise ValueError(
-            f"cannot alter column {col!r} from {f['type']} to "
-            f"{new_type!r}: only value-preserving widenings are "
-            f"supported ({sorted(_WIDENINGS)})"
+    def change(fields: list[dict]) -> tuple[list[dict], dict]:
+        f = next((f for f in fields if f["name"] == col), None)
+        if f is None:
+            raise ValueError(f"column {col!r} not in table schema")
+        old_type = f["type"] if isinstance(f["type"], str) else None
+        if (old_type, new_type) not in _WIDENINGS:
+            raise ValueError(
+                f"cannot alter column {col!r} from {f['type']} to "
+                f"{new_type!r}: only value-preserving widenings are "
+                f"supported ({sorted(_WIDENINGS)})"
+            )
+        return (
+            [{**g, "type": new_type} if g["name"] == col else g for g in fields],
+            {"alter_column_type": {"column": col, "from": old_type, "to": new_type}},
         )
-    _evolution_guard(manifest, col, "widen")
-    new_fields = [
-        {**g, "type": new_type} if g["name"] == col else g for g in fields
-    ]
-    return _evolve_schema(
-        base_dir,
-        new_fields,
-        {"alter_column_type": {"column": col, "from": old_type, "to": new_type}},
-    )
+
+    return _evolve_schema(base_dir, col, "widen", change)
 
 
 def drop_column(base_dir: str, col: str) -> int:
@@ -1672,29 +1533,23 @@ def drop_column(base_dir: str, col: str) -> int:
     dropped column's historical values are never resurrected into the
     new column — the field-id guarantee name-based formats can't make.
     Zero data I/O."""
-    base_dir = os.path.abspath(base_dir)
-    prev = latest_version(base_dir)
-    if prev == 0:
-        raise ValueError(f"no snapshot under {base_dir}")
-    with open(_manifest_path(base_dir, prev)) as fh:
-        manifest = json.load(fh)
-    schemas, cur = _schemas_of(manifest)
-    fields = _schema_fields(schemas, cur)
-    if col not in [f["name"] for f in fields]:
-        raise ValueError(f"column {col!r} not in table schema")
-    if len(fields) == 1:
-        raise ValueError("cannot drop the only column")
-    _evolution_guard(manifest, col, "drop")
-    new_fields = [f for f in fields if f["name"] != col]
-    return _evolve_schema(
-        base_dir, new_fields, {"drop_column": {"column": col}}
-    )
+    def change(fields: list[dict]) -> tuple[list[dict], dict]:
+        if col not in [f["name"] for f in fields]:
+            raise ValueError(f"column {col!r} not in table schema")
+        if len(fields) == 1:
+            raise ValueError("cannot drop the only column")
+        return (
+            [f for f in fields if f["name"] != col],
+            {"drop_column": {"column": col}},
+        )
+
+    return _evolve_schema(base_dir, col, "drop", change)
 
 
 def expire_snapshots(base_dir: str, keep_from: int) -> list[int]:
     """Drop manifests below `keep_from` and delete data files no
-    surviving manifest references (plus any v{n} directory left empty).
-    Returns expired versions."""
+    surviving manifest references (plus any commit directory left
+    empty). Returns expired versions."""
     base_dir = os.path.abspath(base_dir)
     last = latest_version(base_dir)
     if keep_from > last:
@@ -1702,31 +1557,33 @@ def expire_snapshots(base_dir: str, keep_from: int) -> list[int]:
             f"keep_from={keep_from} would expire the CURRENT snapshot "
             f"(latest is v{last}) — refusing, like any table format"
         )
-    expired = [
-        v
+    expired = {
+        v: m
         for v in range(1, min(keep_from, last + 1))
-        if os.path.exists(_manifest_path(base_dir, v))
-    ]
+        if (m := _load_manifest(base_dir, v)) is not None
+    }
     live: set[str] = set()
     for v in range(keep_from, last + 1):
-        mp = _manifest_path(base_dir, v)
-        if os.path.exists(mp):
-            with open(mp) as fh:
-                live.update(json.load(fh)["files"])
-    for v in expired:
-        with open(_manifest_path(base_dir, v)) as fh:
-            for f in json.load(fh)["files"]:
-                if f not in live and os.path.exists(f):
-                    os.remove(f)
+        live.update((_load_manifest(base_dir, v) or {}).get("files", []))
+    commit_dirs: set[str] = set()
+    for v, manifest in expired.items():
+        for f in manifest["files"]:
+            if f not in live and os.path.exists(f):
+                os.remove(f)
+            # the commit directory is the top-level entry under base_dir
+            # that holds the file (a uuid staging dir, or v{n} in tables
+            # written before per-writer staging)
+            rel = os.path.relpath(f, base_dir).split(os.sep)
+            if len(rel) > 1 and rel[0] != os.pardir:
+                commit_dirs.add(os.path.join(base_dir, rel[0]))
         os.remove(_manifest_path(base_dir, v))
-    # long-lived tables: reap v{n} dirs the dead-file sweep emptied
+    # long-lived tables: reap commit dirs the dead-file sweep emptied
     # (parquet writes leave _SUCCESS/.crc sidecars no manifest names).
     # RECURSIVE emptiness check — a partitioned commit nests its files
     # under __pt_*=*/ subdirs, where a top-level listdir sees no
     # .parquet and would reap a directory that still holds live files
     # (e.g. a later snapshot still referencing them).
-    for v in expired:
-        d = os.path.join(base_dir, f"v{v}")
+    for d in commit_dirs:
         if os.path.isdir(d) and not _leaf_files(d):
             shutil.rmtree(d)
-    return expired
+    return sorted(expired)

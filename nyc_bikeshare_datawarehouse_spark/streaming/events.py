@@ -264,7 +264,7 @@ def stream_to_snapshots(
     actually saw).
 
     Exactly-once story: foreachBatch is at-least-once (a crash between
-    the manifest rename and Spark's checkpoint commit re-delivers the
+    the manifest publish and Spark's checkpoint commit re-delivers the
     batch — the sketches.py `_last_batch_id` hazard), so the source
     batch id is committed IN the manifest, atomically with the
     snapshot, and replayed ids are skipped. The batch frame is

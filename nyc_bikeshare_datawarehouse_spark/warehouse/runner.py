@@ -35,6 +35,7 @@ class StageResult:
     attempts: int
     error: str | None = None
     output: object = None
+    elapsed_s: float = 0.0                 # all attempts and retry delays; 0 if skipped
 
 
 class PipelineRunner:
@@ -80,6 +81,7 @@ class PipelineRunner:
                 failed_or_skipped.add(stage.name)
                 continue
             attempts, err, out = 0, None, None
+            t0 = time.perf_counter()
             for attempt in range(stage.retries + 1):
                 attempts = attempt + 1
                 try:
@@ -93,7 +95,10 @@ class PipelineRunner:
             ok = err is None and (bool(out) if stage.is_gate else True)
             if err is None and stage.is_gate and not ok:
                 err = "gate returned falsy"
-            results.append(StageResult(stage.name, ok, attempts, error=err, output=out))
+            results.append(StageResult(
+                stage.name, ok, attempts, error=err, output=out,
+                elapsed_s=time.perf_counter() - t0,
+            ))
             if not ok:
                 failed_or_skipped.add(stage.name)
             else:

@@ -64,3 +64,26 @@ def test_partition_layout_prunes(spark, csv_inputs):
     plan = jan._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [isnotnull(year" in plan or "PartitionFilters: [" in plan
     assert jan.count() == 1
+
+
+def test_gates_check_the_written_tables(spark, csv_inputs, monkeypatch):
+    # the gates see what landed in out_dir, not the lazy CSV-backed plans
+    import os
+    from urllib.parse import urlparse
+
+    trips, weather, out = csv_inputs
+    seen = {}
+    real_gates = pipeline.run_quality_gates
+
+    def capture(tables):
+        seen.update(tables)
+        return real_gates(tables)
+
+    monkeypatch.setattr(pipeline, "run_quality_gates", capture)
+    results = pipeline.run(spark, trips, weather, out)
+    assert all(r.passed for r in results)
+    assert len(seen) == 6
+    for name, df in seen.items():
+        files = [urlparse(f).path for f in df.inputFiles()]
+        root = os.path.abspath(f"{out}/{name}")
+        assert files and all(f.startswith(root + os.sep) for f in files), name

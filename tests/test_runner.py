@@ -3,6 +3,8 @@ real Spark pipeline composed through it."""
 
 from __future__ import annotations
 
+import time
+
 import pytest
 
 from nyc_bikeshare_datawarehouse_spark.warehouse.runner import PipelineRunner, Stage
@@ -97,3 +99,28 @@ def test_run_query_cli_list_and_errors():
     )
     assert bad.returncode != 0
     assert "did you mean" in bad.stderr
+
+
+def test_stage_results_record_elapsed_time():
+    calls = {"n": 0}
+
+    def flaky(ctx):
+        calls["n"] += 1
+        time.sleep(0.02)
+        if calls["n"] < 2:
+            raise RuntimeError("transient")
+        return 1
+
+    def broken(ctx):
+        raise RuntimeError("down")
+
+    results = PipelineRunner([
+        Stage("flaky", flaky, retries=1, retry_delay_s=0.05),
+        Stage("broken", broken, retries=0),
+        Stage("after", lambda ctx: 1, depends_on=["broken"]),
+    ]).run()
+    flaky_r, broken_r, after_r = results
+    # both attempts and the backoff between them count
+    assert flaky_r.ok and flaky_r.elapsed_s >= 2 * 0.02 + 0.05
+    assert not broken_r.ok and broken_r.elapsed_s < flaky_r.elapsed_s
+    assert after_r.error == "upstream failed" and after_r.elapsed_s == 0.0

@@ -298,6 +298,7 @@ class TestVersionedSnapshots:
         assert versioned.read_snapshot(spark, base, v5).count() == 12
 
     def test_expire_reaps_emptied_version_dirs(self, spark, tmp_path):
+        import json
         import os
 
         from nyc_bikeshare_datawarehouse_spark.sources import versioned
@@ -306,10 +307,12 @@ class TestVersionedSnapshots:
         versioned.write_snapshot(spark.range(0, 4), base)
         versioned.write_snapshot(spark.range(4, 6), base, mode="overwrite")
         versioned.write_snapshot(spark.range(6, 7), base)
+        with open(versioned._manifest_path(base, 1)) as fh:
+            v1_dirs = {os.path.dirname(f) for f in json.load(fh)["files"]}
         assert versioned.expire_snapshots(base, keep_from=2) == [1]
-        # v1's files are dead (v2 overwrote) — its directory must be gone,
-        # while v2/v3 (still referenced) remain
-        assert not os.path.isdir(os.path.join(base, "v1"))
+        # v1's files are dead (v2 overwrote) — the directory that held
+        # them must be gone, while v2/v3's (still referenced) remain
+        assert v1_dirs and not any(os.path.isdir(d) for d in v1_dirs)
         assert versioned.read_snapshot(spark, base, 3).count() == 3
 
     def test_relative_base_dir_reads_back(self, spark, tmp_path, monkeypatch):
@@ -328,16 +331,21 @@ class TestVersionedSnapshots:
         assert versioned.read_snapshot(spark, "rel_tbl").count() == 3
 
     def test_torn_write_dir_is_cleared(self, spark, tmp_path):
+        import json
         import os
 
         from nyc_bikeshare_datawarehouse_spark.sources import versioned
 
         base = str(tmp_path / "tbl")
         versioned.write_snapshot(spark.range(0, 3), base)
-        os.makedirs(os.path.join(base, "v2"))  # torn uncommitted write
-        open(os.path.join(base, "v2", "junk.parquet"), "w").write("x")
+        torn = os.path.join(base, "v2")  # a dead writer's uncommitted data
+        os.makedirs(torn)
+        open(os.path.join(torn, "junk.parquet"), "w").write("x")
         v2 = versioned.write_snapshot(spark.range(3, 5), base)
         assert v2 == 2
+        with open(versioned._manifest_path(base, 2)) as fh:
+            files = json.load(fh)["files"]
+        assert files and not any(f.startswith(torn + os.sep) for f in files)
         assert versioned.read_snapshot(spark, base, 2).count() == 5
 
     def test_empty_snapshot_reads_back_via_recorded_schema(self, spark, tmp_path):

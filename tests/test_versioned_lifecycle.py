@@ -11,6 +11,9 @@ from __future__ import annotations
 
 import json
 import os
+import sys
+import threading
+from concurrent.futures import ThreadPoolExecutor
 
 import pytest
 from pyspark.sql import functions as F
@@ -25,6 +28,10 @@ def _manifest(base: str, v: int) -> dict:
 
 def _ids(df) -> list[int]:
     return sorted(r["id"] for r in df.collect())
+
+
+def _subdirs(base: str) -> set[str]:
+    return {d for d in os.listdir(base) if os.path.isdir(os.path.join(base, d))}
 
 
 class TestDeleteWhere:
@@ -206,6 +213,93 @@ class TestRollback:
             versioned.rollback_to(base, 0)
 
 
+class TestConcurrentCommits:
+    """Every commit publishes its manifest create-if-absent: appends that
+    lose a version rebase onto the new head, every other commit is
+    rejected and leaves the winner's manifest alone."""
+
+    def test_concurrent_appends_all_land(self, spark, tmp_path):
+        # more writers than the session's 4 cores, released together
+        base = str(tmp_path / "t")
+        versioned.write_snapshot(spark.range(0, 10), base)
+        sizes = {w: 1000 * w for w in range(1, 6)}
+        start = threading.Barrier(len(sizes), timeout=120)
+
+        def append(w: int) -> int:
+            df = spark.range(w * 10_000, w * 10_000 + sizes[w])
+            start.wait()
+            return versioned.write_snapshot(df, base, metadata={"writer": w})
+
+        switch = sys.getswitchinterval()
+        sys.setswitchinterval(1e-5)
+        try:
+            with ThreadPoolExecutor(len(sizes)) as pool:
+                futures = {w: pool.submit(append, w) for w in sizes}
+                got = {w: f.result(timeout=300) for w, f in futures.items()}
+        finally:
+            sys.setswitchinterval(switch)
+        assert sorted(got.values()) == list(range(2, 2 + len(sizes)))
+        assert versioned.latest_version(base) == 1 + len(sizes)
+        for w, v in got.items():
+            assert versioned.manifest_metadata(base, v) == {"writer": w}
+        want = list(range(10)) + [
+            i for w, n in sizes.items() for i in range(w * 10_000, w * 10_000 + n)
+        ]
+        assert _ids(versioned.read_snapshot(spark, base)) == sorted(want)
+
+    def test_non_append_commits_reject_a_taken_version(
+        self, spark, tmp_path, monkeypatch
+    ):
+        base = str(tmp_path / "t")
+        df = spark.createDataFrame([(i, i % 3) for i in range(30)], "id INT, k INT")
+        versioned.write_snapshot(df, base)
+        n = versioned.write_snapshot(df.filter("id < 3"), base)
+        # another writer's v{n+1}, published after these operations
+        # planned against head n: hide it from their head lookup
+        mp = versioned._manifest_path(base, n + 1)
+        with open(mp, "w") as fh:
+            json.dump({**_manifest(base, 1), "version": n + 1}, fh)
+        with open(mp, "rb") as fh:
+            placed = fh.read()
+        real_latest = versioned.latest_version
+        monkeypatch.setattr(
+            versioned, "latest_version", lambda b: min(real_latest(b), n)
+        )
+        for op in (
+            lambda: versioned.delete_where(spark, base, where={"k": 0}),
+            lambda: versioned.merge_into_snapshot(
+                spark, base, df.filter("id < 5"), key="id"
+            ),
+            lambda: versioned.compact_snapshot(spark, base),
+        ):
+            with pytest.raises(versioned.CommitConflict, match=f"v{n + 1}"):
+                op()
+        monkeypatch.undo()
+        with open(mp, "rb") as fh:
+            assert fh.read() == placed
+        assert versioned.latest_version(base) == n + 1
+
+    def test_head_moving_mid_write_rejects_dml_and_rebases_append(
+        self, spark, tmp_path, monkeypatch
+    ):
+        base = str(tmp_path / "t")
+        df = spark.createDataFrame([(i, i % 3) for i in range(30)], "id INT, k INT")
+        versioned.write_snapshot(df, base)
+        real_stage = versioned._stage
+
+        def stage_then_lose(*args, **kwargs):
+            files = real_stage(*args, **kwargs)
+            versioned.rollback_to(base, 1)  # a concurrent commit lands
+            return files
+
+        monkeypatch.setattr(versioned, "_stage", stage_then_lose)
+        with pytest.raises(versioned.CommitConflict, match="v2"):
+            versioned.delete_where(spark, base, where={"k": 0})
+        assert versioned.latest_version(base) == 2
+        assert versioned.write_snapshot(df, base) == 4  # rebased past v3
+        assert versioned.read_snapshot(spark, base).count() == 60
+
+
 class TestWherePushdown:
     def test_native_filter_reaches_parquet_scan(self, spark, tmp_path):
         # ADVICE r13: a type-matched `where` value must filter as a bare
@@ -233,10 +327,11 @@ class TestMergeOnRead:
             spark.createDataFrame([(i, i % 4) for i in range(40)], "id INT, k INT"),
             base,
         )
+        dirs = _subdirs(base)
         v2, n_rw, n_kept = versioned.delete_where(
             spark, base, where={"k": 0}, strategy="merge-on-read"
         )
-        assert n_rw == 0 and not os.path.isdir(os.path.join(base, f"v{v2}"))
+        assert n_rw == 0 and _subdirs(base) == dirs  # no data written
         assert _manifest(base, v2)["files"] == _manifest(base, 1)["files"]
         survivors = [i for i in range(40) if i % 4 != 0]
         assert _ids(versioned.read_snapshot(spark, base)) == survivors
