@@ -10,8 +10,8 @@ body, so the shuffle moves hashes + ids, not text):
                     near-dup = small Hamming distance; banded for join.
 4. minhash + LSH  — k independent min-hashes over shingles, banded into
                     buckets; candidate pairs only within a bucket
-                    (pyspark.ml MinHashLSH when available, with a pure
-                    DataFrame fallback).
+                    (pure DataFrame: an xxhash64 engine form and an
+                    md5 form the SQL oracle replays).
 5. n-gram Jaccard — exact Jaccard on shingle sets for candidate pairs
                     (the verifier stage after LSH, or standalone on
                     token-blocked pairs).
@@ -612,44 +612,6 @@ def lsh_recall_report(
     )
 
 
-def minhash_ml_candidates(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hash_tables: int = 8,
-    shingle_n: int = 3,
-    max_distance: float = 0.8,
-    num_features: int = 1 << 18,
-) -> DataFrame:
-    """pyspark.ml MinHashLSH variant of minhash_lsh_candidates (SURVEY
-    §7.4 named this as the library path, with the pure-DataFrame form as
-    fallback — both ship; results are approximate-Jaccard candidate pairs
-    either way).
-
-    Pipeline: shingles -> HashingTF sparse vectors (binary) -> MinHashLSH
-    -> approxSimilarityJoin. Raises ImportError where pyspark.ml is
-    unavailable; callers that need portability use
-    minhash_lsh_candidates."""
-    from pyspark.ml.feature import HashingTF, MinHashLSH  # gated import
-
-    base = df.select(F.col(id_col), shingles(text_col, shingle_n).alias("__sh")).filter(
-        F.size("__sh") > 0
-    )
-    tf = HashingTF(inputCol="__sh", outputCol="__features", numFeatures=num_features, binary=True)
-    feats = tf.transform(base)
-    lsh = MinHashLSH(inputCol="__features", outputCol="__hashes", numHashTables=num_hash_tables, seed=42)
-    model = lsh.fit(feats)
-    pairs = model.approxSimilarityJoin(feats, feats, max_distance, distCol="jaccard_dist")
-    return (
-        pairs.filter(F.col(f"datasetA.{id_col}") < F.col(f"datasetB.{id_col}"))
-        .select(
-            F.col(f"datasetA.{id_col}").alias("id_a"),
-            F.col(f"datasetB.{id_col}").alias("id_b"),
-            F.round(1 - F.col("jaccard_dist"), 4).alias("est_jaccard"),
-        )
-    )
-
-
 def incremental_dedup(
     delta: DataFrame,
     corpus: DataFrame,
@@ -1214,43 +1176,6 @@ def apply_dedup(
     return df.join(keepers, on=id_col, how="left_semi")
 
 
-def calibrate_df_cutoff(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_n: int = 2,
-    quantile: float = 0.999,
-    min_cutoff: int = 8,
-) -> int:
-    """Derive the absolute posting-length pruning cutoff from the
-    OBSERVED document-frequency distribution: the `quantile`-th
-    percentile of per-shingle df. Feed the result to `max_doc_count`
-    (ngram_jaccard_pairs / incremental_dedup).
-
-    Why this exists (scaling-probe lesson, BASELINE.md round 6): a fixed
-    df FRACTION is a corpus-density property — when vocabulary grows
-    with corpus size, per-shingle fractions dilute, a fixed frac stops
-    pruning, and the join reverts toward quadratic (measured alpha 1.48
-    vs 0.45 at 10x). A quantile of the df distribution self-adjusts:
-    join cost concentrates quadratically in the df tail, so pruning a
-    fixed tail FRACTION OF SHINGLES removes most of the cost at any
-    density without manual rescaling (tested at 10x in
-    tests/test_functions.py).
-
-    Cost: one pass building the same (shingle, df) frame the pruned join
-    builds anyway, aggregated to ONE row (percentile_approx) — O(1) to
-    the driver. `min_cutoff` floors the result so a tiny or df-uniform
-    corpus (quantile collapses to 1-2) doesn't prune everything."""
-    if not 0.0 < quantile < 1.0:
-        raise ValueError(f"quantile must be in (0, 1), got {quantile}")
-    sh = shingle_postings(df, text_col, id_col, shingle_n)
-    dfreq = sh.groupBy("sh").agg(F.count(F.lit(1)).alias("__df"))
-    cut = dfreq.agg(
-        F.percentile_approx("__df", F.lit(quantile), F.lit(10000)).alias("__cut")
-    ).first()["__cut"]
-    return max(int(cut), min_cutoff)
-
-
 def shingle_dfreq(
     df: DataFrame,
     text_col: str = "text",
@@ -1295,7 +1220,7 @@ def calibrated_df_cutoff(
       the MEDIAN df is a per-shingle density stat, so it stays put under
       vocabulary growth (pruning survives) and scales 1:1 with df under
       same-vocabulary growth (identical to the frac rule there);
-    - a tail quantile (calibrate_df_cutoff, percentile_approx) prunes a
+    - a tail quantile of the df distribution (percentile_approx) prunes a
       fixed fraction OF SHINGLES — right for Zipfian text, but on a
       dense bounded-vocabulary corpus the hot mass is most of the
       vocabulary, the 99.9th percentile is ~max(df), and nothing prunes;

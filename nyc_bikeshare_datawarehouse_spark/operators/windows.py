@@ -156,7 +156,8 @@ def desc_freq_buckets(
     never overlap (lo_next = floor(cum_before_next/target) >= hi_prev)
     and the clamped char key is non-decreasing in binary string order
     (clamping to printable ASCII maps out-of-range chars to the nearest
-    bound, which preserves non-decreasing; UTF-8 byte order equals code
+    bound, and a clamped first char pins the second to that bound too,
+    which preserves non-decreasing; UTF-8 byte order equals code
     point order, so `ascii()` per char is order-faithful). Output: df
     plus `bucket_col` (long). Costs one broadcast of the distinct-count
     stats and two 1-row broadcasts; the data shuffles only in the
@@ -173,11 +174,20 @@ def desc_freq_buckets(
     tot = per.agg(F.sum("__gcnt").alias("__vtot"))
 
     def _ckey(col: Column) -> Column:
-        c1 = F.greatest(
-            F.least(F.ascii(F.substring(col, 1, 1)), F.lit(127)), F.lit(32)
-        )
-        c2 = F.greatest(
-            F.least(F.ascii(F.substring(col, 2, 1)), F.lit(127)), F.lit(32)
+        a1 = F.ascii(F.substring(col, 1, 1))
+        c1 = F.greatest(F.least(a1, F.lit(127)), F.lit(32))
+        # a clamped first char already orders the string after (or before)
+        # every in-range one, so the second char is pinned to the same bound:
+        # otherwise "\x80" (-> 127, 32) would key below "\x7f0" (-> 127, 48)
+        c2 = (
+            F.when(a1 > 127, F.lit(127))
+            .when(a1 < 32, F.lit(32))
+            .otherwise(
+                F.greatest(
+                    F.least(F.ascii(F.substring(col, 2, 1)), F.lit(127)),
+                    F.lit(32),
+                )
+            )
         )
         return (c1 - 32) * 96 + (c2 - 32)  # [0, 9216)
 

@@ -14,9 +14,9 @@ nothing but parquet + JSON sidecars:
 - appends REUSE the previous snapshot's files and add new ones: an
   append of D rows costs O(D) writes regardless of table size, and
   every historical snapshot stays readable forever (until expired).
-- manifest files start with `_`, which Spark's parquet reader skips
-  (the sidecar-marker rule, streaming/sketches.py `_last_batch_id`) —
-  so the data directory stays directly scannable as "latest" too.
+- manifest files start with `_`, which Spark's parquet reader skips,
+  so an append-only table's directory stays directly scannable as
+  "latest" too.
 - every commit goes through ONE publish step (`_commit`): the writer
   stages its data in a fresh directory of its own (`_stage`, named by
   uuid, so concurrent writers never share or delete each other's
@@ -405,7 +405,7 @@ def _write_snapshot(
     expected: int | None = None,
 ) -> int:
     """write_snapshot's body, for an absolute `base_dir`. `expected` is
-    the head an overwrite replaces (merge/compaction pass the head they
+    the head an overwrite replaces (`rewrite_head` passes the head it
     read), None for an append that rebases."""
     partition_by = list(partition_by or [])
     stats_for = list(stats_for or [])
@@ -1052,16 +1052,15 @@ def merge_into_snapshot(
     from nyc_bikeshare_datawarehouse_spark.operators.merge import merge_upsert
 
     base_dir = os.path.abspath(base_dir)
-    head = latest_version(base_dir)
-    if head == 0:
-        merged = updates
-    else:
-        merged = merge_upsert(read_snapshot(spark, base_dir, head), updates, key)
-    if deletes is not None:
-        merged = merged.join(deletes.select(key), key, "left_anti")
-    last_bid = _metadata_as_of(base_dir, "batch_id", head)
-    metadata = {"batch_id": last_bid} if last_bid is not None else None
-    return _write_snapshot(merged, base_dir, "overwrite", metadata, expected=head)
+
+    def rewrite(head: int, current: DataFrame | None):
+        merged = updates if current is None else merge_upsert(current, updates, key)
+        if deletes is not None:
+            merged = merged.join(deletes.select(key), key, "left_anti")
+        last_bid = _metadata_as_of(base_dir, "batch_id", head)
+        return merged, {"batch_id": last_bid} if last_bid is not None else None
+
+    return rewrite_head(spark, base_dir, rewrite)
 
 
 def compact_snapshot(
@@ -1103,22 +1102,41 @@ def compact_snapshot(
     clustered compaction is how the table earns its skipping back.
     `stats_for` defaults to `cluster_by` so the fresh layout's zone
     maps land in the same commit (pass explicitly to record more)."""
+    def rewrite(_head: int, current: DataFrame | None):
+        if current is None:
+            raise ValueError(f"no snapshot under {base_dir}")
+        if cluster_by:
+            return current.repartitionByRange(
+                target_files, *cluster_by
+            ).sortWithinPartitions(*cluster_by), metadata
+        return current.repartition(target_files), metadata
+
+    return rewrite_head(
+        spark, base_dir, rewrite,
+        stats_for=stats_for if stats_for is not None else cluster_by,
+    )
+
+
+def rewrite_head(
+    spark: SparkSession,
+    base_dir: str,
+    rewrite: Callable[[int, DataFrame | None], tuple[DataFrame, dict | None]],
+    stats_for: list[str] | None = None,
+) -> int:
+    """Read the head snapshot (version h; the frame is None on an empty
+    table), commit `rewrite(h, frame)` — a (frame, metadata) pair — as
+    an overwrite that expects h, and return the new version. The ONE
+    read-head / rewrite / commit-expecting-head sequence: merge,
+    compaction and the streaming sketch fold (streaming/sketches.py)
+    all go through it. A commit that lands between the read and the
+    publish makes this raise CommitConflict, so a rewrite is never
+    published over a head it did not read."""
     base_dir = os.path.abspath(base_dir)
     head = latest_version(base_dir)
-    current = read_snapshot(spark, base_dir, head)
-    if cluster_by:
-        rewritten = current.repartitionByRange(
-            target_files, *cluster_by
-        ).sortWithinPartitions(*cluster_by)
-    else:
-        rewritten = current.repartition(target_files)
+    current = read_snapshot(spark, base_dir, head) if head else None
+    df, metadata = rewrite(head, current)
     return _write_snapshot(
-        rewritten,
-        base_dir,
-        "overwrite",
-        metadata,
-        stats_for=stats_for if stats_for is not None else cluster_by,
-        expected=head,
+        df, base_dir, "overwrite", metadata, stats_for=stats_for, expected=head
     )
 
 

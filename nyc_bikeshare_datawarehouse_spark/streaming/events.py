@@ -265,9 +265,9 @@ def stream_to_snapshots(
 
     Exactly-once story: foreachBatch is at-least-once (a crash between
     the manifest publish and Spark's checkpoint commit re-delivers the
-    batch — the sketches.py `_last_batch_id` hazard), so the source
-    batch id is committed IN the manifest, atomically with the
-    snapshot, and replayed ids are skipped. The batch frame is
+    batch), so the source batch id is committed IN the manifest,
+    atomically with the snapshot, and replayed ids are skipped — the
+    same guard the streaming sketch folds use (streaming/sketches.py). The batch frame is
     persisted across the emptiness probe + parquet write so the source
     plan executes once per batch, and empty final batches (availableNow
     drains often emit one) do not commit spurious no-delta versions.

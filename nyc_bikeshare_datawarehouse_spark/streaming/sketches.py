@@ -5,30 +5,24 @@ algebras — count-min grids add cell-wise, HLL registers max
 element-wise — which is exactly the property a streaming rollup needs:
 each micro-batch folds into bounded state (d*w cells / 2^b registers)
 without ever re-reading history. This module wires that algebra into
-Structured Streaming via foreachBatch; the state lives as a tiny parquet
-frame (a local-filesystem stand-in for the table-format MERGE a
-production lake would use — the merge algebra is the part that
-transfers). tests/test_streaming.py proves the streamed state equals the
-one-shot batch sketch over the same corpus.
+Structured Streaming via foreachBatch; the state is a versioned table
+(sources/versioned.py) whose every fold is one overwrite commit —
+read it with `versioned.read_snapshot(spark, state_path)`.
+tests/test_streaming.py proves the streamed state equals the one-shot
+batch sketch over the same corpus.
 
 Failure semantics. foreachBatch is at-least-once: Spark may replay a
 micro-batch whose effects were already applied if a failure lands
-between the state publish and the checkpoint commit. Count-min merge is
-cell-ADD, which is not idempotent, so each published state carries the
-id of the last batch folded into it (``_last_batch_id`` — the leading
-underscore keeps it invisible to Spark's parquet reader) and ``_merge``
-returns early on a replayed id. The publish itself is two atomic
-renames: the old state is first renamed aside to ``<path>__prev``, then
-the new state is renamed into place — no window in which the only copy
-of the sketch has been deleted (the old rmtree-then-rename had one).
-A crash between the two renames leaves ``__prev`` as the sole state;
-``_recover`` renames it back before the replayed batch re-merges.
+between the state commit and the checkpoint commit. Count-min merge is
+cell-ADD, which is not idempotent, so each fold commits its batch id IN
+the manifest, atomically with the grid, and a replayed id is skipped.
+The fold reads head h and commits version h+1 expecting h
+(`versioned.rewrite_head`): a fold that dies before the publish leaves
+the head untouched, and one that loses h+1 to a concurrent fold raises
+CommitConflict instead of publishing a grid built from a stale head.
 """
 
 from __future__ import annotations
-
-import os
-import shutil
 
 from pyspark.sql import DataFrame
 
@@ -40,65 +34,34 @@ from nyc_bikeshare_datawarehouse_spark.functions.sketches import (
     hll_merge,
     hll_registers,
 )
+from nyc_bikeshare_datawarehouse_spark.sources import versioned
 from nyc_bikeshare_datawarehouse_spark.streaming.events import stream_foreach_batch
 
-_BATCH_ID_FILE = "_last_batch_id"
-
-
-def _read_last_batch_id(state_path: str) -> int:
-    """Id of the last micro-batch folded into the published state
-    (-1 when the state predates the marker or doesn't exist)."""
-    marker = os.path.join(state_path, _BATCH_ID_FILE)
-    if os.path.exists(marker):
-        with open(marker, encoding="ascii") as fh:
-            return int(fh.read().strip())
-    return -1
-
-
-def _recover(state_path: str) -> None:
-    """Heal a crash that landed between the two publish renames: the
-    state dir is gone but ``__prev`` still holds the prior sketch."""
-    prev = state_path + "__prev"
-    if not os.path.exists(state_path) and os.path.exists(prev):
-        os.rename(prev, state_path)
-
-
-def _swap_state(new: DataFrame, state_path: str, batch_id: int) -> None:
-    """Publish the next state: write it beside the current one (with its
-    batch-id marker), rename the current state aside, rename the new one
-    into place. Both renames are atomic and the old sketch survives
-    until the new one is live — the reader of `state_path` never
-    observes a half-written grid and no crash point loses the state."""
-    tmp = state_path + "__next"
-    if os.path.exists(tmp):
-        shutil.rmtree(tmp)
-    new.coalesce(1).write.mode("overwrite").parquet(tmp)
-    with open(os.path.join(tmp, _BATCH_ID_FILE), "w", encoding="ascii") as fh:
-        fh.write(str(batch_id))
-    prev = state_path + "__prev"
-    if os.path.exists(prev):
-        shutil.rmtree(prev)
-    if os.path.exists(state_path):
-        os.rename(state_path, prev)
-    os.rename(tmp, state_path)
-    shutil.rmtree(prev, ignore_errors=True)
+#: state versions kept after each fold: the new head plus the previous
+#: one, so a reader that resolved the previous head still finds its files
+_KEEP_VERSIONS = 2
 
 
 def _sketch_merge_fn(state_path: str, build_fn, merge_fn):
     """foreachBatch callback folding each micro-batch's partial sketch
     into the persisted state, exactly once per batch id (replays after a
-    publish-then-crash are skipped, so the non-idempotent cell-add merge
+    commit-then-crash are skipped, so the non-idempotent cell-add merge
     stays correct under at-least-once delivery)."""
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        _recover(state_path)
-        if os.path.exists(state_path) and batch_id <= _read_last_batch_id(state_path):
+        if batch_id <= versioned.last_metadata_value(state_path, "batch_id", -1):
             return
         sketch = build_fn(batch_df)
-        if os.path.exists(state_path):
-            spark = batch_df.sparkSession
-            sketch = merge_fn(spark.read.parquet(state_path), sketch)
-        _swap_state(sketch, state_path, batch_id)
+
+        def fold(_head: int, state: DataFrame | None):
+            grid = sketch if state is None else merge_fn(state, sketch)
+            return grid.coalesce(1), {"batch_id": batch_id}
+
+        version = versioned.rewrite_head(batch_df.sparkSession, state_path, fold)
+        if version > _KEEP_VERSIONS:
+            versioned.expire_snapshots(
+                state_path, keep_from=version - _KEEP_VERSIONS + 1
+            )
 
     return _merge
 

@@ -535,13 +535,6 @@ class TestDedup:
         kept = dedup.apply_dedup(docs, clusters)
         assert {r["doc_id"] for r in kept.collect()} == {1, 9}
 
-    def test_minhash_ml_variant(self, spark, docs):
-        pytest.importorskip("pyspark.ml")
-        pairs = dedup.minhash_ml_candidates(docs, num_hash_tables=8)
-        got = {(r["id_a"], r["id_b"]): r["est_jaccard"] for r in pairs.collect()}
-        assert got[(1, 2)] == 1.0  # identical docs: distance 0
-        assert (1, 3) in got or (1, 5) in got  # near-dups surface as candidates
-
     def test_ngram_jaccard_exact_values(self, spark, docs):
         pairs = dedup.ngram_jaccard_pairs(docs, shingle_n=2, min_jaccard=0.1)
         got = {(r["id_a"], r["id_b"]): r["jaccard"] for r in pairs.collect()}
@@ -599,10 +592,10 @@ class TestDedup:
                 )
         return spark.createDataFrame(rows, "doc_id long, text string")
 
-    def test_calibrated_df_cutoff_survives_density_dilution(self, spark):
+    def test_fixed_df_frac_stops_pruning_under_density_dilution(self, spark):
         # fixed-frac pruning degenerates at 10x corpus size (per-shingle
-        # df fractions dilute below the threshold); the quantile-derived
-        # absolute cutoff keeps pruning with the SAME call at both scales
+        # df fractions dilute below the threshold) — the failure the
+        # calibrated absolute cutoff exists for (next tests)
         small = self._topic_corpus(spark, n_topics=5)     # 250 docs
         big = self._topic_corpus(spark, n_topics=50)      # 2500 docs
 
@@ -615,17 +608,6 @@ class TestDedup:
         assert n_pairs(small, max_doc_frac=0.15) == 0
         # ... but silently stops pruning at 10x (50 < 0.15*2500): quadratic again
         assert n_pairs(big, max_doc_frac=0.15) == 50 * per_topic
-        # the calibrated absolute cutoff: same call, both scales, no rescaling
-        cut_small = dedup.calibrate_df_cutoff(small, quantile=0.95, min_cutoff=4)
-        cut_big = dedup.calibrate_df_cutoff(big, quantile=0.95, min_cutoff=4)
-        assert cut_small < 50 and cut_big < 50  # hot tail above cutoff at both
-        assert n_pairs(small, max_doc_count=cut_small) == 0
-        assert n_pairs(big, max_doc_count=cut_big) == 0
-
-    def test_calibrate_df_cutoff_validates_quantile(self, spark):
-        df = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
-        with pytest.raises(ValueError, match="quantile"):
-            dedup.calibrate_df_cutoff(df, quantile=1.5)
 
     def test_calibrated_df_cutoff_median_rule_pinned(self, spark):
         # known df distribution by construction: two-token docs yield
@@ -648,7 +630,7 @@ class TestDedup:
 
     def test_calibrated_df_cutoff_survives_density_dilution(self, spark):
         # the round-10 default rule under the same dilution scenario as
-        # the quantile test above: per-shingle dfs are scale-invariant in
+        # the fixed-frac test above: per-shingle dfs are scale-invariant in
         # the topic corpus (each topic's boilerplate df stays 50), so the
         # median-anchored cutoff stays put and pruning survives 10x
         # vocabulary growth with the SAME call

@@ -3,11 +3,14 @@ real Spark pipeline composed through it."""
 
 from __future__ import annotations
 
+import os
 import time
 
 import pytest
 
 from nyc_bikeshare_datawarehouse_spark.warehouse.runner import PipelineRunner, Stage
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_dependency_order_and_context():
@@ -89,16 +92,31 @@ def test_run_query_cli_list_and_errors():
 
     out = subprocess.run(
         [sys.executable, "tools/run_query.py", "--list", "tpch"],
-        capture_output=True, text=True, cwd="/root/repo",
+        capture_output=True, text=True, cwd=ROOT,
     )
     assert out.returncode == 0
     assert out.stdout.count("q_tpch_") == 22  # the full TPC-H set listed
     bad = subprocess.run(
         [sys.executable, "tools/run_query.py", "star_join"],
-        capture_output=True, text=True, cwd="/root/repo",
+        capture_output=True, text=True, cwd=ROOT,
     )
     assert bad.returncode != 0
     assert "did you mean" in bad.stderr
+
+
+def test_tools_and_tests_do_not_hard_code_the_checkout_path():
+    # tools and tests derive the repo root from __file__: a checkout
+    # anywhere else must import, check and write its own tree
+    offenders = []
+    for sub in ("tools", "tests"):
+        for dirpath, dirnames, files in os.walk(os.path.join(ROOT, sub)):
+            dirnames[:] = [d for d in dirnames if d != "__pycache__"]
+            for name in files:
+                path = os.path.join(dirpath, name)
+                with open(path, encoding="utf-8", errors="replace") as fh:
+                    if ROOT in fh.read():
+                        offenders.append(os.path.relpath(path, ROOT))
+    assert offenders == []
 
 
 def test_stage_results_record_elapsed_time():

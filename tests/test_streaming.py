@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from nyc_bikeshare_datawarehouse_spark.plans.queries import QUERIES
+from nyc_bikeshare_datawarehouse_spark.sources import versioned
 from nyc_bikeshare_datawarehouse_spark.streaming import events as se
 
 from conftest import rows_set
@@ -367,7 +368,7 @@ def test_countmin_stream_state_equals_batch_sketch(spark, sf_dir, tmp_path):
         stream, "user_id", str(tmp_path / "cm_state"), str(tmp_path / "cm_ckpt")
     )
     q.awaitTermination()
-    got = spark.read.parquet(str(tmp_path / "cm_state"))
+    got = versioned.read_snapshot(spark, str(tmp_path / "cm_state"))
     want = countmin_build(spark.read.parquet(src), "user_id")
     assert rows_set(got) == rows_set(want)
 
@@ -389,7 +390,7 @@ def test_hll_stream_state_equals_batch_sketch(spark, sf_dir, tmp_path):
         stream, "user_id", str(tmp_path / "hll_state"), str(tmp_path / "hll_ckpt")
     )
     q.awaitTermination()
-    got = spark.read.parquet(str(tmp_path / "hll_state"))
+    got = versioned.read_snapshot(spark, str(tmp_path / "hll_state"))
     want = hll_registers(spark.read.parquet(src), "user_id")
     assert rows_set(got) == rows_set(want)
 
@@ -410,17 +411,20 @@ def test_sketch_merge_replay_is_idempotent(spark, sf_dir, tmp_path):
         state, lambda df: countmin_build(df, "user_id"), countmin_merge
     )
     merge(batch, 0)
-    once = rows_set(spark.read.parquet(state))
+    once = rows_set(versioned.read_snapshot(spark, state))
     merge(batch, 0)  # replay of the same micro-batch
-    assert rows_set(spark.read.parquet(state)) == once
+    assert rows_set(versioned.read_snapshot(spark, state)) == once
     merge(batch, 1)  # a genuinely new batch still folds in
-    assert rows_set(spark.read.parquet(state)) != once
+    assert rows_set(versioned.read_snapshot(spark, state)) != once
 
 
-def test_sketch_state_survives_crash_between_renames(spark, sf_dir, tmp_path):
-    # simulate a crash after the old state was renamed aside but before
-    # the new one landed: _recover must republish the old sketch
-    import os
+def test_sketch_fold_dying_before_publish_leaves_head(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    # a fold that dies after staging its grid but before the manifest
+    # publish must leave the head untouched; the replayed batch then
+    # folds exactly once
+    import pytest
 
     from nyc_bikeshare_datawarehouse_spark.functions.sketches import (
         countmin_build,
@@ -435,18 +439,114 @@ def test_sketch_state_survives_crash_between_renames(spark, sf_dir, tmp_path):
         state, lambda df: countmin_build(df, "user_id"), countmin_merge
     )
     merge(batch, 0)
-    published = rows_set(spark.read.parquet(state))
-    os.rename(state, state + "__prev")  # the mid-publish crash point
+    published = rows_set(versioned.read_snapshot(spark, state))
+
+    def crash(*_args, **_kwargs):
+        raise RuntimeError("writer died before the publish")
+
+    with monkeypatch.context() as m:
+        m.setattr(versioned, "_commit", crash)
+        with pytest.raises(RuntimeError, match="before the publish"):
+            merge(batch, 1)
+    assert versioned.latest_version(state) == 1
+    assert rows_set(versioned.read_snapshot(spark, state)) == published
     merge(batch, 1)  # replayed delivery after restart
-    after = spark.read.parquet(state)
-    assert not os.path.exists(state + "__prev")
-    # recovered state (batch 0) merged with batch 1 == batch applied twice
+    merge(batch, 1)  # and a second replay is skipped
     want = rows_set(
         countmin_merge(
             countmin_build(batch, "user_id"), countmin_build(batch, "user_id")
         )
     )
-    assert rows_set(after) == want and rows_set(after) != published
+    assert rows_set(versioned.read_snapshot(spark, state)) == want
+
+
+def test_sketch_state_retains_two_versions(spark, tmp_path):
+    # retention is a constant: after each fold only the new head and the
+    # previous one stay, so state space is bounded like a single copy
+    import os
+
+    from nyc_bikeshare_datawarehouse_spark.functions.sketches import (
+        countmin_build,
+        countmin_merge,
+    )
+    from nyc_bikeshare_datawarehouse_spark.streaming.sketches import _sketch_merge_fn
+
+    state = str(tmp_path / "cm_state")
+    merge = _sketch_merge_fn(
+        state, lambda df: countmin_build(df, "id"), countmin_merge
+    )
+    for i in range(4):
+        merge(spark.range(10 * i, 10 * i + 10), i)
+    manifests = sorted(f for f in os.listdir(state) if f.startswith("_manifest_v"))
+    assert manifests == ["_manifest_v3.json", "_manifest_v4.json"]
+    assert rows_set(versioned.read_snapshot(spark, state)) == rows_set(
+        countmin_build(spark.range(0, 40), "id")
+    )
+
+
+def test_concurrent_sketch_folds_publish_only_returned_batches(
+    spark, sf_dir, tmp_path
+):
+    # four folds race into one count-min state: each either returns or
+    # raises CommitConflict, and the published grid is the sketch of
+    # exactly the batches whose fold returned — never a grid merged from
+    # a head the winner did not read
+    import sys
+    import threading
+
+    from nyc_bikeshare_datawarehouse_spark.functions.sketches import (
+        countmin_build,
+        countmin_merge,
+    )
+    from nyc_bikeshare_datawarehouse_spark.sources.readers import load_table
+    from nyc_bikeshare_datawarehouse_spark.streaming.sketches import _sketch_merge_fn
+
+    # disjoint batches of 100/200/300/400 events
+    ev = load_table(spark, sf_dir, "events")
+    bounds = [0, 100, 300, 600, 1000]
+    batches = {
+        i: ev.filter(
+            (F.col("event_id") >= bounds[i]) & (F.col("event_id") < bounds[i + 1])
+        ).select("user_id")
+        for i in range(4)
+    }
+    state = str(tmp_path / "cm_state")
+    merge = _sketch_merge_fn(
+        state, lambda df: countmin_build(df, "user_id"), countmin_merge
+    )
+    start = threading.Barrier(len(batches))
+    outcome: dict[int, Exception | None] = {}
+
+    def fold(i):
+        start.wait(timeout=60)
+        try:
+            merge(batches[i], i)
+            outcome[i] = None
+        except Exception as e:  # recorded, asserted below
+            outcome[i] = e
+
+    threads = [threading.Thread(target=fold, args=(i,)) for i in batches]
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(switch)
+    assert not any(t.is_alive() for t in threads)
+    assert sorted(outcome) == sorted(batches)
+    returned = sorted(i for i, e in outcome.items() if e is None)
+    assert returned
+    for i, e in outcome.items():
+        assert e is None or isinstance(e, versioned.CommitConflict), repr(e)
+    folded = batches[returned[0]]
+    for i in returned[1:]:
+        folded = folded.unionAll(batches[i])
+    assert rows_set(versioned.read_snapshot(spark, state)) == rows_set(
+        countmin_build(folded, "user_id")
+    )
 
 
 def test_histogram_stream_state_equals_batch_sketch(spark, sf_dir, tmp_path):
@@ -467,7 +567,7 @@ def test_histogram_stream_state_equals_batch_sketch(spark, sf_dir, tmp_path):
         lo=0, hi=500, n_bins=125,
     )
     q.awaitTermination()
-    got = spark.read.parquet(str(tmp_path / "h_state"))
+    got = versioned.read_snapshot(spark, str(tmp_path / "h_state"))
     want = histogram_sketch(spark.read.parquet(src), "value", 0, 500, 125)
     assert rows_set(got) == rows_set(want)
 
@@ -489,7 +589,7 @@ def test_kmv_stream_state_equals_batch_sketch(spark, sf_dir, tmp_path):
         stream, "user_id", str(tmp_path / "kmv_state"), str(tmp_path / "kmv_ckpt"), k=32
     )
     q.awaitTermination()
-    got = spark.read.parquet(str(tmp_path / "kmv_state"))
+    got = versioned.read_snapshot(spark, str(tmp_path / "kmv_state"))
     want = kmv_sketch(spark.read.parquet(src), "user_id", 32)
     assert rows_set(got) == rows_set(want)
 
@@ -516,7 +616,7 @@ def test_streaming_drift_monitor_end_to_end(spark, sf_dir, tmp_path):
         lo=0, hi=500, n_bins=125,
     )
     q.awaitTermination()
-    streamed_state = spark.read.parquet(str(tmp_path / "state"))
+    streamed_state = versioned.read_snapshot(spark, str(tmp_path / "state"))
     cur_sketch = histogram_sketch(cur, "value", 0, 500, 125)
     got = {r["bin"]: (r["ref_n"], r["cur_n"], r["psi_contrib"])
            for r in psi_from_histograms(streamed_state, cur_sketch, 125).collect()}
@@ -623,7 +723,7 @@ def test_checksum_stream_state_equals_batch_checksum(spark, sf_dir, tmp_path):
         stream, cols, str(tmp_path / "ck_state"), str(tmp_path / "ck_ckpt")
     )
     q.awaitTermination()
-    got = spark.read.parquet(str(tmp_path / "ck_state"))
+    got = versioned.read_snapshot(spark, str(tmp_path / "ck_state"))
     want = checksum_state(spark.read.parquet(src), cols)
     # micro-batch-folded state == one-shot batch state, field for field
     assert rows_set(got) == rows_set(want)
@@ -665,7 +765,7 @@ def test_confusion_stream_state_equals_batch_metrics(spark, sf_dir, tmp_path):
         str(tmp_path / "cf_state"), str(tmp_path / "cf_ckpt"),
     )
     q.awaitTermination()
-    got = confusion_report(spark.read.parquet(str(tmp_path / "cf_state")))
+    got = confusion_report(versioned.read_snapshot(spark, str(tmp_path / "cf_state")))
     want = threshold_metrics(
         spark.read.parquet(src), F.col("score"), F.col("label"), thresholds
     )

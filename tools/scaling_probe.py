@@ -36,7 +36,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import functions as F
 
@@ -45,7 +46,8 @@ from nyc_bikeshare_datawarehouse_spark.session import get_spark
 
 SF01 = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 SF001 = "/root/testdata/sf0.01"
-BENCHDATA = "/root/repo/.benchdata"
+BENCHDATA = os.path.join(ROOT, ".benchdata")
+SCALING_JSON = os.path.join(ROOT, "SCALING.json")
 
 #: scale-path heavy queries: claimed ~linear in corpus size
 SCALE_PATH = [
@@ -494,7 +496,7 @@ def main() -> None:
         tg_small = run_gq(base_n)
         tg_big = run_gq(base_n * args.replicas)
         g_alpha = math.log(tg_big / tg_small) / math.log(args.replicas)
-        merged = json.load(open("/root/repo/SCALING.json"))
+        merged = json.load(open(SCALING_JSON))
         merged["exact_rank_values"] = {
             "sf0.1_sec": t_small,
             f"sf1x{args.replicas}_sec": t_big,
@@ -513,14 +515,14 @@ def main() -> None:
                     "groupBy(group, bucket) aggregate — same log-round claim "
                     "as the global form, independent of group count",
         }
-        json.dump(merged, open("/root/repo/SCALING.json", "w"), indent=2)
+        json.dump(merged, open(SCALING_JSON, "w"), indent=2)
         print(f"exact_rank_values: {t_small}s -> {t_big}s  alpha={alpha:.2f}")
         print(f"exact_group_quantile: {tg_small}s -> {tg_big}s  alpha={g_alpha:.2f}")
         if not (args.only or args.incremental or args.spatial or args.er_lever):
             return
 
     if args.exact_refresh:
-        merged = json.load(open("/root/repo/SCALING.json"))
+        merged = json.load(open(SCALING_JSON))
         for name in EXACT:
             t_small = time_query(spark, name, SF001, warm=True)
             t_big = time_query(spark, name, SF01, warm=True)
@@ -542,7 +544,7 @@ def main() -> None:
             }
             print(f"{name}: {t_small}s -> {t_big}s  alpha={alpha:.2f} "
                   "(audit-bounded, sf0.01->sf0.1)", flush=True)
-        json.dump(merged, open("/root/repo/SCALING.json", "w"), indent=2)
+        json.dump(merged, open(SCALING_JSON, "w"), indent=2)
         if not (args.only or args.incremental or args.spatial
                 or args.er_lever or args.srp_sig_stage):
             return
@@ -573,7 +575,7 @@ def main() -> None:
         t_arr_b = run_sig(big, True, 32)
         a_hof = math.log(t_hof_b / t_hof_s) / math.log(args.replicas)
         a_arr = math.log(t_arr_b / t_arr_s) / math.log(args.replicas)
-        merged = json.load(open("/root/repo/SCALING.json"))
+        merged = json.load(open(SCALING_JSON))
         merged["srp_signature_stage"] = {
             "hof_sf0.1_sec": t_hof_s,
             f"hof_sf1x{args.replicas}_sec": t_hof_b,
@@ -588,7 +590,7 @@ def main() -> None:
                     "Arrow twin; declared queries keep the HOF form for "
                     "oracle parity.",
         }
-        json.dump(merged, open("/root/repo/SCALING.json", "w"), indent=2)
+        json.dump(merged, open(SCALING_JSON, "w"), indent=2)
         print(f"srp sig HOF  : {t_hof_s}s -> {t_hof_b}s  alpha={a_hof:.2f}")
         print(f"srp sig Arrow: {t_arr_s}s -> {t_arr_b}s  alpha={a_arr:.2f}")
         if not (args.only or args.incremental or args.spatial or args.er_lever):
@@ -636,7 +638,7 @@ def main() -> None:
         run(True)  # warm JVM/codegen once
         t_distinct = run(True)
         t_exact = run(False)
-        merged = json.load(open("/root/repo/SCALING.json"))
+        merged = json.load(open(SCALING_JSON))
         merged["entity_resolution_distinct_lever"] = {
             "exact_sec": t_exact,
             "distinct_sec": t_distinct,
@@ -648,7 +650,7 @@ def main() -> None:
                     "verify run on the distinct universe, id expansion is "
                     "two name equi-joins",
         }
-        json.dump(merged, open("/root/repo/SCALING.json", "w"), indent=2)
+        json.dump(merged, open(SCALING_JSON, "w"), indent=2)
         print(f"er lever: exact {t_exact}s vs distinct {t_distinct}s "
               f"({t_exact / t_distinct:.1f}x)")
         if not (args.only or args.incremental or args.spatial):
@@ -658,7 +660,7 @@ def main() -> None:
         t_small = time_spatial(spark, 1, warm=True)
         t_big = time_spatial(spark, args.replicas)
         alpha = math.log(t_big / t_small) / math.log(args.replicas)
-        merged = json.load(open("/root/repo/SCALING.json"))
+        merged = json.load(open(SCALING_JSON))
         merged["spatial_join_const_density"] = {
             "sf0.1_sec": t_small,
             f"sf1x{args.replicas}_sec": t_big,
@@ -668,7 +670,7 @@ def main() -> None:
                     "query's fixed 10x10 deg grid grows density instead — "
                     "pair output itself is quadratic there by construction)",
         }
-        json.dump(merged, open("/root/repo/SCALING.json", "w"), indent=2)
+        json.dump(merged, open(SCALING_JSON, "w"), indent=2)
         print(f"spatial_const_density: {t_small}s -> {t_big}s  alpha={alpha:.2f}")
         if not (args.only or args.incremental):
             return
@@ -680,7 +682,7 @@ def main() -> None:
         t_big_scaled = time_embed_lsh_planes(spark, big, 32)
         a_fixed = math.log(t_big_fixed / t_small) / math.log(args.replicas)
         a_scaled = math.log(t_big_scaled / t_small) / math.log(args.replicas)
-        merged = json.load(open("/root/repo/SCALING.json"))
+        merged = json.load(open(SCALING_JSON))
         merged["embed_lsh_fixed_planes"] = {
             "sf0.1_sec": t_small,
             f"sf1x{args.replicas}_sec": t_big_fixed,
@@ -694,13 +696,13 @@ def main() -> None:
             "step": f"sf0.1 (16 planes) -> {args.replicas}x (32 planes: "
                     "bits-per-band grown with log2(corpus))",
         }
-        json.dump(merged, open("/root/repo/SCALING.json", "w"), indent=2)
+        json.dump(merged, open(SCALING_JSON, "w"), indent=2)
         print(f"fixed 16 planes : {t_small}s -> {t_big_fixed}s  alpha={a_fixed:.2f}")
         print(f"scaled 32 planes: {t_small}s -> {t_big_scaled}s  alpha={a_scaled:.2f}")
         return
 
     if args.only is not None or args.incremental:
-        merged = json.load(open("/root/repo/SCALING.json"))
+        merged = json.load(open(SCALING_JSON))
         for name in (args.only or []):
             t_small = time_query(spark, name, SF01, warm=True)
             t_big = time_query(spark, name, big)
@@ -724,7 +726,7 @@ def main() -> None:
             }
             print(f"incremental_dedup_fixed_delta: {t_small}s -> {t_big}s  "
                   f"alpha={alpha:.2f}", flush=True)
-        json.dump(merged, open("/root/repo/SCALING.json", "w"), indent=2)
+        json.dump(merged, open(SCALING_JSON, "w"), indent=2)
         return
 
     results: dict[str, dict] = {}
@@ -769,7 +771,7 @@ def main() -> None:
             t_huge = time_query(spark, name, big)
             results[name][f"sf1x{args.replicas}_sec"] = t_huge
 
-    json.dump(results, open("/root/repo/SCALING.json", "w"), indent=2)
+    json.dump(results, open(SCALING_JSON, "w"), indent=2)
     print("\n| query | small | big | alpha | step |")
     print("|---|---|---|---|---|")
     for name, r in results.items():
