@@ -16,6 +16,21 @@ body, so the shuffle moves hashes + ids, not text):
                     (the verifier stage after LSH, or standalone on
                     token-blocked pairs).
 
+Every candidate generator in the near-dup family (here, similarity.py,
+multimodal.py, fuzzy.py) builds on three shared cores, each the ONE place
+its decision lives:
+
+- `spread_pairs`          — one exchange dedups a candidate pair stream
+                            AND spreads it to cluster width for the
+                            CPU-bound verify behind it;
+- `banded_hamming_join`   — chunk / chunk-pair band keys over a fixed-
+                            width signature and the (band, chunk) self-
+                            join (SimHash, SRP cosine LSH, pHash, audio);
+- `_shingle_overlap`      — the shared-shingle pair counter (df pruning,
+                            slim self-join, packed/unpacked counts, id
+                            range guard) under the n-gram Jaccard and
+                            containment measures.
+
 Embedding-based near-dup (cosine) lives in similarity.py.
 """
 
@@ -208,17 +223,8 @@ def simhash_candidates(
     `sig`/`sig_bits` to band a different signature (e.g. the 32-bit
     `simhash_portable`); default is the production 64-bit xxhash form.
 
-    conjunction=True joins on PAIRS of chunks instead (key = pair index +
-    both chunk values packed into one long, C(bands, 2) keys per doc):
-    pigeonhole recall drops to Hamming <= bands-2, but the key space
-    squares — 8-bit chunks give 2^16 conjunction buckets instead of 256,
-    so in-bucket pairing on random signatures falls ~width-squared-fold.
-    Single-chunk banding's bounded key space is birthday-quadratic at
-    corpus scale (round-12 verdict: N^2/1024 pairs for the 4x8-bit
-    portable form REGARDLESS of data); conjunction keys grow with the
-    signature, keeping candidate volume data-driven rather than
-    keyspace-capped. Use it whenever the downstream Hamming filter fits
-    inside bands-2.
+    conjunction=True joins on PAIRS of chunks instead (Hamming <= bands-2
+    recall, squared key space — see `banded_hamming_join`).
 
     r15: the banded self-join runs over the DISTINCT-SIGNATURE universe
     (`simhash_sig_pairs`), then expands to doc pairs via two sig-keyed
@@ -281,6 +287,66 @@ def simhash_sig_pairs(
     to one representative edge per signature pair instead of the full
     doc-pair fan-out. Equal signatures are NOT emitted (hamming-0 pairs
     are the caller's within-group expansion, where one exists)."""
+    return (
+        banded_hamming_join(sigu, "sig", bands, sig_bits, conjunction)
+        .select(F.col("id_a").alias("sig_a"), F.col("id_b").alias("sig_b"))
+        .withColumn("hamming", F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b"))))
+    )
+
+
+def spread_pairs(
+    pairs: DataFrame,
+    a: str = "id_a",
+    b: str = "id_b",
+    subset: list[str] | None = None,
+) -> DataFrame:
+    """Dedup a candidate pair stream AND spread it for the verify, in ONE
+    exchange (r15/r16 fusion). Hash-repartitioning on the pair satisfies
+    the dedup aggregation's distribution requirement, so Catalyst plans
+    one complete HashAggregate after a single exchange — instead of
+    dropDuplicates' partial agg + exchange, which AQE then size-coalesces
+    to a few partitions: a two-longs-per-row pair list is small in bytes
+    while the verify behind it (array_intersect, levenshtein, zip_with
+    dot) is CPU-bound, so the coalescer would run it on 2 of 32 cores
+    (the documented misprice). The explicit defaultParallelism width
+    follows the cluster, not a constant. Measured at sf0.1:
+    q_jaccard_prefix 17.7s -> 7.3s, the SRP candidate stage 1.08s ->
+    0.64s. `subset` keeps extra payload columns (e.g. signatures riding
+    the pair) out of the dedup key."""
+    return pairs.repartition(
+        pairs.sparkSession.sparkContext.defaultParallelism, a, b
+    ).dropDuplicates(subset)
+
+
+def banded_hamming_join(
+    df: DataFrame,
+    key_col: str,
+    bands: int,
+    sig_bits: int,
+    conjunction: bool = False,
+) -> DataFrame:
+    """Banded Hamming self-join over a fixed-width signature: split the
+    `sig` column into `bands` chunks of `sig_bits // bands` bits and return
+    every (id_a < id_b) pair of `key_col` values sharing >= 1 band key,
+    deduped and spread by `spread_pairs`. Pigeonhole recall: single-chunk
+    keys surface every pair within Hamming <= bands-1. The join is an
+    equi-join on (band, chunk) — small ints — so the shuffle moves
+    (key, band, chunk) rows only; callers re-attach payloads (vectors,
+    signatures) to the deduped pair list by key.
+
+    conjunction=True joins on PAIRS of chunks instead (key = pair index +
+    both chunk values packed into one long, C(bands, 2) keys per row):
+    recall drops to Hamming <= bands-2, but the key space squares — 8-bit
+    chunks give 2^16 conjunction buckets instead of 256, so in-bucket
+    pairing on random signatures falls ~width-squared-fold. Single-chunk
+    banding's bounded key space is birthday-quadratic at corpus scale
+    (round-12 verdict: N^2/1024 pairs for the 4x8-bit portable form
+    REGARDLESS of data); conjunction keys keep candidate volume data-
+    driven. Use it whenever the downstream Hamming filter fits inside
+    bands-2.
+
+    Chunk masks are per-band literal expressions built in a Python loop:
+    `F.shiftright` needs a Python int, not a lambda-bound Column."""
     width = sig_bits // bands
 
     def _chunk(b: int) -> F.Column:
@@ -289,28 +355,25 @@ def simhash_sig_pairs(
     if conjunction:
         if bands < 3:
             raise ValueError("conjunction banding needs bands >= 3 for any recall guarantee")
-        combos = list(itertools.combinations(range(bands), 2))
         keys = [
             F.struct(
                 F.lit(k).alias("band"),
                 (F.shiftleft(_chunk(i), width) + _chunk(j)).alias("chunk"),
             )
-            for k, (i, j) in enumerate(combos)
+            for k, (i, j) in enumerate(itertools.combinations(range(bands), 2))
         ]
     else:
         keys = [
             F.struct(F.lit(b).alias("band"), _chunk(b).alias("chunk")) for b in range(bands)
         ]
-    chunks = sigu.select(
-        "sig", F.explode(F.array(*keys)).alias("bc")
-    ).select("sig", F.col("bc.band").alias("band"), F.col("bc.chunk").alias("chunk"))
+    chunks = df.select(key_col, F.explode(F.array(*keys)).alias("bc")).select(
+        key_col, F.col("bc.band").alias("band"), F.col("bc.chunk").alias("chunk")
+    )
     a, b = chunks.alias("a"), chunks.alias("b")
-    return (
+    return spread_pairs(
         a.join(b, on=["band", "chunk"])
-        .filter(F.col("a.sig") < F.col("b.sig"))
-        .select(F.col("a.sig").alias("sig_a"), F.col("b.sig").alias("sig_b"))
-        .dropDuplicates()
-        .withColumn("hamming", F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b"))))
+        .filter(F.col(f"a.{key_col}") < F.col(f"b.{key_col}"))
+        .select(F.col(f"a.{key_col}").alias("id_a"), F.col(f"b.{key_col}").alias("id_b"))
     )
 
 
@@ -365,7 +428,8 @@ def minhash_lsh_candidates(
         ).alias("bb"),
     ).select(id_col, "sig", F.col("bb.band").alias("band"), F.col("bb.bh").alias("bh"))
     a, b = banded.alias("a"), banded.alias("b")
-    pairs = (
+    # the per-pair zip_with match fraction is the CPU-bound verify
+    pairs = spread_pairs(
         a.join(b, on=["band", "bh"])
         .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
         .select(
@@ -373,14 +437,8 @@ def minhash_lsh_candidates(
             F.col(f"b.{id_col}").alias("id_b"),
             F.col("a.sig").alias("sig_a"),
             F.col("b.sig").alias("sig_b"),
-        )
-        # fused dedup+spread (r16): one pair-keyed exchange feeds the
-        # per-pair zip_with match fraction at cluster width (see
-        # portable_band_candidates for the full rationale)
-        .repartition(
-            df.sparkSession.sparkContext.defaultParallelism, "id_a", "id_b"
-        )
-        .dropDuplicates(["id_a", "id_b"])
+        ),
+        subset=["id_a", "id_b"],
     )
     match_frac = (
         F.size(F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda eq: eq))
@@ -457,25 +515,15 @@ def portable_band_candidates(
         )
     )
     a, b = band_sigs.alias("a"), band_sigs.alias("b")
-    return (
+    # every caller feeds a CPU-bound verify (jaccard_verify_pairs'
+    # array_intersect, minhash_est_error's per-pair counts)
+    return spread_pairs(
         a.join(b, on=["band", "band_sig"])
         .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
         .select(
             F.col(f"a.{id_col}").alias("id_a"),
             F.col(f"b.{id_col}").alias("id_b"),
         )
-        # ONE exchange dedups AND spreads (r16, the prefix_jaccard/SRP
-        # fusion): hash-repartitioning on the pair satisfies the dedup
-        # aggregation's distribution requirement — a single complete
-        # HashAggregate, already spread over defaultParallelism for the
-        # CPU-bound verify stage every caller feeds (jaccard_verify_
-        # pairs' array_intersect), instead of dropDuplicates' partial
-        # agg + exchange that AQE size-coalesces to a few partitions
-        # (the documented misprice).
-        .repartition(
-            sig.sparkSession.sparkContext.defaultParallelism, "id_a", "id_b"
-        )
-        .dropDuplicates()
     )
 
 
@@ -898,27 +946,13 @@ def prefix_jaccard_candidates(
         )
         required = (F.col("n_a") + F.col("n_b")) * (min_jaccard / (1.0 + min_jaccard))
         joined = joined.filter(overlap_ub.cast("double") >= required - 1e-9)
-    return (
+    # the ~2x-duplicated join output feeds jaccard_verify_pairs
+    # (measured at sf0.1: candidates 13.7s -> 6.5s, 2 Exchange -> 1)
+    return spread_pairs(
         joined.select(
             F.least("id_a", "id_b").alias("id_a"),
             F.greatest("id_a", "id_b").alias("id_b"),
         )
-        # ONE exchange dedups AND spreads the pair stream (r15): a plain
-        # .distinct() partial-aggregates the ~2x-duplicated join output,
-        # exchanges, final-aggregates — and AQE then size-coalesces the
-        # ~77 MB pair list to ~2 partitions, forcing callers to pay a
-        # SECOND full pair shuffle (repartition) before the CPU-bound
-        # verify (the documented size-coalescer mispricing). Hash-
-        # repartitioning on the pair first satisfies the aggregation's
-        # distribution requirement, so Catalyst plans one complete
-        # HashAggregate after a single exchange, already spread over
-        # defaultParallelism for the verify stage (scale-adaptive: cores,
-        # not a constant). Measured at sf0.1: candidates 13.7s -> 6.5s,
-        # q_jaccard_prefix end-to-end 17.7s -> 7.3s, 2 Exchange -> 1.
-        .repartition(
-            df.sparkSession.sparkContext.defaultParallelism, "id_a", "id_b"
-        )
-        .dropDuplicates()
     )
 
 
@@ -1252,61 +1286,45 @@ def calibrated_df_cutoff(
     return max(min_cutoff, (median_bp * med) // 10000)
 
 
-def ngram_jaccard_pairs(
+def _shingle_overlap(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_n: int = 2,
-    min_jaccard: float = 0.2,
-    max_doc_frac: float | None = None,
-    max_doc_count: int | None = None,
-    size_prune: bool = False,
-    pack_ids: bool = False,
-    dfreq: DataFrame | None = None,
+    text_col: str,
+    id_col: str,
+    shingle_n: int,
+    max_doc_frac: float | None,
+    max_doc_count: int | None,
+    pack_ids: bool,
+    dfreq: DataFrame | None,
 ) -> DataFrame:
-    """Exact n-gram Jaccard similarity for all pairs sharing >= 1 shingle.
-
-    `dfreq`: optional precomputed (sh, __df) frame (`shingle_dfreq`) for
-    the pruning branch — pass the frame the calibration already
-    materialized so the shingle build is not paid a second time; it MUST
-    come from the same (df, text_col, id_col, shingle_n), or the pruned
-    universe diverges from the sizes the jaccard uses.
+    """Shared-shingle pair counter under every n-gram overlap measure:
+    (id_a < id_b, n_inter, n_a, n_b) for each doc pair sharing >= 1
+    kept shingle, with n_a/n_b the per-doc kept-shingle set sizes.
 
     Inverted-index join: explode distinct shingles, self-equi-join on the
-    shingle, count intersections per pair, then |A∪B| = |A|+|B|-|A∩B|.
-    Shuffles move (shingle_hash, id) pairs only.
+    shingle, count intersections per pair. Shuffles move (shingle_hash,
+    id) pairs only; sizes attach to the (much smaller) aggregated pair
+    table.
 
-    Hot shingles (stopword n-grams) are the skew killer at scale: a
-    shingle present in f·N docs contributes (f·N)² candidate pairs to ONE
-    join partition. `max_doc_frac` enables document-frequency pruning:
-    shingles appearing in more than that fraction of documents are dropped
-    from the index *before* the self-join (both intersection and set sizes
-    are computed over the kept-shingle universe, so jaccard stays a true
-    jaccard on the reduced feature space). A stopword shingle carries ~no
-    similarity signal, so recall loss is negligible while the worst
-    partition shrinks quadratically. Default None = off (exact semantics,
-    matches the SQL oracle).
+    df PRUNING (`max_doc_frac` / `max_doc_count`, either or both; a
+    shingle is pruned when it exceeds EITHER): a shingle in d docs
+    contributes d² pairs to ONE join partition, so hot shingles are
+    dropped from the index before the self-join, and intersections AND
+    sizes are measured over the kept-shingle universe — the measure
+    stays a true measure on the reduced feature space, which the pruned
+    oracles replay exactly. `dfreq` is an optional precomputed
+    (sh, __df) frame (`shingle_dfreq`) for that branch — pass the frame
+    the calibration already materialized so the shingle build is not
+    paid twice; it MUST come from the same (df, text_col, id_col,
+    shingle_n), or the pruned universe diverges from the sizes.
 
-    CALIBRATION (scaling-probe finding, BASELINE.md round 6): a FRACTION
-    threshold is a corpus-density property, not a constant — on a corpus
-    whose vocabulary grows with size (so per-shingle doc-frequency
-    fractions shrink), a fixed frac stops pruning and the cost reverts
-    toward quadratic (measured alpha 1.48 vs 0.45 at 10x). When the df
-    distribution at the target scale is unknown, prefer `max_doc_count`:
-    an ABSOLUTE posting-length cutoff. A shingle's join cost is
-    (posting length)² regardless of corpus size, so a count cutoff bounds
-    the worst partition absolutely and is scale-invariant by
-    construction. If both are given, a shingle is pruned when it exceeds
-    EITHER threshold.
-
-    `size_prune` adds the EXACT size-ratio prefilter: jaccard(A,B) can
-    never exceed min(|A|,|B|)/max(|A|,|B|), so size-incompatible pairs are
-    dropped inside the self-join, before the per-pair intersection groupBy
-    ever sees them. Worth it when doc sizes are heterogeneous and the
-    threshold is high; on a size-uniform corpus it filters little while
-    widening the candidate shuffle by two longs per row (measured 26s→39s
-    at sf0.1, 77% of pairs passing), hence opt-in. Results are identical
-    either way (tested).
+    Pair counts are repartitioned on the pair BEFORE counting: a pair's
+    shared shingles are scattered across join tasks, so the default
+    partial aggregate dedups almost nothing while building a multi-
+    million-entry hash map per task (spill-prone at this cardinality).
+    Pre-partitioning satisfies the aggregation's distribution
+    requirement, so Catalyst plans ONE HashAggregate after the exchange
+    — same shuffle volume, half the CPU (measured 42s -> 22s at sf0.1).
+    No partition count: inherits spark.sql.shuffle.partitions / AQE.
 
     `pack_ids` packs the pair into ONE long (`id_a << 32 | id_b`) through
     the count shuffle — one 8-byte key instead of two, one hash/compare
@@ -1323,11 +1341,12 @@ def ngram_jaccard_pairs(
     identical to the unpacked path (tested)."""
     if dfreq is not None and max_doc_frac is None and max_doc_count is None:
         # dfreq only feeds the pruning branch; accepting it without a
-        # pruning parameter would silently run the UNPRUNED join against
-        # the caller's expectation of a pruned one
+        # cutoff would silently run the UNPRUNED join against the
+        # caller's expectation of a pruned one
         raise ValueError(
-            "dfreq was passed but neither max_doc_frac nor max_doc_count is "
-            "set — the precomputed document frequencies would be ignored"
+            "dfreq was passed but no df cutoff (max_doc_frac / "
+            "max_doc_count) is set — the precomputed document "
+            "frequencies would be ignored"
         )
     sh = shingle_postings(df, text_col, id_col, shingle_n)
     if max_doc_frac is not None or max_doc_count is not None:
@@ -1348,85 +1367,94 @@ def ngram_jaccard_pairs(
         # sizes below are computed over the KEPT shingles
         sh = sh.join(F.broadcast(hot), "sh", "left_anti")
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-    if size_prune:
-        posting = sh.join(sizes, id_col)
-        a = posting.select(F.col(id_col).alias("id_a"), "sh", F.col("n_sh").alias("n_a"))
-        b = posting.select(F.col(id_col).alias("id_b"), "sh", F.col("n_sh").alias("n_b"))
-        inter = (
-            a.join(b, "sh")
-            .filter(
-                (F.col("id_a") < F.col("id_b"))
-                & (F.least("n_a", "n_b") >= F.greatest("n_a", "n_b") * min_jaccard)
+    # slim postings: the candidate shuffle carries (sh, id) only
+    a, b = sh.alias("a"), sh.alias("b")
+    joined = a.join(b, "sh").filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+    idc = F.col(id_col)
+    if pack_ids:
+        pair_counts = (
+            joined.select(
+                # LONG cast is mandatory: an IntegerType id would shift
+                # mod 32 in the JVM (a no-op), producing garbage packed
+                # keys even for small values
+                F.shiftleft(F.col(f"a.{id_col}").cast("long"), 32)
+                .bitwiseOR(F.col(f"b.{id_col}").cast("long"))
+                .alias("__pk")
             )
-            # pair-count aggregation: see the repartition note below
-            .repartition("id_a", "id_b")
-            .groupBy("id_a", "n_a", "id_b", "n_b")
+            .repartition("__pk")
+            .groupBy("__pk")
             .agg(F.count(F.lit(1)).alias("n_inter"))
+            .select(
+                F.shiftright("__pk", 32).alias("id_a"),
+                F.col("__pk").bitwiseAND(F.lit((1 << 32) - 1)).alias("id_b"),
+                "n_inter",
+            )
+        )
+        # Range guard on the per-DOC sizes branch (one row per doc, not
+        # per pair): an id outside [0, 2^31) would collide silently in
+        # the packed key, so raise loudly instead. The checked column
+        # IS the join key, so it cannot be pruned, and every packed id
+        # flows through sa/sb — the join cannot emit a single result
+        # row before the guard has seen (and rejected) a bad id.
+        idc = F.when((idc >= 0) & (idc < (1 << 31)), idc).otherwise(
+            F.raise_error(
+                F.concat(
+                    F.lit("pack_ids requires 0 <= id < 2^31, got "),
+                    F.col(id_col).cast("string"),
+                )
+            ).cast(sizes.schema[id_col].dataType)
         )
     else:
-        # slim postings: the candidate shuffle carries (sh, id) only;
-        # sizes attach to the (much smaller) aggregated pair table
-        a, b = sh.alias("a"), sh.alias("b")
-        joined = a.join(b, "sh").filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        # Repartition on the pair BEFORE counting: a pair's shared
-        # shingles are scattered across join tasks, so the default
-        # partial aggregate dedups almost nothing while building a
-        # multi-million-entry hash map per task (spill-prone at this
-        # cardinality). Pre-partitioning satisfies the aggregation's
-        # distribution requirement, so Catalyst plans ONE HashAggregate
-        # after the exchange — same shuffle volume (partial agg barely
-        # shrank it), half the CPU (measured 42s -> 22s at sf0.1).
-        # No partition count: inherits spark.sql.shuffle.partitions /
-        # AQE, so the same plan scales with the cluster.
-        if pack_ids:
-            pair_counts = (
-                joined.select(
-                    # LONG cast is mandatory: an IntegerType id would shift
-                    # mod 32 in the JVM (a no-op), producing garbage packed
-                    # keys even for small values. The value-range guard
-                    # lives on the per-DOC sizes branch below, not here on
-                    # the quadratic pair stream.
-                    F.shiftleft(F.col(f"a.{id_col}").cast("long"), 32)
-                    .bitwiseOR(F.col(f"b.{id_col}").cast("long"))
-                    .alias("__pk")
-                )
-                .repartition("__pk")
-                .groupBy("__pk")
-                .agg(F.count(F.lit(1)).alias("n_inter"))
-                .select(
-                    F.shiftright("__pk", 32).alias("id_a"),
-                    F.col("__pk").bitwiseAND(F.lit((1 << 32) - 1)).alias("id_b"),
-                    "n_inter",
-                )
+        pair_counts = (
+            joined.select(
+                F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
             )
-        else:
-            pair_counts = (
-                joined.select(
-                    F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-                )
-                .repartition("id_a", "id_b")
-                .groupBy("id_a", "id_b")
-                .agg(F.count(F.lit(1)).alias("n_inter"))
-            )
-        idc = F.col(id_col)
-        if pack_ids:
-            # Range guard on the per-DOC sizes branch (one row per doc, not
-            # per pair): an id outside [0, 2^31) would collide silently in
-            # the packed key, so raise loudly instead. The checked column
-            # IS the join key, so it cannot be pruned, and every packed id
-            # flows through sa/sb — the join cannot emit a single result
-            # row before the guard has seen (and rejected) a bad id.
-            idc = F.when((idc >= 0) & (idc < (1 << 31)), idc).otherwise(
-                F.raise_error(
-                    F.concat(
-                        F.lit("pack_ids requires 0 <= id < 2^31, got "),
-                        F.col(id_col).cast("string"),
-                    )
-                ).cast(sizes.schema[id_col].dataType)
-            )
-        sa = sizes.select(idc.alias("id_a"), F.col("n_sh").alias("n_a"))
-        sb = sizes.select(idc.alias("id_b"), F.col("n_sh").alias("n_b"))
-        inter = pair_counts.join(sa, "id_a").join(sb, "id_b")
+            .repartition("id_a", "id_b")
+            .groupBy("id_a", "id_b")
+            .agg(F.count(F.lit(1)).alias("n_inter"))
+        )
+    sa = sizes.select(idc.alias("id_a"), F.col("n_sh").alias("n_a"))
+    sb = sizes.select(idc.alias("id_b"), F.col("n_sh").alias("n_b"))
+    return pair_counts.join(sa, "id_a").join(sb, "id_b")
+
+
+def ngram_jaccard_pairs(
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    shingle_n: int = 2,
+    min_jaccard: float = 0.2,
+    max_doc_frac: float | None = None,
+    max_doc_count: int | None = None,
+    pack_ids: bool = False,
+    dfreq: DataFrame | None = None,
+) -> DataFrame:
+    """Exact n-gram Jaccard similarity for all pairs sharing >= 1 shingle:
+    |A∩B| / (|A|+|B|-|A∩B|) over the `_shingle_overlap` pair counts
+    (inverted-index join, df pruning, `pack_ids` and `dfreq` contracts
+    documented there).
+
+    Hot shingles (stopword n-grams) are the skew killer at scale: a
+    shingle present in f·N docs contributes (f·N)² candidate pairs to ONE
+    join partition. `max_doc_frac` prunes shingles appearing in more than
+    that fraction of documents; a stopword shingle carries ~no similarity
+    signal, so recall loss is negligible while the worst partition
+    shrinks quadratically. Default None = off (exact semantics, matches
+    the SQL oracle).
+
+    CALIBRATION (scaling-probe finding, BASELINE.md round 6): a FRACTION
+    threshold is a corpus-density property, not a constant — on a corpus
+    whose vocabulary grows with size (so per-shingle doc-frequency
+    fractions shrink), a fixed frac stops pruning and the cost reverts
+    toward quadratic (measured alpha 1.48 vs 0.45 at 10x). When the df
+    distribution at the target scale is unknown, prefer `max_doc_count`:
+    an ABSOLUTE posting-length cutoff. A shingle's join cost is
+    (posting length)² regardless of corpus size, so a count cutoff bounds
+    the worst partition absolutely and is scale-invariant by
+    construction."""
+    inter = _shingle_overlap(
+        df, text_col, id_col, shingle_n, max_doc_frac, max_doc_count, pack_ids, dfreq
+    )
     return (
         inter
         .withColumn(
@@ -1459,81 +1487,15 @@ def ngram_containment_pairs(
     quote-inclusion / boilerplate-embedding in pretraining corpora
     (Broder's containment, public resemblance/containment literature).
 
-    Same inverted-index plan as `ngram_jaccard_pairs` (shuffles carry
-    (shingle_hash, id) only; pair counts pre-partitioned by the pair
-    before the ONE HashAggregate), only the final measure differs, so
-    every scale property (and the df-pruning guidance there) carries
-    over. Containment is floor-truncated to 4 decimals (`_trunc` rule)
-    before the threshold compare.
-
-    `dfreq`: optional precomputed (sh, __df) frame (`shingle_dfreq`) for
-    the pruning branch, same contract as ngram_jaccard_pairs — pass the
-    frame the calibration already materialized so the shingle build is
-    not paid twice; it MUST come from the same
-    (df, text_col, id_col, shingle_n)."""
-    if dfreq is not None and max_doc_count is None:
-        raise ValueError(
-            "dfreq was passed but max_doc_count is not set — the "
-            "precomputed document frequencies would be ignored"
-        )
-    sh = shingle_postings(df, text_col, id_col, shingle_n)
-    if max_doc_count is not None:
-        # df-pruning, the jaccard-lattice scale lever (see
-        # ngram_jaccard_pairs): a shingle in d docs contributes d² pairs
-        # to ONE join partition, so dropping df > cutoff shingles shrinks
-        # the worst partition quadratically. Containment is then measured
-        # over the KEPT-shingle universe — sizes too — which the oracle
-        # replays exactly (same rule as the pruned jaccard lattice).
-        if dfreq is None:
-            dfreq = sh.groupBy("sh").agg(F.count(F.lit(1)).alias("__df"))
-        hot = dfreq.filter(F.col("__df") > max_doc_count).select("sh")
-        sh = sh.join(F.broadcast(hot), "sh", "left_anti")
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-    a, b = sh.alias("a"), sh.alias("b")
-    joined = a.join(b, "sh").filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-    if pack_ids:
-        # one 8-byte shuffle key instead of two (same ~20% measured win
-        # and the same long-cast + per-DOC range-guard discipline as
-        # ngram_jaccard_pairs — see the guard comment there)
-        pair_counts = (
-            joined.select(
-                F.shiftleft(F.col(f"a.{id_col}").cast("long"), 32)
-                .bitwiseOR(F.col(f"b.{id_col}").cast("long"))
-                .alias("__pk")
-            )
-            .repartition("__pk")
-            .groupBy("__pk")
-            .agg(F.count(F.lit(1)).alias("n_inter"))
-            .select(
-                F.shiftright("__pk", 32).alias("id_a"),
-                F.col("__pk").bitwiseAND(F.lit((1 << 32) - 1)).alias("id_b"),
-                "n_inter",
-            )
-        )
-    else:
-        pair_counts = (
-            joined.select(
-                F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-            )
-            .repartition("id_a", "id_b")
-            .groupBy("id_a", "id_b")
-            .agg(F.count(F.lit(1)).alias("n_inter"))
-        )
-    idc = F.col(id_col)
-    if pack_ids:
-        idc = F.when((idc >= 0) & (idc < (1 << 31)), idc).otherwise(
-            F.raise_error(
-                F.concat(
-                    F.lit("pack_ids requires 0 <= id < 2^31, got "),
-                    F.col(id_col).cast("string"),
-                )
-            ).cast(sizes.schema[id_col].dataType)
-        )
-    sa = sizes.select(idc.alias("id_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(idc.alias("id_b"), F.col("n_sh").alias("n_b"))
+    Same `_shingle_overlap` pair counts as `ngram_jaccard_pairs`, only the
+    final measure differs, so every scale property (and the df-pruning
+    guidance there) carries over. Containment is floor-truncated to 4
+    decimals (`_trunc` rule) before the threshold compare."""
+    inter = _shingle_overlap(
+        df, text_col, id_col, shingle_n, None, max_doc_count, pack_ids, dfreq
+    )
     return (
-        pair_counts.join(sa, "id_a")
-        .join(sb, "id_b")
+        inter
         .withColumn(
             "containment",
             F.floor(F.col("n_inter") / F.least("n_a", "n_b") * 10000) / 10000,

@@ -33,6 +33,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from nyc_bikeshare_datawarehouse_spark.functions.dedup import spread_pairs
+
 
 def positional_qgrams(col: Column | str, q: int = 2) -> Column:
     """array<struct<g,p>> of the string's overlapping q-grams with their
@@ -160,20 +162,8 @@ def fuzzy_pairs_exhaustive(
         ).alias("__key"),
     )
     cand_short = short_l.join(short_r, "__key").select(left_id, right_id)
-    # ONE exchange dedups AND spreads the candidate stream for the
-    # levenshtein verify (r15, the prefix_jaccard_candidates fusion):
-    # hash-repartition on the pair satisfies the dedup aggregation's
-    # distribution requirement — single complete HashAggregate instead
-    # of distinct's partial agg + exchange + AQE size-coalesce.
-    cand = (
-        cand_gram.unionByName(cand_short)
-        .repartition(
-            left.sparkSession.sparkContext.defaultParallelism,
-            left_id,
-            right_id,
-        )
-        .dropDuplicates()
-    )
+    # the levenshtein verify is CPU-bound: one exchange dedups + spreads
+    cand = spread_pairs(cand_gram.unionByName(cand_short), left_id, right_id)
     ln = left.select(F.col(left_id), F.col(str_col).alias("__sl"))
     rn = right.select(F.col(right_id), F.col(str_col).alias("__sr"))
     return (
@@ -254,21 +244,6 @@ def fuzzy_join(
     return pairs.join(ln, left_id).join(rn, right_id).select(
         left_id, right_id, "s_l", "s_r", "dist"
     )
-
-
-def fuzzy_pairs_distinct(
-    left: DataFrame,
-    right: DataFrame,
-    str_col: str = "name",
-    left_id: str = "id_l",
-    right_id: str = "id_r",
-    k: int = 1,
-    q: int = 2,
-) -> DataFrame:
-    """Round-7..9 name for the distinct-universe lever. Since round 10
-    the lever IS `fuzzy_pairs`' default path (plus banding); this alias
-    stays for API stability and keeps its historical q=2 default."""
-    return fuzzy_pairs(left, right, str_col, left_id, right_id, k=k, q=q)
 
 
 def jaro_winkler_micro(a: str, b: str) -> int:

@@ -28,7 +28,6 @@ from __future__ import annotations
 
 import hashlib
 import io
-import itertools
 import math
 import struct
 import wave
@@ -38,6 +37,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from nyc_bikeshare_datawarehouse_spark.functions import dedup
 
 ASSET_SCHEMA = T.StructType([
     T.StructField("asset_id", T.LongType(), False),
@@ -433,72 +434,37 @@ def phash_near_dup(
     hash_col: str = "phash",
     conjunction: bool = True,
 ) -> DataFrame:
-    """Near-duplicate pairs by pHash Hamming distance via banded LSH
-    over the 64-bit fingerprint, hash-agnostic (images pass the default
-    phash column, audio passes hash_col='afp').
+    """Near-duplicate pairs by pHash Hamming distance, hash-agnostic
+    (images pass the default phash column, audio passes hash_col='afp'):
+    the 64-bit fingerprint goes through `dedup.simhash_candidates` as an
+    8-band signature — the shared banded Hamming join over the DISTINCT-
+    hash universe, then expansion to asset pairs (identical-hash groups
+    surface as hamming-0 pairs) — and an exact Hamming filter.
 
-    conjunction=True (default since r13): join on PAIRS of 8-bit chunks
-    — C(8,2)=28 keys/asset, 2^16-value key space, pigeonhole-lossless
-    for distances <= 6 (<= 6 differing bits touch <= 6 chunks, leaving
-    >= 2 intact chunks whose pair key matches). The previous
-    single-chunk scheme (8 bands of 8 bits, lossless to 7) had only 256
-    possible values per band — in-bucket pairing grows ~N²/2048
-    REGARDLESS of data at billion-asset scale, the same keyspace-capped
-    quadratic the round-12 verdict flagged for simhash banding;
-    conjunction keys keep candidate volume data-driven. Both schemes
-    cover every declared filter (images <= 6, audio <= 4), and because
-    the final Hamming filter is exact, the OUTPUT pair set is identical
-    under either scheme — conjunction=False remains for radius-7 use.
-
-    Scale: the band join shuffles (pair_idx, 16-bit key) rows and
-    verifies candidates with one xor+bit_count; identical-hash cliques
-    are the only quadratic risk, exactly as in SimHash banding."""
+    conjunction=True (default since r13) bands on PAIRS of 8-bit chunks,
+    pigeonhole-lossless for distances <= 6 (<= 6 differing bits touch
+    <= 6 chunks, leaving >= 2 intact chunks whose pair key matches);
+    single-chunk banding is lossless to 7. Both cover every declared
+    filter (images <= 6, audio <= 4), and because the final Hamming
+    filter is exact, the OUTPUT pair set is identical under either
+    scheme — conjunction=False remains for radius-7 use."""
     lossless_to = 6 if conjunction else 7
     if max_hamming > lossless_to:
         raise ValueError(
             f"{'conjunction' if conjunction else '8x8'} banding is lossless "
             f"only for max_hamming <= {lossless_to}"
         )
-    h = hashes.select(F.col(id_col).alias("id"), F.col(hash_col).alias("h"))
-
-    def _chunk(b: int) -> F.Column:
-        # literal per-chunk expressions (shiftright needs an int, not a
-        # lambda-bound Column)
-        return F.shiftright("h", b * 8).bitwiseAND(F.lit(255))
-
-    if conjunction:
-        keys = [
-            F.struct(
-                F.lit(k).alias("band"),
-                (F.shiftleft(_chunk(i), 8) + _chunk(j)).alias("v"),
-            )
-            for k, (i, j) in enumerate(itertools.combinations(range(8), 2))
-        ]
-    else:
-        keys = [
-            F.struct(F.lit(b).alias("band"), _chunk(b).alias("v")) for b in range(8)
-        ]
-    bands = h.select(
-        "id",
-        "h",
-        F.explode(F.array(*keys)).alias("bv"),
-    ).select("id", "h", F.col("bv.band").alias("band"), F.col("bv.v").alias("v"))
-    a = bands.select(
-        F.col("id").alias("id_a"), F.col("h").alias("ha"), "band", "v"
+    pairs = dedup.simhash_candidates(
+        hashes,
+        id_col=id_col,
+        bands=8,
+        sig=F.col(hash_col),
+        sig_bits=64,
+        conjunction=conjunction,
     )
-    b = bands.select(
-        F.col("id").alias("id_b"), F.col("h").alias("hb"), "band", "v"
+    return pairs.filter(F.col("hamming") <= max_hamming).select(
+        "id_a", "id_b", F.col("hamming").cast("int").alias("hamming")
     )
-    cand = (
-        a.join(b, ["band", "v"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "ha", "hb")
-        .distinct()
-    )
-    dist = F.bit_count(F.col("ha").bitwiseXOR(F.col("hb")))
-    return cand.select(
-        "id_a", "id_b", dist.cast("int").alias("hamming")
-    ).filter(F.col("hamming") <= max_hamming)
 
 
 # ------------------------------------------------------------- WAV audio

@@ -28,6 +28,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
+from nyc_bikeshare_datawarehouse_spark.functions.dedup import banded_hamming_join
+
 
 def _vec(col) -> Column:
     c = F.col(col) if isinstance(col, str) else col
@@ -212,10 +214,10 @@ def cosine_near_dup_lsh(
     bands: int = 4,
     min_cosine: float = 0.9,
 ) -> DataFrame:
-    """Embedding near-duplicate pairs: SRP-LSH buckets, then exact cosine
-    verify inside buckets only. Join key is (band, chunk) — small ints —
-    so the shuffle is tiny; the expensive exact cosine runs only on
-    candidate pairs.
+    """Embedding near-duplicate pairs: SRP-LSH candidates from the shared
+    banded Hamming join (`dedup.banded_hamming_join` over the `n_planes`-
+    bit signature, keyed on the vector id), then exact cosine verify on
+    candidate pairs only.
 
     Slim-postings shape (same trick as dedup.ngram_jaccard_pairs): ids
     only through the bucket join and the pair dedup, vectors re-attached
@@ -224,55 +226,12 @@ def cosine_near_dup_lsh(
     exchange shrinks 465 MB -> 7 MB; at 1B x 512-dim the non-slim form
     would shuffle the vector column 2*bands times (~16 TB) versus ~100 GB
     slim — the sf0.1 penalty is the right trade."""
-    width = n_planes // bands
     # explode(array(...)) barrier: stops CollapseProject from inlining the
     # signature expression into every band chunk (see dedup._materialized)
     sig = df.select(
         id_col, F.explode(F.array(srp_signature(vec_col, dim, n_planes))).alias("sig")
     )
-    # SLIM postings: the bucket join and the pair dedup move (band, chunk,
-    # id) only — never the vectors. A dim-d embedding is ~8d bytes; carrying
-    # it through a ×bands exploded self-join and a pair-dedup exchange
-    # multiplies shuffle volume by 2·bands·8d per row. Vectors attach to
-    # the (much smaller) deduped candidate list by id, right before the
-    # exact verify.
-    chunks = sig.select(
-        id_col,
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.shiftright(F.col("sig"), b * width)
-                    .bitwiseAND(F.lit((1 << width) - 1))
-                    .alias("chunk"),
-                )
-                for b in range(bands)
-            ])
-        ).alias("bc"),
-    ).select(id_col, "bc.band", "bc.chunk")
-    a, b = chunks.alias("a"), chunks.alias("b")
-    cand = (
-        a.join(b, on=["band", "chunk"])
-        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
-        # ONE exchange dedups AND spreads (r15, the prefix_jaccard_
-        # candidates fusion): hash-repartition on the pair satisfies the
-        # dedup aggregation's distribution requirement, so Catalyst plans
-        # a single complete HashAggregate — replacing dropDuplicates'
-        # partial-agg+exchange followed by a second full repartition
-        # exchange. The explicit width still matters: AQE would size-
-        # coalesce the two-longs-per-row pair list to a few partitions
-        # and run the CPU-bound zip_with dot on 2 of 32 cores (the
-        # q_jaccard_prefix misprice, CLAUDE.md). Measured 1.08s -> 0.64s
-        # on the sf0.1 candidate stage, output identical.
-        .repartition(
-            df.sparkSession.sparkContext.defaultParallelism, "id_a", "id_b"
-        )
-        .dropDuplicates()
-    )
+    cand = banded_hamming_join(sig, id_col, bands, n_planes)
     # Per-VECTOR norms computed once here (explode(array) barrier stops
     # CollapseProject from re-inlining the aggregate into every pair) —
     # the per-PAIR verify is then a single zip_with dot product. Without

@@ -41,6 +41,7 @@ with If-None-Match) — the read protocol is unchanged.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import shutil
@@ -1567,7 +1568,13 @@ def drop_column(base_dir: str, col: str) -> int:
 def expire_snapshots(base_dir: str, keep_from: int) -> list[int]:
     """Drop manifests below `keep_from` and delete data files no
     surviving manifest references (plus any commit directory left
-    empty). Returns expired versions."""
+    empty). Returns expired versions.
+
+    Idempotent under concurrency: two expiries that overlap (back-to-
+    back sketch folds each expire behind their commit) plan against the
+    same manifests, so either may find a file, manifest or commit
+    directory the other already removed — "already gone" counts as
+    done at every removal site."""
     base_dir = os.path.abspath(base_dir)
     last = latest_version(base_dir)
     if keep_from > last:
@@ -1586,15 +1593,17 @@ def expire_snapshots(base_dir: str, keep_from: int) -> list[int]:
     commit_dirs: set[str] = set()
     for v, manifest in expired.items():
         for f in manifest["files"]:
-            if f not in live and os.path.exists(f):
-                os.remove(f)
+            if f not in live:
+                with contextlib.suppress(FileNotFoundError):
+                    os.remove(f)
             # the commit directory is the top-level entry under base_dir
             # that holds the file (a uuid staging dir, or v{n} in tables
             # written before per-writer staging)
             rel = os.path.relpath(f, base_dir).split(os.sep)
             if len(rel) > 1 and rel[0] != os.pardir:
                 commit_dirs.add(os.path.join(base_dir, rel[0]))
-        os.remove(_manifest_path(base_dir, v))
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(_manifest_path(base_dir, v))
     # long-lived tables: reap commit dirs the dead-file sweep emptied
     # (parquet writes leave _SUCCESS/.crc sidecars no manifest names).
     # RECURSIVE emptiness check — a partitioned commit nests its files
@@ -1603,5 +1612,6 @@ def expire_snapshots(base_dir: str, keep_from: int) -> list[int]:
     # (e.g. a later snapshot still referencing them).
     for d in commit_dirs:
         if os.path.isdir(d) and not _leaf_files(d):
-            shutil.rmtree(d)
+            with contextlib.suppress(FileNotFoundError):
+                shutil.rmtree(d)
     return sorted(expired)

@@ -542,12 +542,6 @@ class TestDedup:
         # doc5 differs in last token: 7 of 8 bigrams shared -> 7/9
         assert got[(1, 5)] == math.floor(7 / 9 * 10000) / 10000
 
-    def test_ngram_jaccard_size_prune_is_exact(self, spark, docs):
-        plain = dedup.ngram_jaccard_pairs(docs, shingle_n=2, min_jaccard=0.1)
-        pruned = dedup.ngram_jaccard_pairs(docs, shingle_n=2, min_jaccard=0.1, size_prune=True)
-        key = lambda r: (r["id_a"], r["id_b"], r["jaccard"])  # noqa: E731
-        assert sorted(map(key, plain.collect())) == sorted(map(key, pruned.collect()))
-
     def test_ngram_jaccard_hot_shingle_pruning(self, spark):
         # one stopword bigram ("stop word") in EVERY doc: unpruned, all
         # C(12,2) pairs are candidates through that single hot posting list

@@ -266,17 +266,23 @@ class TestPhash:
             for bit in range(k):
                 h ^= 1 << (bit * 7)      # spread flips across bands
             hashes.append((k, h))
+        # an identical-hash clique (the within-group hamming-0 expansion)
+        # plus one asset 2 bits from it; ~base is 56+ bits from the rest
+        hashes += [(9, ~base), (10, ~base), (11, ~base), (12, ~base ^ (1 << 3) ^ (1 << 40))]
         df = spark.createDataFrame(hashes, "asset_id long, phash long")
         from nyc_bikeshare_datawarehouse_spark.functions.multimodal import phash_near_dup
-        got = {(r["id_a"], r["id_b"]): r["hamming"]
-               for r in phash_near_dup(df, max_hamming=6).collect()}
         brute = {}
         for (ia, ha), (ib, hb) in itertools.combinations(hashes, 2):
             d = bin((ha ^ hb) & ((1 << 64) - 1)).count("1")
             if d <= 6:
                 brute[(min(ia, ib), max(ia, ib))] = d
-        assert got == brute
+        for conjunction in (True, False):
+            got = {(r["id_a"], r["id_b"]): r["hamming"]
+                   for r in phash_near_dup(
+                       df, max_hamming=6, conjunction=conjunction).collect()}
+            assert got == brute
         assert (0, 6) in got and (0, 7) not in got  # threshold edge
+        assert got[(9, 11)] == 0 and got[(10, 12)] == 2  # clique + neighbor
 
     def test_max_hamming_above_banding_guarantee_rejected(self, spark):
         from nyc_bikeshare_datawarehouse_spark.functions.multimodal import phash_near_dup

@@ -471,6 +471,19 @@ def test_phash_near_dup_decodes_pixels_once(spark, sf_dir):
     assert "Scan ExistingRDD" in plan
 
 
+def test_minhash_portable_vocab_join_broadcasts(spark, sf_dir):
+    # the per-shingle md5 frame is vocabulary-sized, so AQE must
+    # broadcast it into the postings join (portable_minhash_parts). Only
+    # the FINAL plan counts: the initial plan still shows the sort-merge
+    # join AQE replaces at runtime, and toString prints both
+    df = QUERIES["q_minhash_portable"](spark, sf_dir)
+    df.collect()  # finalize THIS queryExecution's adaptive plan
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+    joins = re.findall(r"(\w+Join) \[s#\d+\], \[s#\d+\]", final)
+    assert joins and set(joins) == {"BroadcastHashJoin"}
+
+
 def test_tfidf_runtime_reuses_postings_exchanges(spark, sf_dir):
     # the weighted-postings frame feeds norms AND both join sides; the
     # initial plan triples the subtree but AQE must dedup the identical

@@ -299,6 +299,41 @@ class TestConcurrentCommits:
         assert versioned.write_snapshot(df, base) == 4  # rebased past v3
         assert versioned.read_snapshot(spark, base).count() == 60
 
+    def test_overlapping_expiries_both_succeed(self, spark, tmp_path, monkeypatch):
+        # two folds committing back to back both expire behind their
+        # commit: the second sweep runs INSIDE the first one's first file
+        # removal, so the first finds that file, the manifests and the
+        # commit directory already gone — neither sweep may raise
+        base = str(tmp_path / "t")
+        versioned.write_snapshot(spark.range(0, 10), base)
+        versioned.write_snapshot(spark.range(10, 20), base, mode="overwrite")
+        versioned.write_snapshot(spark.range(20, 30), base)
+        versioned.write_snapshot(spark.range(30, 40), base)
+        live = {v: _ids(versioned.read_snapshot(spark, base, v)) for v in (3, 4)}
+        dead = [
+            f
+            for f in _manifest(base, 1)["files"]
+            if f not in set(_manifest(base, 3)["files"])
+        ]
+        real_remove = os.remove
+        nested: list[list[int] | None] = []
+
+        def racing_remove(path):
+            if not nested:
+                nested.append(None)
+                nested[0] = versioned.expire_snapshots(base, keep_from=3)
+            real_remove(path)
+
+        monkeypatch.setattr(versioned.os, "remove", racing_remove)
+        assert versioned.expire_snapshots(base, keep_from=3) == [1, 2]
+        monkeypatch.undo()
+        assert nested == [[1, 2]]
+        assert dead and not any(os.path.exists(f) for f in dead)
+        for v in (1, 2):
+            assert not os.path.exists(versioned._manifest_path(base, v))
+        for v, ids in live.items():
+            assert _ids(versioned.read_snapshot(spark, base, v)) == ids
+
 
 class TestWherePushdown:
     def test_native_filter_reaches_parquet_scan(self, spark, tmp_path):

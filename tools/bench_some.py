@@ -7,7 +7,9 @@ Usage:
 Reuses bench.py's corpus prep (multi-file .benchdata copy), JVM + Arrow
 python-worker warm-ups, and the noop-sink best-of-N timing, so numbers
 here are directly comparable to BENCH_DETAIL.json rows. Prints one line
-per query plus a total; nothing here feeds the driver contract.
+per query plus a total; nothing here feeds the driver contract. The total
+line carries the host's busy and steal CPU fractions over the timed phase:
+on a shared VM, steal says whether two runs are comparable at all.
 """
 
 from __future__ import annotations
@@ -20,6 +22,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench
+from perfbench.host import cpu_fractions, cpu_times
 from nyc_bikeshare_datawarehouse_spark.plans.queries import QUERIES
 from nyc_bikeshare_datawarehouse_spark.session import get_spark
 
@@ -50,6 +53,7 @@ def main() -> None:
     spark.range(64).repartition(32).mapInPandas(lambda it: it, "id long").count()
 
     total = 0.0
+    ticks0 = cpu_times()
     t0 = time.perf_counter()
     for name in args.names:
         spark.sparkContext.setJobDescription(name)
@@ -57,7 +61,12 @@ def main() -> None:
         spark.sparkContext.setJobDescription(None)
         total += sec
         print(f"{args.tag}{name:36s} {sec:8.3f}s", flush=True)
-    print(f"{args.tag}TOTAL {total:8.3f}s  wall {time.perf_counter() - t0:.1f}s")
+    wall = time.perf_counter() - t0
+    host = cpu_fractions(ticks0, cpu_times())
+    print(
+        f"{args.tag}TOTAL {total:8.3f}s  wall {wall:.1f}s  "
+        f"busy {host['busy_frac']:.3f}  steal {host['steal_frac']:.3f}"
+    )
 
 
 if __name__ == "__main__":
