@@ -292,19 +292,14 @@ EXTENDED = [
 def prepare_parallel_corpus(spark, sf_dir: str) -> tuple[str, float]:
     """Rewrite the single-row-group corpus into a multi-file copy (cached
     in .benchdata/) so scans parallelize across cores like a real
-    multi-file layout. Content-identical; layout-only. events.ts is
-    rewritten as whatever this Spark reads natively (ns long under the
-    legacy conf, TIMESTAMP_NTZ on ≥4.1); readers._load_events normalizes
-    either representation identically on both layouts."""
+    multi-file layout. Content-identical; layout-only: every column keeps
+    its type, so the copy reads with readers.TABLE_SCHEMAS like the raw
+    corpus (pinned in tests/test_readers.py)."""
     dest = os.path.join(REPO, ".benchdata", os.path.basename(sf_dir.rstrip("/")))
     marker = os.path.join(dest, "_COPIED")
     if os.path.exists(marker):
         return dest, 0.0
     t0 = time.perf_counter()
-    try:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    except Exception:
-        pass
     for name in TESTDATA_TABLES:
         df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
         n_files = max(1, min(32, df.count() // 250))

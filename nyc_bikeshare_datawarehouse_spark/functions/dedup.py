@@ -42,12 +42,10 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from nyc_bikeshare_datawarehouse_spark.functions.text import shingles, token_set_fingerprint, tokens
 
-#: broadcast gate for the iterative CC round lookups (cluster_duplicates,
-#: graph.two_star_components): a checkpointed edge list at or under this
-#: many rows bounds every node-sized lookup frame to ~16 B/row — 5M rows
-#: ≈ 80 MB broadcast, comfortably inside the low-GB broadcast convention
-#: (jaccard_verify_pairs). Above it the rounds keep their shuffle joins;
-#: results are identical either way (join strategy only).
+#: one-task gate of `cluster_duplicates`: a directed edge list at or under
+#: this many rows is solved in a single task (two int64 arrays of 5M rows
+#: are 80 MB, plus numpy temporaries of the same order); above it the
+#: distributed pointer-jumping rounds run.
 _CC_BROADCAST_MAX_EDGES = 5_000_000
 
 
@@ -1014,26 +1012,12 @@ def jaccard_verify_pairs(
     )
 
 
-def iteration_checkpoint(df: DataFrame, reliable: bool) -> DataFrame:
-    """Per-round lineage truncation for iterative algorithms (CC, two-
-    star, PageRank): localCheckpoint by default (fast, executor-block
-    storage), `reliable=True` for DFS checkpoints that survive executor
-    loss on a real cluster (set sparkContext.setCheckpointDir first).
-    Shared by cluster_duplicates and graph.two_star_components so the
-    durability contract stays in one place."""
-    if reliable:
-        return df.checkpoint(eager=True)
-    return df.localCheckpoint(eager=True)
-
-
 def rejoin_singleton_labels(
     all_ids: DataFrame, labels: DataFrame, id_col: str
 ) -> DataFrame:
     """Attach component labels to the FULL id universe: ids in no edge
     keep their own id as cluster_id. `labels` carries (node,
-    cluster_id); the contract (and column names) are shared by both CC
-    implementations — the hash-gate equivalence of q_cc_twostar vs
-    q_dedup_clusters_pruned depends on this tail staying identical."""
+    cluster_id)."""
     return all_ids.select(F.col(id_col)).join(
         labels, all_ids[id_col] == labels.node, "left"
     ).select(
@@ -1042,92 +1026,63 @@ def rejoin_singleton_labels(
     )
 
 
-def cluster_duplicates(
-    pairs: DataFrame,
-    all_ids: DataFrame,
-    id_col: str = "doc_id",
-    max_iters: int = 20,
-    reliable_checkpoint: bool = False,
-) -> DataFrame:
-    """Connected components over a near-duplicate pair list: every node
-    gets `cluster_id` = min id reachable through pair edges (singletons
-    keep their own id). THE final dedup step — candidates (LSH) →
-    verified pairs (Jaccard/cosine) → components → keep one per cluster.
+def _min_labels_one_task(edges: DataFrame) -> DataFrame:
+    """(node, cluster_id = min id of its component) over a checkpointed
+    directed edge list holding both directions, solved in ONE task: the
+    task reads every edge partition (`coalesce(1)`: checkpointed blocks
+    need no shuffle) and numpy runs min-label propagation with full
+    pointer jumping to a fixpoint. No Spark job runs until the result is
+    consumed, and the solve has no round cap (each pass lowers a label or
+    stops). Ids keep the edge list's type."""
+    id_type = edges.schema["src"].dataType.simpleString()
 
-    Iterative min-label propagation with POINTER-JUMPING (path halving,
-    r15): each round takes every node's min over its neighbors' labels
-    and its own, then compresses once through label := label(label) —
-    the shortcut lets a min travel two hops per round, so convergence is
-    O(log diameter) rounds instead of O(diameter) (pinned on a 200-node
-    path in tests). Round shape (r15, measured 6.7s -> 4.8s on the
-    q_dedup_clusters_pruned lattice at sf0.1):
-    - ONE shuffle aggregate replaces the old join+agg+join-back: the
-      neighbor-label stream UNIONS the self-label stream and a single
-      groupBy(node) takes both the new min and (via a null-padded
-      carry column) the old label;
-    - the old join-based changed-probe job is gone — the carried old
-      label makes `changed` a filter over the already-checkpointed
-      round output (the probe reads executor-cached blocks, no joins);
-    - the edge list is built by exploding each pair into both
-      directions in ONE pass (the old two-branch union re-executed
-      everything above `pairs`' last exchange twice — for a verify-
-      stage input that was the array_intersect CPU, paid twice).
-    Lineage is truncated per round, without which the plan doubles
-    every iteration and the job dies long before 100 TB does.
+    def solve(batches):
+        import numpy as np
+        import pandas as pd
 
-    Checkpoint durability: the default `localCheckpoint` stores blocks on
-    executors ONLY — fast (no DFS round-trip), but on a real cluster a
-    lost executor makes the truncated lineage unrecoverable and fails the
-    job. For cluster runs set `reliable_checkpoint=True` and configure
-    `spark.sparkContext.setCheckpointDir(<dfs path>)` first: each round
-    then writes to the checkpoint dir and survives executor loss. On
-    local[n] (one JVM) the distinction is moot, so local stays default.
+        frames = list(batches)
+        if not frames:
+            return
+        src = np.concatenate([f["src"].to_numpy(np.int64) for f in frames])
+        dst = np.concatenate([f["dst"].to_numpy(np.int64) for f in frames])
+        # dense ids in sorted order, so the min index IS the min node id
+        nodes, inv = np.unique(np.concatenate([src, dst]), return_inverse=True)
+        u, v = inv[: src.size], inv[src.size:]
+        lab = np.arange(nodes.size)
+        while True:
+            prev = lab
+            lab = prev.copy()
+            np.minimum.at(lab, u, prev[v])
+            jumped = lab[lab]
+            while not np.array_equal(jumped, lab):
+                lab, jumped = jumped, jumped[jumped]
+            if np.array_equal(lab, prev):
+                break
+        yield pd.DataFrame({"node": nodes, "cluster_id": nodes[lab]})
 
-    r16 round shape: when the edge list is small enough (gated on the
-    MEASURED post-checkpoint edge count, `_CC_BROADCAST_MAX_EDGES`), the
-    per-round label lookup sides are broadcast — checkpointed RDD scans
-    report UnknownPartitioning and default (huge) size stats, so the
-    planner would otherwise SMJ every round: two exchanges + two sorts
-    of the edge stream per round for a lookup table that is only
-    node-sized. Broadcasting both lookups leaves ONE shuffle per round
-    (the neighbor-min aggregate, irreducible) — measured loop 5.4 s ->
-    4.3 s at sf0.1 (5 rounds), plan identical in output. Above the gate
-    (labels can approach |edges| rows; 5M rows ~ 80 MB broadcast is the
-    comfort bound, the jaccard_verify_pairs convention) the SMJ rounds
-    stay — correctness is unaffected either way.
-    """
-    def _ckpt(df: DataFrame) -> DataFrame:
-        return iteration_checkpoint(df, reliable_checkpoint)
-
-    edges = _ckpt(
-        # materialize ONCE: `pairs` is typically an expensive LSH/jaccard
-        # pipeline, and without this every iteration re-runs it from
-        # scratch; the explode emits both directions in a single pass
-        # over `pairs` (a two-branch union is a diverged subplan — only
-        # the subtree below the last exchange is reused, so a verify-
-        # stage pair list would pay its per-pair CPU twice)
-        pairs.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
-                    F.struct(F.col("id_b").alias("src"), F.col("id_a").alias("dst")),
-                )
-            ).alias("__e")
-        ).select("__e.src", "__e.dst")
+    return edges.coalesce(1).mapInPandas(solve, "node long, cluster_id long").select(
+        F.col("node").cast(id_type).alias("node"),
+        F.col("cluster_id").cast(id_type).alias("cluster_id"),
     )
+
+
+def _min_labels_rounds(edges: DataFrame, max_iters: int, ckpt) -> DataFrame:
+    """Distributed form of `_min_labels_one_task` for edge lists above the
+    one-task gate: min-label propagation with POINTER-JUMPING (path
+    halving), one checkpointed round at a time. Each round takes every
+    node's min over its neighbors' labels and its own, then compresses
+    once through label := label(label), so a min travels two hops per
+    round: O(log diameter) rounds (pinned on a 200-node path in tests).
+    Round shape: ONE shuffle aggregate over the union of the neighbor-
+    label and self-label streams takes both the new min and (via a
+    null-padded carry column) the old label, so the fixpoint probe is a
+    filter over the checkpointed round output. Raises RuntimeError when
+    labels still move after `max_iters` update rounds."""
     # iterate ONLY over edge-connected nodes: a node in no pair can never
-    # change its label, and at scale near-dups are a small fraction of the
-    # corpus — so the per-round joins run on |edge nodes|, not |corpus|.
-    # Singletons rejoin at the end via a left join against all_ids.
+    # change its label; singletons rejoin at the end
     labels = edges.select(F.col("src").alias("node")).distinct().withColumn(
         "cluster_id", F.col("node")
     )
-    # broadcast gate: edges are checkpointed, so this count reads cached
-    # blocks (no recompute); |labels| <= |edges| rows, so the edge count
-    # soundly bounds the broadcast build size
-    bcast = edges.count() <= _CC_BROADCAST_MAX_EDGES
-    _bc = F.broadcast if bcast else (lambda df: df)
-    converged = False
     # max_iters counts label-UPDATE rounds; a graph whose last update lands
     # exactly on round max_iters is already converged, but the changed==0
     # probe that proves it runs inside the next round — so run up to
@@ -1137,7 +1092,7 @@ def cluster_duplicates(
         # aggregate: neighbor stream carries __old = null, the self
         # stream carries __old = current label, so min(__old) (nulls
         # ignored) recovers the pre-round label for the changed test
-        contrib = edges.join(_bc(labels), edges.dst == labels.node).select(
+        contrib = edges.join(labels, edges.dst == labels.node).select(
             F.col("src").alias("node"),
             "cluster_id",
             F.lit(None).cast("long").alias("__old"),
@@ -1153,22 +1108,15 @@ def cluster_duplicates(
                 F.min("__old").alias("__old"),
             )
         )
-        # path halving: one label-of-label lookup per round. The lookup
-        # side is unique-keyed (node is prop's grouping key), so a hot
-        # component label is a benign build-side-unique join, not a
-        # skewed fan-out. lab2 re-states the prop subtree (agg joined
-        # back to itself — the diverged-subplan shape CLAUDE.md flags);
-        # the duplicated cost is bounded because the union-aggregate's
-        # shuffle exchange is identical on both sides and AQE's
-        # ReuseExchange dedups it — only the post-exchange final
-        # aggregate runs twice (ADVICE r15: assumption now stated).
-        # Under the broadcast gate the lab2 side is the broadcast build,
-        # which reuses that same exchange.
+        # path halving: one label-of-label lookup per round. lab2 re-states
+        # the prop subtree (agg joined back to itself); AQE's ReuseExchange
+        # dedups the identical union-aggregate exchange, so only the final
+        # aggregate runs twice
         lab2 = prop.select(
             F.col("node").alias("__n2"), F.col("cluster_id").alias("__l2")
         )
-        new_labels = _ckpt(
-            prop.join(_bc(lab2), prop.cluster_id == F.col("__n2"), "left")
+        new_labels = ckpt(
+            prop.join(lab2, prop.cluster_id == F.col("__n2"), "left")
             .select(
                 "node",
                 F.coalesce(F.col("__l2"), F.col("cluster_id")).alias("cluster_id"),
@@ -1177,23 +1125,71 @@ def cluster_duplicates(
                 ).alias("__chg"),
             )
         )
-        # fixpoint probe: a filter over the checkpointed round output —
-        # no joins, no recompute; limit(1) short-circuits
         changed = new_labels.filter("__chg").limit(1).count()
         labels = new_labels.drop("__chg")
         if changed == 0:
-            converged = True
-            break
-    if not converged:
-        # a component whose label still moves after max_iters rounds would
-        # get WRONG cluster ids silently. Fail loudly; callers with known-
-        # deep graphs raise max_iters (convergence is O(log diameter)
-        # rounds of min-label propagation with path halving).
-        raise RuntimeError(
-            f"cluster_duplicates did not converge in {max_iters} iterations; "
-            "a component needs more rounds — raise max_iters"
-        )
-    # rejoin singletons: every id not in any edge keeps its own label
+            return labels
+    # a component whose label still moves after max_iters rounds would
+    # get WRONG cluster ids silently: fail loudly instead
+    raise RuntimeError(
+        f"cluster_duplicates did not converge in {max_iters} iterations; "
+        "a component needs more rounds — raise max_iters"
+    )
+
+
+def cluster_duplicates(
+    pairs: DataFrame,
+    all_ids: DataFrame,
+    id_col: str = "doc_id",
+    max_iters: int = 20,
+    reliable_checkpoint: bool = False,
+) -> DataFrame:
+    """Connected components over a near-duplicate pair list: every node
+    gets `cluster_id` = min id reachable through pair edges (singletons
+    keep their own id). THE final dedup step — candidates (LSH) →
+    verified pairs (Jaccard/cosine) → components → keep one per cluster
+    — and the engine's one connected-components implementation
+    (graph.two_star_components calls it).
+
+    The pair list is materialized ONCE as a directed edge list holding
+    both directions (one explode pass over `pairs`, which is typically an
+    expensive LSH/verify pipeline) and counted. At or under
+    `_CC_BROADCAST_MAX_EDGES` directed edges the graph is solved in one
+    task (`_min_labels_one_task`): building the result runs only the
+    checkpoint and the count, whatever the graph's shape. Above it the
+    distributed pointer-jumping rounds run (`_min_labels_rounds`), one
+    checkpoint per round, and `max_iters` caps them (RuntimeError past
+    it); the one-task solve has no round cap.
+
+    Checkpoint durability: the default `localCheckpoint` stores blocks on
+    executors ONLY — fast (no DFS round-trip), but on a real cluster a
+    lost executor makes the truncated lineage unrecoverable and fails the
+    job. For cluster runs set `reliable_checkpoint=True` and configure
+    `spark.sparkContext.setCheckpointDir(<dfs path>)` first. On local[n]
+    (one JVM) the distinction is moot, so local stays default.
+    """
+    def ckpt(df: DataFrame) -> DataFrame:
+        if reliable_checkpoint:
+            return df.checkpoint(eager=True)
+        return df.localCheckpoint(eager=True)
+
+    edges = ckpt(
+        pairs.select(
+            F.explode(
+                F.array(
+                    F.struct(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
+                    F.struct(F.col("id_b").alias("src"), F.col("id_a").alias("dst")),
+                )
+            ).alias("__e")
+        ).select("__e.src", "__e.dst")
+    )
+    # edges are checkpointed, so this count reads cached blocks
+    if edges.count() <= _CC_BROADCAST_MAX_EDGES:
+        # the labels are node-sized and under the gate (~16 B a row), so
+        # they ride a broadcast and the corpus-sized all_ids never shuffles
+        labels = F.broadcast(_min_labels_one_task(edges))
+    else:
+        labels = _min_labels_rounds(edges, max_iters, ckpt)
     return rejoin_singleton_labels(all_ids, labels, id_col)
 
 

@@ -274,9 +274,8 @@ def shortest_paths(
     only add nodes or lower existing distances, so the O(1)-row
     (count, sum) fingerprint is a sound fixpoint test on its own —
     count equal means no additions, and with every per-node value ≤ its
-    predecessor an equal sum forces equality everywhere. No exact
-    set-difference confirmation is needed (unlike two_star_components,
-    whose edge rewrites are not monotone).
+    predecessor an equal sum forces equality everywhere, so no exact
+    set-difference confirmation is needed.
 
     Scale: each round is one join keyed on node id + one min-aggregate
     over state ∪ extensions; state ≤ |V| rows of two longs, rounds ≤
@@ -405,134 +404,13 @@ def two_star_components(
     max_iters: int = 50,
     reliable_checkpoint: bool = False,
 ) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14 — public literature): every node gets `cluster_id` = the
-    min id in its component, the SAME contract as
-    dedup.cluster_duplicates — but convergence is O(log²) rounds in the
-    component SIZE (O(log) observed). Since r15 cluster_duplicates'
-    propagation also pointer-jumps (O(log diameter) rounds), so the
-    remaining difference is the per-round working set: two-star rewrites
-    the EDGE list toward star graphs (rounds shrink it), propagation
-    keeps the full label+edge frames live every round. ~15 two-star
-    rounds on a 200-node path (pinned in tests).
+    """Connected components under the name of the alternating large-star /
+    small-star algorithm (Kiveris et al., "Connected Components in
+    MapReduce and Beyond", SoCC'14), whose round loop this engine used to
+    carry: every node gets `cluster_id` = the min id in its component.
+    It is now a thin wrapper over the engine's one CC implementation,
+    `dedup.cluster_duplicates` (a one-task solve under its edge gate,
+    pointer-jumping rounds capped by `max_iters` above it)."""
+    from nyc_bikeshare_datawarehouse_spark.functions.dedup import cluster_duplicates
 
-    Each round is two grouped-min aggregates + joins over the EDGE list
-    only (two longs per row — never the corpus); edges are checkpointed
-    per round (the iterative-lineage rule), and the fixpoint test is an
-    O(1)-row fingerprint aggregate (count + xxhash sum), not a full
-    set-difference. The fixpoint is the star graph of every component
-    (centers = component minima), so labels fall out of the final edge
-    list directly; singletons rejoin via all_ids.
-
-    Equivalence with cluster_duplicates is hypothesis-tested on random
-    graphs; the declared q_cc_twostar proves it against the recursive-
-    CTE SQL oracle through the hash gate."""
-    from nyc_bikeshare_datawarehouse_spark.functions import dedup as dedup_mod
-    from nyc_bikeshare_datawarehouse_spark.functions.dedup import (
-        iteration_checkpoint,
-        rejoin_singleton_labels,
-    )
-
-    def _ckpt(df: DataFrame) -> DataFrame:
-        return iteration_checkpoint(df, reliable_checkpoint)
-
-    def _canon(df: DataFrame, dedupe: bool = True) -> DataFrame:
-        out = (
-            df.select(
-                F.least("x", "y").alias("lo"), F.greatest("x", "y").alias("hi")
-            )
-            .filter(F.col("lo") != F.col("hi"))
-        )
-        return out.distinct() if dedupe else out
-
-    def _fingerprint(edges: DataFrame):
-        # sum in decimal(38,0): a long sum of 2^63-scale hashes overflows
-        # (ANSI mode raises); decimal is exact far past any edge count
-        row = edges.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.xxhash64("lo", "hi").cast("decimal(38,0)")).alias("h"),
-        ).head()
-        return (row["n"], row["h"])
-
-    edges = _ckpt(
-        _canon(
-            pairs.select(F.col("id_a").alias("x"), F.col("id_b").alias("y"))
-        )
-    )
-    fp = _fingerprint(edges)
-    # broadcast gate (r16, the cluster_duplicates round rule): the
-    # per-round min-lookup frames mu/mb are node-sized, but checkpointed
-    # edge scans report UnknownPartitioning + default (huge) size stats,
-    # so the planner SMJs every round — two extra exchanges + sorts of
-    # the edge stream per round. Edge count only shrinks across two-star
-    # rounds (each rewrite emits ≤ one edge per (u,v) of a smaller star
-    # graph), so gating once on the initial fingerprint count is sound;
-    # results are identical either way (join strategy only). Measured
-    # loop 7.7 s -> 4.4 s at sf0.1.
-    bcast = fp[0] <= dedup_mod._CC_BROADCAST_MAX_EDGES
-    _bc = F.broadcast if bcast else (lambda df: df)
-    converged = False
-    # max_iters counts edge-REWRITE rounds; a graph whose last rewrite
-    # lands exactly on round max_iters is already converged, but the
-    # fingerprint probe that proves it runs inside the next round — so
-    # run up to max_iters + 1 rounds (the cluster_duplicates rule)
-    for _ in range(max_iters + 1):
-        # large-star: connect every strictly-larger neighbor of u to
-        # m = min(N(u) ∪ {u}) — m <= u < v, so (m, v) is already canonical
-        sym = edges.select(F.col("lo").alias("u"), F.col("hi").alias("v")).unionByName(
-            edges.select(F.col("hi").alias("u"), F.col("lo").alias("v"))
-        )
-        mu = sym.groupBy("u").agg(F.min("v").alias("__mv")).select(
-            "u", F.least(F.col("__mv"), F.col("u")).alias("m")
-        )
-        ls = (
-            sym.join(_bc(mu), "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("m").alias("x"), F.col("v").alias("y"))
-        )
-        # mid-round canon WITHOUT the distinct (r15): duplicate (lo, hi)
-        # rows are harmless downstream — min aggregates ignore them and
-        # the round-final canon dedups — and |ls| is bounded by the
-        # directed edge count (one row per (u, v)), never quadratic, so
-        # skipping the extra shuffle is safe at any scale (measured
-        # ~1.3s off the sf0.1 loop; output pinned identical in tests)
-        ls = _canon(ls, dedupe=False)
-        # small-star on the canonical (lo < hi) orientation: attach hi and
-        # all of its smaller neighbors to m = min of those neighbors
-        mb = ls.groupBy("hi").agg(F.min("lo").alias("m"))
-        e1 = mb.select(F.col("hi").alias("x"), F.col("m").alias("y"))
-        e2 = (
-            ls.join(_bc(mb), "hi")
-            .filter(F.col("lo") != F.col("m"))
-            .select(F.col("lo").alias("x"), F.col("m").alias("y"))
-        )
-        new_edges = _ckpt(_canon(e1.unionByName(e2)))
-        new_fp = _fingerprint(new_edges)
-        if new_fp == fp:
-            # the fingerprint is a SUM — commutative deltas could cancel.
-            # Confirm with ONE exact set-difference, paid only at the
-            # (single) matching round: both sides are distinct canonical
-            # sets with equal counts, so one-direction emptiness proves
-            # set equality. A silent collision would otherwise read
-            # labels off a non-star edge set with no error.
-            if new_edges.exceptAll(edges).limit(1).count() == 0:
-                edges = new_edges
-                converged = True
-                break
-        edges = new_edges
-        fp = new_fp
-    if not converged:
-        raise RuntimeError(
-            f"two_star_components did not converge in {max_iters} iterations "
-            "(expected O(log n) rounds — raise max_iters)"
-        )
-    # fixpoint = star graphs: every edge is (center, member), center = min
-    labels = (
-        edges.select(F.col("hi").alias("node"), F.col("lo").alias("cluster_id"))
-        .unionByName(
-            edges.select(F.col("lo").alias("node"), F.col("lo").alias("cluster_id"))
-        )
-        .distinct()
-    )
-    return rejoin_singleton_labels(all_ids, labels, id_col)
+    return cluster_duplicates(pairs, all_ids, id_col, max_iters, reliable_checkpoint)

@@ -5173,10 +5173,9 @@ ORACLES["q_incremental_dedup_pruned"] = """
 """
 
 
-# Two-star CC: SAME edge set and SAME component contract as
-# q_dedup_clusters_pruned — the oracle is reused verbatim, so the hash
-# gate proves algorithmic equivalence of the two CC implementations on
-# real pair data.
+# q_cc_twostar: SAME edge set and SAME component contract as
+# q_dedup_clusters_pruned (graph.two_star_components wraps
+# dedup.cluster_duplicates) — the oracle is reused verbatim.
 ORACLES["q_cc_twostar"] = ORACLES["q_dedup_clusters_pruned"]
 
 

@@ -2691,8 +2691,8 @@ def q_multimodal_dedup(spark, sf_dir):
     pays one banded join over the DISTINCT-SIGNATURE universe and
     contributes connectivity-equivalent thinned edges (r15 — see the
     inline note; the full Hamming<=1 pair set and the thinned set have
-    identical components); components are two_star_components
-    (O(log n) rounds, checkpointed). Every edge family here is
+    identical components); components come from
+    dedup.cluster_duplicates (one-task solve). Every edge family here is
     engine-portable, so the DuckDB oracle replays the full composition
     — star groups, the bit-exact simhash lattice, recursive-CTE CC —
     and a green row proves modality edges merged into exactly the
@@ -2747,7 +2747,7 @@ def q_multimodal_dedup(spark, sf_dir):
         .unionByName(near_star.select(F.col("id_a"), F.col("id_b")))
         .unionByName(near_cross)
     )
-    comp = graph.two_star_components(edges, ids, "doc_id")
+    comp = dedup.cluster_duplicates(edges, ids, "doc_id", max_iters=50)
     return (
         comp.groupBy("cluster_id")
         .agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
@@ -2762,7 +2762,8 @@ def q_multimodal_dedup_engine(spark, sf_dir):
     from DCT pHash (Hamming <= 6), audio edges from the Haitsma-Kalker
     energy fingerprint (Hamming <= 4) — both through the banded join —
     and text edges from xxhash MinHash-LSH candidates verified at
-    est_jaccard >= 0.7, composed into one two-star component set.
+    est_jaccard >= 0.7, composed into one component set
+    (dedup.cluster_duplicates).
     Rows-only (deterministic) like every engine-hash member: DCT and
     the WAV energy walk have no SQL form; the portable-edge twin above
     carries the hash check for the composition itself. The two
@@ -2792,7 +2793,7 @@ def q_multimodal_dedup_engine(spark, sf_dir):
         .select("id_a", "id_b")
     )
     edges = image_e.unionByName(audio_e).unionByName(text_e)
-    comp = graph.two_star_components(edges, ids, "doc_id")
+    comp = dedup.cluster_duplicates(edges, ids, "doc_id", max_iters=50)
     return (
         comp.groupBy("cluster_id")
         .agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
@@ -2858,8 +2859,8 @@ def q_dedup_pipeline(spark, sf_dir):
     portable MinHash-LSH candidates → exact-Jaccard VERIFY on candidates
     only → connected components → APPLY (each cluster's min-id document
     survives). Every stage is the scale form: banded bucket join on
-    (band, band_sig), id-keyed verify joins, edge-nodes-only CC with
-    per-round checkpoints, left-semi apply. The oracle replays the exact
+    (band, band_sig), id-keyed verify joins, edge-nodes-only CC (one-task
+    solve under dedup.cluster_duplicates' edge gate), left-semi apply. The oracle replays the exact
     lattice in DuckDB — md5 min-hashes, band signatures, candidate-
     restricted Jaccard, recursive-CTE reachability — end to end."""
     d = _t(spark, sf_dir, "documents")
@@ -3483,7 +3484,7 @@ def q_embed_dedup_pipeline(spark, sf_dir):
     cluster's min-id vector survives). Every stage is the scale form:
     banded (band, chunk) bucket join moving ids only (vectors re-attach by
     id before the verify — plan-pinned in tests/test_plans.py), edge-
-    nodes-only CC with per-round checkpoints, left-semi apply. The
+    nodes-only CC (dedup.cluster_duplicates), left-semi apply. The
     hyperplanes are deterministic hash-of-index values, so the oracle
     replays the EXACT lattice in DuckDB — the same 16 plane literals,
     sign-bit signature, band chunks, candidate-restricted cosine verify,
@@ -5523,18 +5524,14 @@ def q_verified_load(spark, sf_dir):
 
 
 def q_cc_twostar(spark, sf_dir):
-    """Connected components via alternating large-star / small-star
-    (functions/graph.two_star_components, Kiveris et al. SoCC'14) over
-    the SAME calibrated df-pruned jaccard edge set as
-    q_dedup_clusters_pruned — and the SAME recursive-CTE oracle, reused
-    verbatim: the hash gate therefore proves the two CC algorithms
-    (O(log n)-round edge-rewriting two-star vs pointer-jumping min-label
-    propagation, O(log diameter) rounds since r15) compute identical
-    components on real pair data, not just on unit-test graphs.
-    Two-star remains the plan for edge-heavy graphs at 100 TB: its
-    rounds REWRITE the edge list toward star graphs (the working set
-    shrinks), where propagation keeps full label+edge frames live every
-    round (path pinned in tests)."""
+    """Connected components through graph.two_star_components, the wrapper
+    name that survives the deleted large-star / small-star loop (Kiveris
+    et al. SoCC'14), over the SAME calibrated df-pruned jaccard edge set as
+    q_dedup_clusters_pruned and the SAME recursive-CTE oracle, reused
+    verbatim. Both now run dedup.cluster_duplicates, so the hash gate pins
+    the wrapper's contract end to end; the one-task solve and the
+    distributed rounds are checked against each other in
+    tests/test_graph_selection.py (TestTwoStarComponentsRounds)."""
     from nyc_bikeshare_datawarehouse_spark.functions.graph import (
         two_star_components,
     )

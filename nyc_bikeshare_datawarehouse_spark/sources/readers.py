@@ -23,21 +23,67 @@ from __future__ import annotations
 from collections.abc import Iterable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-#: Canonical table names of the driver corpus (TESTDATA.md).
-TESTDATA_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
+_DDL_TYPES = {
+    "int": T.IntegerType(),
+    "bigint": T.LongType(),
+    "double": T.DoubleType(),
+    "string": T.StringType(),
+    "timestamp_ntz": T.TimestampNTZType(),
+    "array<float>": T.ArrayType(T.FloatType()),
+}
+
+
+def _declared(*cols: str) -> T.StructType:
+    """StructType from "name type" pairs, all nullable (as Spark infers
+    parquet columns), built without a JVM so it can be a module constant."""
+    return T.StructType(
+        [T.StructField(n, _DDL_TYPES[t]) for n, t in (c.split(" ", 1) for c in cols)]
+    )
+
+
+#: Declared schema of each driver-corpus table (TESTDATA.md), equal to what
+#: Spark infers from the committed files (pinned in tests/test_readers.py).
+#: `load_table` reads with these, so a corpus read plans without an
+#: inference job.
+TABLE_SCHEMAS = {
+    "region": _declared("r_regionkey int", "r_name string"),
+    "nation": _declared("n_nationkey int", "n_name string", "n_regionkey int"),
+    "customer": _declared(
+        "c_custkey bigint", "c_name string", "c_nationkey int",
+        "c_acctbal double", "c_mktsegment string",
+    ),
+    "supplier": _declared(
+        "s_suppkey bigint", "s_name string", "s_nationkey int", "s_acctbal double"
+    ),
+    "part": _declared(
+        "p_partkey bigint", "p_name string", "p_brand string", "p_type string",
+        "p_size int", "p_retailprice double",
+    ),
+    "orders": _declared(
+        "o_orderkey bigint", "o_custkey bigint", "o_orderstatus string",
+        "o_totalprice double", "o_orderdate timestamp_ntz", "o_orderpriority string",
+    ),
+    "lineitem": _declared(
+        "l_orderkey bigint", "l_partkey bigint", "l_suppkey bigint",
+        "l_linenumber int", "l_quantity double", "l_extendedprice double",
+        "l_discount double", "l_tax double", "l_returnflag string",
+        "l_linestatus string", "l_shipdate timestamp_ntz",
+    ),
+    "events": _declared(
+        "event_id bigint", "ts timestamp_ntz", "user_id bigint",
+        "event_type string", "value double", "props string",
+    ),
+    "documents": _declared(
+        "doc_id bigint", "text string", "lang string", "source string", "n_chars bigint"
+    ),
+    "embeddings": _declared("vec_id bigint", "embedding array<float>", "label int"),
+}
+
+#: Canonical table names of the driver corpus.
+TESTDATA_TABLES = tuple(TABLE_SCHEMAS)
 
 
 def read_parquet(spark: SparkSession, path: str, schema: T.StructType | None = None) -> DataFrame:
@@ -148,49 +194,28 @@ def split_corrupt(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     e.g. a post-filter count() to exactly that), so the parsed frame is
     cached first, per the documented workaround. The cache holds one
     parsed copy of the input for the duration of the quarantine flow."""
-    from pyspark.sql import functions as F
-
     df = df.cache()
     corrupt = F.col("_corrupt_record").isNotNull()
     return df.filter(~corrupt).drop("_corrupt_record"), df.filter(corrupt)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one driver-corpus table: `{sf_dir}/{name}.parquet`.
+    """Load one driver-corpus table: `{sf_dir}/{name}.parquet`, read with
+    its declared `TABLE_SCHEMAS` entry, so building a plan over the corpus
+    runs no footer-inference job (one per read otherwise). A new corpus
+    table needs a `TABLE_SCHEMAS` entry; tests/test_readers.py checks
+    every entry against what Spark infers from the committed files.
 
-    `events.ts` is stored as parquet TIMESTAMP(NANOS). Spark ≥4.1 reads it
-    natively as TIMESTAMP_NTZ (µs truncation, same floor DuckDB applies);
-    older Sparks reject it ([PARQUET_TYPE_ILLEGAL]) unless the
-    `nanosAsLong` legacy conf is on, in which case ts arrives as a raw ns
-    long. `_load_events` handles both, normalizing to a UTC TIMESTAMP so
-    downstream date-part/window semantics are version-independent."""
+    `events.ts` is stored as TIMESTAMP (µs, not adjusted to UTC), which
+    Spark reads as TIMESTAMP_NTZ; it is cast to TIMESTAMP under the pinned
+    UTC session, so the wall-clock value is the UTC instant."""
     # Date-part semantics (hour/day/dow) must not depend on whatever zone
     # the *caller's* session was built with — pin UTC (runtime-settable).
     spark.conf.set("spark.sql.session.timeZone", "UTC")
+    df = spark.read.schema(TABLE_SCHEMAS[name]).parquet(f"{sf_dir}/{name}.parquet")
     if name == "events":
-        return _load_events(spark, sf_dir)
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Older Sparks need the legacy conf to read TIMESTAMP(NANOS) at all
-    # (as a raw ns long); Spark ≥4.1 ignores/removes it and reads NTZ
-    # natively. Set it when settable, then branch on the dtype we got.
-    try:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    except Exception:
-        pass
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    ts_type = df.schema["ts"].dataType
-    if isinstance(ts_type, T.LongType):
-        # ns since epoch → floor to µs (matches DuckDB's ns→µs cast).
-        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    # Native NTZ read: wall-clock equals the UTC instant (corpus is UTC);
-    # cast under the pinned-UTC session for dtype parity with the old path.
-    return df.withColumn("ts", F.col("ts").cast("timestamp"))
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
+    return df
 
 
 def load_tables(spark: SparkSession, sf_dir: str, names: Iterable[str] | None = None) -> dict[str, DataFrame]:

@@ -20,19 +20,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-def _events_raw_schema(spark: SparkSession, sf_dir: str) -> T.StructType:
-    """Schema of events.parquet as THIS Spark reads it (streaming readers
-    require an explicit schema). ts is parquet TIMESTAMP(NANOS): Spark ≥4.1
-    reads it natively as TIMESTAMP_NTZ; older Sparks need the nanosAsLong
-    legacy conf and surface a raw ns long. A batch footer read (zero data
-    scanned) tells us which contract applies."""
-    try:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    except Exception:
-        pass
-    return spark.read.parquet(f"{sf_dir}/events.parquet").schema
+from nyc_bikeshare_datawarehouse_spark.sources.readers import TABLE_SCHEMAS
 
 
 def stream_events(
@@ -40,11 +29,11 @@ def stream_events(
     sf_dir: str,
     max_files_per_trigger: int = 1,
 ) -> DataFrame:
-    """File-source stream over the events parquet with the same ns->µs
+    """File-source stream over the events parquet, read with the declared
+    corpus schema (streaming readers require one) and the same ts
     normalization as the batch reader (sources/readers.py)."""
-    schema = _events_raw_schema(spark, sf_dir)
     raw = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(TABLE_SCHEMAS["events"])
         .option("maxFilesPerTrigger", str(max_files_per_trigger))
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
@@ -53,10 +42,8 @@ def stream_events(
 
 
 def _normalize_ts(raw: DataFrame) -> DataFrame:
-    """ns-long (legacy read) or TIMESTAMP_NTZ (native ≥4.1 read) → UTC
-    TIMESTAMP, identical to the batch reader's normalization."""
-    if isinstance(raw.schema["ts"].dataType, T.LongType):
-        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    """TIMESTAMP_NTZ → TIMESTAMP under the pinned UTC session, identical to
+    the batch reader's normalization."""
     return raw.withColumn("ts", F.col("ts").cast("timestamp"))
 
 

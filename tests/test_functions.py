@@ -267,12 +267,14 @@ class TestDedup:
         }
         assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 99: 99}
 
-    def test_cluster_duplicates_converges_on_final_round(self, spark):
+    def test_cluster_duplicates_converges_on_final_round(self, spark, monkeypatch):
+        # distributed rounds only (the one-task solve has no round cap):
         # path 0-1-2-3-4 under propagation + path halving: label 0 needs
-        # exactly 2 update rounds (r15 pointer-jumping moves a min two
+        # exactly 2 update rounds (pointer-jumping moves a min two
         # hops per round). max_iters=2 means the LAST update lands exactly
         # on round max_iters — the changed==0 probe runs in round 3 and
         # must confirm convergence, not raise.
+        monkeypatch.setattr(dedup, "_CC_BROADCAST_MAX_EDGES", 0)
         pairs = spark.createDataFrame(
             [(0, 1), (1, 2), (2, 3), (3, 4)], "id_a long, id_b long"
         )
@@ -284,10 +286,10 @@ class TestDedup:
         assert got == {0: 0, 1: 0, 2: 0, 3: 0, 4: 0}
 
     def test_cluster_duplicates_long_path_log_rounds(self, spark):
-        # r15 pointer-jumping pin: a 200-node path converges in
-        # O(log diameter) update rounds (~9), far under max_iters=12 —
-        # plain one-hop propagation would need 199 rounds and raise.
-        # Guards the path-halving step against silent removal.
+        # pointer-jumping pin: on the distributed rounds a 200-node path
+        # converges in O(log diameter) update rounds (~9), far under
+        # max_iters=12 — plain one-hop propagation would need 199 rounds
+        # and raise. Guards the path-halving step against silent removal.
         pairs = spark.createDataFrame(
             [(i, i + 1) for i in range(199)], "id_a long, id_b long"
         )
@@ -298,10 +300,12 @@ class TestDedup:
         }
         assert got == {i: 0 for i in range(200)}
 
-    def test_cluster_duplicates_nonconvergence_still_raises(self, spark):
-        # a 20-node path needs ~log2(19)+1 ≈ 5 update rounds even with
-        # path halving > max_iters 2: labels are still moving after the
-        # allowed update rounds — must fail loudly, not return wrong ids
+    def test_cluster_duplicates_nonconvergence_still_raises(self, spark, monkeypatch):
+        # distributed rounds only: a 20-node path needs ~log2(19)+1 ≈ 5
+        # update rounds even with path halving > max_iters 2: labels are
+        # still moving after the allowed update rounds — must fail
+        # loudly, not return wrong ids
+        monkeypatch.setattr(dedup, "_CC_BROADCAST_MAX_EDGES", 0)
         pairs = spark.createDataFrame(
             [(i, i + 1) for i in range(19)], "id_a long, id_b long"
         )
@@ -679,6 +683,21 @@ class TestDedup:
             got = pair_set(cand.select("id_a", "id_b"))
             recall = len(truth & got) / len(truth)
             assert recall >= 0.9, (truth_cfg, recall, len(truth))
+
+
+class TestClusterDuplicatesRounds:
+    """TestDedup's connected-components cases on the distributed
+    pointer-jumping rounds: the one-task gate forced to 0 sends every
+    graph above it."""
+
+    @pytest.fixture(autouse=True)
+    def _rounds(self, monkeypatch):
+        monkeypatch.setattr(dedup, "_CC_BROADCAST_MAX_EDGES", 0)
+
+    test_cluster_duplicates_transitive = TestDedup.test_cluster_duplicates_transitive
+    test_cluster_duplicates_long_path_log_rounds = (
+        TestDedup.test_cluster_duplicates_long_path_log_rounds
+    )
 
 
 class TestSimilarity:

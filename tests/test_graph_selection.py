@@ -427,7 +427,25 @@ class TestSpatial:
         assert len(out) == 1 and abs(out[0]["dist_km"] - 100.3) < 0.5
 
 
+def _min_label_components(edges, n_nodes):
+    """Pure-Python reference: each node's min reachable id (union-find)."""
+    root = list(range(n_nodes))
+
+    def find(x):
+        while root[x] != x:
+            x = root[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        root[max(ra, rb)] = min(ra, rb)
+    return {i: find(i) for i in range(n_nodes)}
+
+
 class TestTwoStarComponents:
+    """Connected components through `two_star_components`, the wrapper
+    over `dedup.cluster_duplicates`, on its default one-task solve."""
+
     @staticmethod
     def _run(spark, edges, n_nodes):
         from nyc_bikeshare_datawarehouse_spark.functions.graph import (
@@ -454,21 +472,15 @@ class TestTwoStarComponents:
         assert self._run(spark, [], 4) == {0: 0, 1: 1, 2: 2, 3: 3}
 
     def test_long_path_converges_in_log_rounds(self, spark):
-        # a 200-node path has diameter 199: min-label propagation needs
-        # ~199 rounds, two-star must finish well inside 50 (O(log n))
+        # a 200-node path has diameter 199: one-hop min-label propagation
+        # needs ~199 rounds; pointer jumping finishes far inside the
+        # wrapper's max_iters=50 (O(log diameter))
         edges = [(i, i + 1) for i in range(199)]
         got = self._run(spark, edges, 200)
         assert set(got.values()) == {0}
 
     def test_matches_label_propagation_on_random_graphs(self, spark):
         import random
-
-        from nyc_bikeshare_datawarehouse_spark.functions.dedup import (
-            cluster_duplicates,
-        )
-        from nyc_bikeshare_datawarehouse_spark.functions.graph import (
-            two_star_components,
-        )
 
         rng = random.Random(411)
         for _ in range(4):
@@ -478,13 +490,20 @@ class TestTwoStarComponents:
                 (rng.randrange(n), rng.randrange(n)) for _ in range(m)
             ]
             edges = [e for e in edges if e[0] != e[1]] or [(0, 1)]
-            pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-            ids = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
-            a = {r["doc_id"]: r["cluster_id"]
-                 for r in two_star_components(pairs, ids).collect()}
-            b = {r["doc_id"]: r["cluster_id"]
-                 for r in cluster_duplicates(pairs, ids, max_iters=60).collect()}
-            assert a == b, (n, edges)
+            assert self._run(spark, edges, n) == _min_label_components(edges, n), (
+                n, edges,
+            )
+
+
+class TestTwoStarComponentsRounds(TestTwoStarComponents):
+    """The same cases on the distributed pointer-jumping rounds: the
+    one-task gate forced to 0 sends every graph above it."""
+
+    @pytest.fixture(autouse=True)
+    def _rounds(self, monkeypatch):
+        from nyc_bikeshare_datawarehouse_spark.functions import dedup
+
+        monkeypatch.setattr(dedup, "_CC_BROADCAST_MAX_EDGES", 0)
 
 
 def _brute_triangles(edge_set):

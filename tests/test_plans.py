@@ -655,3 +655,48 @@ def test_ann_ivfpq_zero_shuffles_take_ordered(spark, sf_dir):
     assert n_exchanges(plan) == 0
     assert "TakeOrderedAndProject" in plan
     assert "CartesianProduct" not in plan
+
+
+def _build_jobs(spark, build, group: str) -> int:
+    """Spark jobs run while `build()` constructs a frame (no action)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "plan build job count")
+    try:
+        build()
+    finally:
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        sc.setJobGroup("", "")
+    return n_jobs
+
+
+def test_serving_star_queries_build_without_jobs(spark, sf_dir):
+    # the seven star-schema and event queries of the query_serving
+    # benchmark: corpus reads use the declared schemas, so building each
+    # plan runs no footer-inference (or any other) job
+    names = [
+        "q_star_join", "q_agg_monthly", "q_tpch_q3", "q_tpch_q18",
+        "q_window_rank", "q_sessionize", "q_asof_join",
+    ]
+    jobs = {
+        q: _build_jobs(spark, lambda q=q: QUERIES[q](spark, sf_dir), f"build-{q}")
+        for q in names
+    }
+    assert jobs == dict.fromkeys(names, 0)
+
+
+def test_dedup_pipeline_build_jobs_independent_of_graph(spark, sf_dir, monkeypatch):
+    # q_dedup_pipeline's CC step on a 2-node graph and on a 200-node path
+    # (the verify stage replaced by a fixed edge list): the one-task solve
+    # runs no job per round, so building costs the same either way
+    from nyc_bikeshare_datawarehouse_spark.functions import dedup
+
+    def build_over(edges, group):
+        pairs = spark.createDataFrame(edges, "id_a long, id_b long")
+        monkeypatch.setattr(dedup, "jaccard_verify_pairs", lambda *a, **k: pairs)
+        return _build_jobs(
+            spark, lambda: QUERIES["q_dedup_pipeline"](spark, sf_dir), group
+        )
+
+    two_node = build_over([(1, 2)], "build-dedup-two-node")
+    long_path = build_over([(i, i + 1) for i in range(199)], "build-dedup-path")
+    assert two_node == long_path, (two_node, long_path)

@@ -1,11 +1,31 @@
-"""Reader tests: explicit-schema CSV, corrupt-record quarantine."""
+"""Reader tests: explicit-schema CSV, corrupt-record quarantine, declared
+corpus schemas."""
 
 from __future__ import annotations
+
+import glob
+from pathlib import Path
 
 import pytest
 from pyspark.sql import types as T
 
-from nyc_bikeshare_datawarehouse_spark.sources.readers import read_csv, split_corrupt
+from nyc_bikeshare_datawarehouse_spark.sources.readers import (
+    TABLE_SCHEMAS,
+    read_csv,
+    split_corrupt,
+)
+
+from conftest import SF_SMALL
+
+_REPO = Path(__file__).resolve().parents[1]
+#: every corpus the declared schemas must match, by label: the committed
+#: benchmark corpus always, the driver corpora and bench.py's finished
+#: multi-file copies when present
+_CORPORA = {"perfbench-corpus": str(_REPO / "perfbench" / "corpus")}
+for _sf in glob.glob(str(Path(SF_SMALL).parent / "sf*")):
+    _CORPORA[f"testdata-{Path(_sf).name}"] = _sf
+for _marker in glob.glob(str(_REPO / ".benchdata" / "sf*" / "_COPIED")):
+    _CORPORA[f"benchdata-{Path(_marker).parent.name}"] = str(Path(_marker).parent)
 
 SCHEMA = T.StructType([
     T.StructField("id", T.IntegerType()),
@@ -180,3 +200,13 @@ def test_read_binary_files_glob_and_content(spark, tmp_path):
         )
     )
     assert feats.count() == 2
+
+
+@pytest.mark.parametrize("label", sorted(_CORPORA))
+def test_declared_schemas_match_inferred(spark, label):
+    # load_table reads with TABLE_SCHEMAS instead of inferring from the
+    # footer; a constant that drifted from the files would misread them
+    corpus = _CORPORA[label]
+    for name, declared in TABLE_SCHEMAS.items():
+        inferred = spark.read.parquet(f"{corpus}/{name}.parquet").schema
+        assert declared == inferred, (corpus, name, inferred.simpleString())

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from nyc_bikeshare_datawarehouse_spark.plans.queries import QUERIES
 from nyc_bikeshare_datawarehouse_spark.sources import versioned
+from nyc_bikeshare_datawarehouse_spark.sources.readers import TABLE_SCHEMAS
 from nyc_bikeshare_datawarehouse_spark.streaming import events as se
 
 from conftest import rows_set
@@ -185,9 +186,8 @@ def test_dedup_stream_removes_replays(spark, sf_dir, tmp_path):
     shutil.copy(src, landing / "events_a.parquet")
     shutil.copy(src, landing / "events_b.parquet")
 
-    schema = se._events_raw_schema(spark, sf_dir)
     raw = se._normalize_ts(
-        spark.readStream.schema(schema)
+        spark.readStream.schema(TABLE_SCHEMAS["events"])
         .option("maxFilesPerTrigger", "1")
         .parquet(str(landing))
     )

@@ -7,7 +7,9 @@ Usage:
 Reuses bench.py's corpus prep (multi-file .benchdata copy), JVM + Arrow
 python-worker warm-ups, and the noop-sink best-of-N timing, so numbers
 here are directly comparable to BENCH_DETAIL.json rows. Prints one line
-per query plus a total; nothing here feeds the driver contract. The total
+per query (best seconds, and Spark jobs per execution: the member's
+jobs, read from the status tracker under its own job group, over the
+repeats) plus a total; nothing here feeds the driver contract. The total
 line carries the host's busy and steal CPU fractions over the timed phase:
 on a shared VM, steal says whether two runs are comparable at all.
 """
@@ -55,12 +57,15 @@ def main() -> None:
     total = 0.0
     ticks0 = cpu_times()
     t0 = time.perf_counter()
+    sc = spark.sparkContext
     for name in args.names:
-        spark.sparkContext.setJobDescription(name)
+        group = f"bench-some-{name}"
+        sc.setJobGroup(group, name)
         sec = round(bench.run_query(spark, name, sf_dir, repeats=args.repeats), 3)
-        spark.sparkContext.setJobDescription(None)
+        sc.setJobGroup("", "")
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group)) / args.repeats
         total += sec
-        print(f"{args.tag}{name:36s} {sec:8.3f}s", flush=True)
+        print(f"{args.tag}{name:36s} {sec:8.3f}s {jobs:6g} jobs", flush=True)
     wall = time.perf_counter() - t0
     host = cpu_fractions(ticks0, cpu_times())
     print(
