@@ -132,16 +132,6 @@ def bpe_train(
     return merges, symdf
 
 
-def symbol_vocab(symdf: DataFrame) -> DataFrame:
-    """Freq-weighted symbol counts of the (post-merge) sequences — the
-    learned subword vocabulary."""
-    return (
-        symdf.select("freq", F.explode("syms").alias("sym"))
-        .groupBy("sym")
-        .agg(F.sum("freq").cast("long").alias("cnt"))
-    )
-
-
 def encode(df: DataFrame, merges: list[tuple[str, str]], text_col: str = "text") -> DataFrame:
     """Tokenize with a LEARNED merge list: split each whitespace word
     into chars+EOW, then apply the merges in training order — each merge

@@ -854,7 +854,6 @@ def prefix_jaccard_candidates(
     id_col: str = "doc_id",
     shingle_n: int = 2,
     min_jaccard: float = 0.5,
-    positional: bool = False,
 ) -> DataFrame:
     """LOSSLESS candidate pairs for exact Jaccard >= t via prefix
     filtering (All-Pairs/PPJoin, Bayardo et al. WWW'07 / Xiao et al.
@@ -882,19 +881,6 @@ def prefix_jaccard_candidates(
     are (shingle_hash, id, size) prefixes only. Candidates then go to
     `jaccard_verify_pairs`, which is per-pair codegen.
 
-    positional=True adds PPJoin's positional filter (Xiao et al. WWW'08
-    §3.1): each posting carries its rank under the GLOBAL (df, shingle)
-    total order, and a match at positions (pa, pb) bounds the true
-    overlap by min(pa, pb) + min(|A|-pa, |B|-pb) — common shingles
-    ordered <= the match number at most min(pa, pb), those after it at
-    most min of the remaining tail lengths. Rows whose bound cannot
-    reach the jaccard-required overlap t(|A|+|B|)/(1+t) are dropped
-    BEFORE the pair distinct, so a hot prefix shingle shared by two
-    size-compatible docs no longer forces the pair into the verify
-    stage. Still lossless: the bound over-estimates, the epsilon slack
-    only ever keeps extra candidates, and `jaccard_verify_pairs` stays
-    the exact arbiter.
-
     PROBING-PREFIX asymmetry (All-Pairs §3.2, r13, always on): for a
     pair with |A| <= |B| (ties by id), jaccard >= t forces overlap
     alpha >= t(|A|+|B|)/(1+t) >= 2t/(1+t)·|A| — so the SMALLER side
@@ -917,17 +903,11 @@ def prefix_jaccard_candidates(
     )
     index_len = F.col("n_sh") - F.ceil(F.lit(min_jaccard) * F.col("n_sh")) + 1
     probe_len = F.col("n_sh") - F.ceil(F.lit(probe_frac) * F.col("n_sh")) + 1
-    index_side = ranked.filter(F.col("__rk") <= index_len).select(
-        id_col, "sh", "n_sh", "__rk"
+    a = ranked.filter(F.col("__rk") <= probe_len).select(
+        F.col(id_col).alias("id_a"), "sh", F.col("n_sh").alias("n_a")
     )
-    probe_side = ranked.filter(F.col("__rk") <= probe_len).select(
-        id_col, "sh", "n_sh", "__rk"
-    )
-    a = probe_side.select(
-        F.col(id_col).alias("id_a"), "sh", F.col("n_sh").alias("n_a"), F.col("__rk").alias("pa")
-    )
-    b = index_side.select(
-        F.col(id_col).alias("id_b"), "sh", F.col("n_sh").alias("n_b"), F.col("__rk").alias("pb")
+    b = ranked.filter(F.col("__rk") <= index_len).select(
+        F.col(id_col).alias("id_b"), "sh", F.col("n_sh").alias("n_b")
     )
     joined = a.join(b, "sh").filter(
         # probe side strictly (size, id)-smaller: each unordered pair
@@ -938,12 +918,6 @@ def prefix_jaccard_candidates(
         )
         & (F.col("n_a") >= F.col("n_b") * min_jaccard)
     )
-    if positional:
-        overlap_ub = F.least("pa", "pb") + F.least(
-            F.col("n_a") - F.col("pa"), F.col("n_b") - F.col("pb")
-        )
-        required = (F.col("n_a") + F.col("n_b")) * (min_jaccard / (1.0 + min_jaccard))
-        joined = joined.filter(overlap_ub.cast("double") >= required - 1e-9)
     # the ~2x-duplicated join output feeds jaccard_verify_pairs
     # (measured at sf0.1: candidates 13.7s -> 6.5s, 2 Exchange -> 1)
     return spread_pairs(

@@ -28,8 +28,6 @@ join is lossless for every input length (see fuzzy_pairs).
 
 from __future__ import annotations
 
-import pandas as pd
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -244,90 +242,3 @@ def fuzzy_join(
     return pairs.join(ln, left_id).join(rn, right_id).select(
         left_id, right_id, "s_l", "s_r", "dist"
     )
-
-
-def jaro_winkler_micro(a: str, b: str) -> int:
-    """Jaro-Winkler similarity in EXACT integer micro-units (Winkler
-    1990, public literature; p=0.1, prefix ≤ 4, no boost threshold —
-    the same convention as DuckDB's jaro_winkler_similarity, verified
-    in tests). The whole computation is integer rational arithmetic:
-
-        jaro = (m·m·l2 + m·m·l1 + (m−t)·l1·l2) / (3·l1·l2·m)
-        jw   = (10·num + L·(den−num)) / (10·den)
-
-    so ⌊jw·10⁶⌋ is exact — no float anywhere, hence deterministic and
-    hash-gate-safe wherever it is used as a verify criterion."""
-    if a == b:
-        return 1_000_000
-    l1, l2 = len(a), len(b)
-    if not l1 or not l2:
-        return 0
-    md = max(l1, l2) // 2 - 1
-    m1 = [False] * l1
-    m2 = [False] * l2
-    m = 0
-    for i, c in enumerate(a):
-        lo, hi = max(0, i - md), min(l2, i + md + 1)
-        for j in range(lo, hi):
-            if not m2[j] and b[j] == c:
-                m1[i] = m2[j] = True
-                m += 1
-                break
-    if m == 0:
-        return 0
-    t = 0
-    k = 0
-    for i in range(l1):
-        if m1[i]:
-            while not m2[k]:
-                k += 1
-            if a[i] != b[k]:
-                t += 1
-            k += 1
-    t //= 2
-    num = m * m * l2 + m * m * l1 + (m - t) * l1 * l2
-    den = 3 * l1 * l2 * m
-    pl = 0
-    for x, y in zip(a[:4], b[:4]):
-        if x != y:
-            break
-        pl += 1
-    return (1_000_000 * (10 * num + pl * (den - num))) // (10 * den)
-
-
-def with_jaro_winkler(
-    pairs: DataFrame,
-    a_col: str,
-    b_col: str,
-    out_col: str = "jw_micro",
-) -> DataFrame:
-    """Score CANDIDATE pairs with exact-integer Jaro-Winkler via an
-    Arrow-batched pandas UDF — the ER scorer that complements the
-    levenshtein verify tier (JW rewards shared prefixes; edit distance
-    punishes all edits equally). Per-row Python on short strings is the
-    honest cost model here: JW's greedy matching loop is inherently
-    sequential per pair, and the input is the banded candidate stream
-    (fuzzy_pairs*), never a corpus cross product — so the stage is
-    O(candidates · |s|²) with Arrow doing the transport.
-
-    Deliberately NOT exposed as an oracle-gated query: DuckDB's builtin
-    jaro_winkler_similarity returns a float whose last-ulp position vs
-    the exact rational is engine-internal, so a floor/round to any grid
-    can straddle at values that land exactly on it — the hash gate
-    would be flaky by construction. Cross-engine agreement is instead
-    pinned in tests (|builtin − exact| < 2e-6 over the convention
-    suite); production use is operator-level scoring of fuzzy_pairs
-    candidates (see docs/EXAMPLES.md)."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("long")
-    def _jw(sa: pd.Series, sb: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                0 if x is None or y is None else jaro_winkler_micro(x, y)
-                for x, y in zip(sa, sb)
-            ],
-            dtype="int64",
-        )
-
-    return pairs.withColumn(out_col, _jw(F.col(a_col), F.col(b_col)))

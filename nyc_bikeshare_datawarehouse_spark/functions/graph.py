@@ -102,16 +102,14 @@ def pagerank(
     return ranks
 
 
-def token_adjacency_edges(
-    df: DataFrame, text_col: str = "text", directed: bool = False
-) -> DataFrame:
+def token_adjacency_edges(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Build the token co-occurrence graph TextRank runs on: one edge per
     distinct adjacent-token pair, weighted by corpus bigram count. The
     single corpus-sized pass — one explode + one groupBy on the pair —
     after which everything is vocabulary-sized.
 
-    `directed=False` (TextRank's undirected graph) emits both
-    orientations so `pagerank` sees symmetric in/out edges.
+    The graph is undirected (TextRank's): both orientations are emitted
+    so `pagerank` sees symmetric in/out edges.
     """
     toks = df.select(F.filter(F.split(text_col, " "), lambda t: t != "").alias("t"))
     pairs = toks.filter(F.size("t") >= 2).select(
@@ -125,11 +123,6 @@ def token_adjacency_edges(
             )
         ).alias("p")
     ).select("p.src", "p.dst")
-    directed_edges = pairs.groupBy("src", "dst").agg(
-        F.count(F.lit(1)).cast("long").alias("weight")
-    )
-    if directed:
-        return directed_edges
     # fold both orientations into one weight per unordered pair, then
     # re-emit both directions (an a<->b pair must carry the SAME weight
     # on each side for the undirected formula)

@@ -6,7 +6,7 @@ Design (the part that must be real at 100 TB):
   duration_ms long>`. Binary payloads live inline for small assets or as
   URI references (`content_uri`) for large ones — both schemas declared
   here so writers/readers agree.
-- Decode / feature-extract / resize / frame-sample run as **Arrow-batched
+- Decode / feature-extract / resize / scene-stats run as **Arrow-batched
   `mapInPandas`** operators: Spark streams record batches into Python, the
   heavy codec work happens per batch (not per row), and the output schema
   is fixed up front so Catalyst can plan around the op.
@@ -268,71 +268,6 @@ def resize_images(
             yield out
 
     return df.mapInPandas(run, schema=ASSET_SCHEMA)
-
-
-def sample_frames(
-    df: DataFrame, every_ms: int = 1000, decode: bool = False
-) -> DataFrame:
-    """Video frame sampling: one output row per sampled frame.
-
-    Default (decode=False): frames are *planned* from metadata
-    (duration_ms / every_ms synthetic frame index rows) so the explode
-    shape, schema, and partition behavior are real with the decoded
-    payload left null — the shape for containers whose codec isn't
-    injected. With decode=True, TVID content (the stdlib-real container —
-    `tvid_encode`) is actually parsed: each sampled instant maps to the
-    frame covering it (frame_ms // container cadence, clamped to the last
-    frame) and `frame_content` carries that frame's REAL BMP bytes; non-
-    TVID payloads keep the null-content planned shape. Arrow-batched
-    mapInPandas either way; one output row per sampled frame, never the
-    whole container fan-out."""
-    if not decode:
-        n_frames = F.greatest(
-            (F.col("meta.duration_ms") / F.lit(every_ms)).cast("int"), F.lit(1)
-        )
-        return (
-            df.filter(F.col("modality") == "video")
-            .select(
-                "asset_id",
-                F.explode(F.sequence(F.lit(0), n_frames - 1)).alias("frame_idx"),
-            )
-            .withColumn("frame_ms", F.col("frame_idx") * F.lit(every_ms))
-            .withColumn("frame_content", F.lit(None).cast("binary"))
-        )
-
-    schema = "asset_id long, frame_idx int, frame_ms long, frame_content binary"
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, mss, payloads = [], [], [], []
-            for aid, content, meta in zip(
-                pdf["asset_id"], pdf["content"], pdf["meta"]
-            ):
-                raw = bytes(content) if content is not None else b""
-                cadence, frames = None, None
-                if raw[:4] == TVID_MAGIC:
-                    cadence, frames = tvid_decode(raw)
-                    duration = cadence * len(frames)
-                else:
-                    duration = (meta or {}).get("duration_ms") or every_ms
-                n_samples = max(int(duration // every_ms), 1)
-                for k in range(n_samples):
-                    ids.append(aid)
-                    idxs.append(k)
-                    mss.append(k * every_ms)
-                    if frames is None:
-                        payloads.append(None)
-                    else:
-                        j = min(k * every_ms // cadence, len(frames) - 1)
-                        payloads.append(bmp_encode(frames[j]))
-            yield pd.DataFrame({
-                "asset_id": ids,
-                "frame_idx": pd.array(idxs, dtype="int32"),
-                "frame_ms": mss,
-                "frame_content": payloads,
-            })
-
-    return df.filter(F.col("modality") == "video").mapInPandas(run, schema=schema)
 
 
 PHASH_SCHEMA = "asset_id long, phash long"

@@ -26,7 +26,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StructField, StructType
 
 from nyc_bikeshare_datawarehouse_spark.functions.dedup import banded_hamming_join
 
@@ -153,56 +152,6 @@ def srp_signature(vec_col, dim: int, n_planes: int = 16) -> Column:
         ).otherwise(F.lit(0).cast("long")),
     )
     return F.aggregate(bits, F.lit(0).cast("long"), lambda acc, b: acc.bitwiseOR(b))
-
-
-def srp_signatures_arrow(
-    df: DataFrame,
-    dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 16,
-) -> DataFrame:
-    """Arrow/numpy MATMUL twin of `srp_signature` for the SERVING path
-    (r14 verdict #6): one (batch × dim) @ (dim × planes) float64 matmul
-    per Arrow batch instead of the per-row nested higher-order fold —
-    the signature stage drops from the n·planes·dim expression-eval
-    floor to BLAS throughput, while the DECLARED queries keep the HOF
-    form because the DuckDB oracle replays that expression verbatim.
-    Same deterministic hyperplanes, same sign rule (strict > 0), bits
-    packed little-endian into one signed long; bit-equality with the
-    HOF fold on the gate corpus is pinned in tests/test_functions.py
-    (sign flips would need |dot| within float64 summation-order error,
-    i.e. a vector lying ~1e-13 from a hyperplane).
-
-    Returns (id_col, sig) — plug-compatible with the `sig` frame
-    cosine_near_dup_lsh builds internally. Embarrassingly parallel:
-    no shuffle, planes matrix is a task-local constant (~8·dim·planes
-    bytes), output is 16 bytes/row."""
-    import numpy as np
-    import pandas as pd
-
-    if n_planes > 62:
-        raise ValueError("n_planes must be <= 62 (signed-long packing)")
-    planes = np.array(
-        _deterministic_hyperplanes(dim, n_planes), dtype=np.float64
-    )  # (planes, dim)
-    masks = (1 << np.arange(n_planes, dtype=np.uint64))
-    id_field = df.schema[id_col]
-
-    def gen(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            v = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            sig = (
-                ((v @ planes.T > 0).astype(np.uint64) * masks)
-                .sum(axis=1)
-                .astype(np.int64)
-            )
-            yield pd.DataFrame({id_col: pdf[id_col], "sig": sig})
-
-    out_schema = StructType([id_field, StructField("sig", LongType())])
-    return df.select(id_col, vec_col).mapInPandas(gen, schema=out_schema)
 
 
 def cosine_near_dup_lsh(
@@ -491,37 +440,6 @@ def ivf_probe_partitioned(
     )
 
 
-def _cell_cosine_scores(vec_col, cents: Column, round_to: int = 6) -> Column:
-    """array<struct<d,i>>: ROUND(cosine(v, cᵢ), round_to) per centroid.
-    The engine-PORTABLE scoring twin of `_cell_scores`: same argmax /
-    top-cells order in exact arithmetic (|v| is constant across cells,
-    so dividing by it never reorders), but a full cosine quantized to
-    6 dp so a DuckDB oracle replays it as ROUND(list_cosine_similarity)
-    and both engines rank on identical doubles (the q_cosine_topk /
-    q_mmr_diverse precedent). Audit-path scoring; the serving path
-    keeps `_cell_scores`' cheaper unnormalized form."""
-    v = _vec(vec_col)
-    return F.zip_with(
-        cents,
-        F.sequence(F.lit(0), F.size(cents) - 1),
-        lambda c, i: F.struct(
-            F.round(
-                F.aggregate(
-                    F.zip_with(v, c, lambda x, y: x * y),
-                    F.lit(0.0),
-                    lambda a, x: a + x,
-                )
-                / (
-                    F.sqrt(F.aggregate(v, F.lit(0.0), lambda a, x: a + x * x))
-                    * F.sqrt(F.aggregate(c, F.lit(0.0), lambda a, x: a + x * x))
-                ),
-                round_to,
-            ).alias("d"),
-            i.alias("i"),
-        ),
-    )
-
-
 def _cents_with_norms(cents: DataFrame) -> DataFrame:
     """Pre-normed twin of `_centroids_frame`'s output: zip each centroid
     with its L2 norm ONCE (`__cn: array<struct<v,n>>`). The projection
@@ -529,8 +447,7 @@ def _cents_with_norms(cents: DataFrame) -> DataFrame:
     QUERY instead of once per row per cell — the scoring lambda divides
     by a carried double (`_cell_cosine_scores_pre`). Same doubles (IEEE
     sqrt is correctly rounded; the fold is unchanged), so every rounded
-    cosine downstream is bit-identical to the `_cell_cosine_scores`
-    form."""
+    cosine downstream is bit-identical to folding the norm per cell."""
     return cents.select(
         F.transform(
             "__cents",
@@ -545,13 +462,17 @@ def _cents_with_norms(cents: DataFrame) -> DataFrame:
 
 
 def _cell_cosine_scores_pre(v: Column, vnorm: Column, cn: Column, round_to: int = 6) -> Column:
-    """`_cell_cosine_scores` with both norms HOISTED: `vnorm` is the
-    row's L2 norm computed once per row (not once per cell), `cn` is the
-    `_cents_with_norms` array carrying each centroid's norm. Per cell
-    only the dot fold remains — 1/3 of the original fold work. The
-    division `dot / (vnorm * s.n)` multiplies/divides the exact same
-    doubles in the same order as the inline form, so ROUND(·, 6) and
-    every rank derived from it are bit-identical (oracle-safe)."""
+    """array<struct<d,i>>: ROUND(cosine(v, cᵢ), round_to) per centroid —
+    the engine-PORTABLE scoring twin of `_cell_scores`: same argmax /
+    top-cells order in exact arithmetic, but a full cosine quantized to
+    6 dp so a DuckDB oracle replays it as ROUND(list_cosine_similarity)
+    and both engines rank on identical doubles. Both norms are HOISTED:
+    `vnorm` is the row's L2 norm computed once per row (not once per
+    cell), `cn` is the `_cents_with_norms` array carrying each
+    centroid's norm, so per cell only the dot fold remains. The division
+    `dot / (vnorm * s.n)` multiplies/divides the same doubles in the
+    same order as an inline cosine, so ROUND(·, 6) and every rank
+    derived from it are bit-identical (oracle-safe)."""
     return F.zip_with(
         cn,
         F.sequence(F.lit(0), F.size(cn) - 1),
@@ -590,7 +511,7 @@ def ivf_recall_report(
     both sides), recall_bp = floor(10000·hits / (k·n_probes)).
 
     Determinism: all rankings are (ROUND(cosine, 6) DESC, id ASC) — both
-    engines rank identical doubles (`_cell_cosine_scores`), and hits /
+    engines rank identical doubles (`_cell_cosine_scores_pre`), and hits /
     recall_bp are exact integers. Cell assignment is the strict->
     fold (lowest index wins ties) ≡ the oracle's ORDER BY d DESC, i
     LIMIT 1; probe top-cells are (d DESC, i ASC) ranks ≡ the oracle's
@@ -1021,24 +942,6 @@ def pq_recall_report(
             bp("hits_rerank").alias("recall_rerank_bp"),
         )
     )
-
-
-def pq_codebooks_py(
-    df: DataFrame,
-    m: int = 8,
-    k: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int | None = None,
-) -> list[list[list[float]]]:
-    """Driver-side codebooks (m × k × dim/m python lists) — the PQ
-    sibling of the `centers` list ivf_fit_kmeans returns: fit once at
-    ingest, persist, hand to every probe as literals. One 1-row collect
-    of the bounded codebook frame (m·k·dim/m doubles)."""
-    row = pq_codebooks_frame(
-        df, m=m, k=k, id_col=id_col, vec_col=vec_col, dim=dim
-    ).head()
-    return [[list(map(float, c)) for c in book] for book in row["__books"]]
 
 
 def ivfpq_write(

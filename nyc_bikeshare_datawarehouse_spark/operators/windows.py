@@ -7,7 +7,7 @@ Reference parity notes:
   *natural composite key* or a hash of one (`md5(concat(...))`,
   sql_queries.py:4) over a global row_number, because a single unpartitioned
   window is a 1-task bottleneck. `deterministic_id` is offered for
-  small/medium dims; `hash_key` is the scale path.
+  small/medium dims; an md5 over the natural key is the scale path.
 - `with_date_parts` mirrors the dim_datetime derivation (etl.py:186-192).
 """
 
@@ -32,8 +32,8 @@ def deterministic_id(
     id_col: str = "id",
 ) -> DataFrame:
     """Stable 1-based dense id from a total order (row_number over an
-    unpartitioned window — fine for dims, NOT for 100 TB facts; use
-    `hash_key` there)."""
+    unpartitioned window — fine for dims, NOT for 100 TB facts; hash the
+    natural key there, as `builders.build_trip_fact` does)."""
     w = Window.orderBy(*[F.col(c) if isinstance(c, str) else c for c in order_by])
     return df.withColumn(id_col, F.row_number().over(w).cast("long"))
 
@@ -214,14 +214,6 @@ def desc_freq_buckets(
         bucket_col,
         (lo + F.when(span > 1, sub).otherwise(F.lit(0))).cast("long"),
     ).drop("__gcnt", "__gbefore", "__vtot", "__kmin", "__kmax")
-
-
-def hash_key(cols: Sequence[str | Column], id_col: str = "id") -> Column:
-    """Deterministic, shuffle-free surrogate key: md5 over the natural key
-    (the reference's own pattern, sql_queries.py:4). Collision-safe enough
-    for 128-bit at any realistic cardinality."""
-    parts = [F.col(c).cast("string") if isinstance(c, str) else c.cast("string") for c in cols]
-    return F.md5(F.concat_ws("", *parts)).alias(id_col)
 
 
 def with_date_parts(df: DataFrame, ts_col: str, prefix: str = "") -> DataFrame:

@@ -95,18 +95,6 @@ def read_parquet(spark: SparkSession, path: str, schema: T.StructType | None = N
     return reader.parquet(path)
 
 
-def read_parquet_evolved(spark: SparkSession, *paths: str) -> DataFrame:
-    """Schema-evolution read over parquet written at different pipeline
-    versions: `mergeSchema` unions the footer schemas (new columns null-
-    filled in old files) instead of trusting one random file's footer —
-    the lake norm when a column was added mid-history. Type CONFLICTS
-    (same name, different type) still fail at analysis, which is the
-    behavior you want; widen explicitly before writing. mergeSchema
-    costs a footer read per file at planning — fine nightly, so prefer
-    pinning an explicit contract schema on hot paths."""
-    return spark.read.option("mergeSchema", "true").parquet(*paths)
-
-
 def read_orc(spark: SparkSession, path: str, schema: T.StructType | None = None) -> DataFrame:
     """ORC scan — same contract as `read_parquet` (schema-on-read unless
     a contract schema is pinned). ORC carries the same columnar

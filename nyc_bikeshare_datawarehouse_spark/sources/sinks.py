@@ -1,4 +1,4 @@
-"""Sinks (SURVEY §2.2): partitioned parquet writes + table DDL analogs.
+"""Sinks (SURVEY §2.2): partitioned parquet writes + catalog-table helpers.
 
 The reference wrote CSV per month in append mode then overwrote dims
 (etl.py:101-105, 178-180, 193) and bulk-loaded a warehouse via
@@ -8,7 +8,6 @@ truncate-and-COPY (stage_redshift.py:34-48). The Spark-native equivalents:
   append loop — readers get partition pruning for free;
 - `overwrite` / `append` as an explicit single mode (the reference chained
   `.mode("append").mode("overwrite")` — last one wins, etl.py:105);
-- truncate-and-load == `INSERT OVERWRITE` / `saveAsTable(mode="overwrite")`;
 - dynamic partition overwrite for incremental month refresh, which is the
   scale-correct replacement for "reprocess one month": only the touched
   partitions rewrite.
@@ -44,42 +43,6 @@ def write_parquet(
     writer.parquet(path)
 
 
-def write_orc(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    partition_by: Sequence[str] | None = None,
-    compression: str | None = None,
-) -> None:
-    """ORC sink, mirroring `write_parquet`'s contract for Hive-side
-    consumers. `compression`: zlib (ORC default), snappy, zstd, none."""
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    if compression:
-        writer = writer.option("compression", compression)
-    writer.orc(path)
-
-
-def compact_parquet(
-    spark: SparkSession,
-    src_path: str,
-    dst_path: str,
-    target_files: int = 1,
-    compression: str | None = "zstd",
-) -> int:
-    """Small-file compaction: rewrite a directory of many small parquet
-    files into `target_files` files at `dst_path`. Streaming sinks and
-    frequent incremental appends accumulate small files that tax the
-    file-listing and per-task overhead at scale; periodic compaction is
-    the standard maintenance job. `coalesce` (no shuffle) merges read
-    splits. Returns the row count written (for the caller's swap-and-
-    verify step — this function deliberately does NOT delete the source)."""
-    df = spark.read.parquet(src_path).coalesce(target_files)
-    write_parquet(df, dst_path, compression=compression)
-    return spark.read.parquet(dst_path).count()
-
-
 def overwrite_partitions(df: DataFrame, path: str, partition_by: Sequence[str]) -> None:
     """Incremental refresh: overwrite only the partitions present in `df`
     (dynamic partition overwrite). This is the 100 TB-safe version of the
@@ -92,11 +55,6 @@ def overwrite_partitions(df: DataFrame, path: str, partition_by: Sequence[str]) 
         df.write.mode("overwrite").partitionBy(*partition_by).parquet(path)
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-
-
-def create_table(spark: SparkSession, name: str, df: DataFrame, mode: str = "overwrite") -> None:
-    """DDL analog of create_tables.sql: materialize as a catalog table."""
-    df.write.mode(mode).format("parquet").saveAsTable(name)
 
 
 def drop_table(spark: SparkSession, name: str) -> None:
@@ -146,19 +104,6 @@ def drop_table(spark: SparkSession, name: str) -> None:
     fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
     if fs.exists(path):
         fs.delete(path, True)
-
-
-def insert_overwrite(df: DataFrame, table: str) -> None:
-    """Truncate-and-load (the reference's DELETE + COPY / DELETE + INSERT
-    SELECT patterns — stage_redshift.py:38-48, load_fact.py:21-29) as one
-    atomic INSERT OVERWRITE into an existing catalog table. Position-based
-    like SQL INSERT; the table's schema is the contract."""
-    df.write.insertInto(table, overwrite=True)
-
-
-def insert_append(df: DataFrame, table: str) -> None:
-    """Append-load variant (load_fact.py's non-truncating mode)."""
-    df.write.insertInto(table, overwrite=False)
 
 
 def write_bucketed(

@@ -1,15 +1,11 @@
-"""Tests: as-of join semantics and ingestion utilities."""
+"""Tests: as-of join semantics and operator argument validation."""
 
 from __future__ import annotations
-
-import os
-import zipfile
 
 import pytest
 from pyspark.sql import functions as F
 
 from nyc_bikeshare_datawarehouse_spark.operators.asof import asof_join
-from nyc_bikeshare_datawarehouse_spark.sources.ingest import unzip_file
 
 from conftest import rows_set
 
@@ -87,27 +83,3 @@ class TestValidation:
             salted_join(a, b, "k", num_salts=1)
         with pytest.raises(ValueError, match="both sides"):
             salted_join(a, b, "missing")
-
-
-class TestIngest:
-    def test_unzip_idempotent(self, tmp_path):
-        src = tmp_path / "data.zip"
-        with zipfile.ZipFile(src, "w") as zf:
-            zf.writestr("a.csv", "x,y\n1,2\n")
-            zf.writestr("b.csv", "x,y\n3,4\n")
-        out = tmp_path / "out"
-        first = unzip_file(str(src), str(out))
-        assert sorted(os.path.basename(p) for p in first) == ["a.csv", "b.csv"]
-        # re-run on a NON-empty directory must still extract (the reference
-        # skipped extraction unless the dir was empty — etl_dag.py:67-68)
-        second = unzip_file(str(src), str(out))
-        assert len(second) == 2
-        assert (out / "a.csv").read_text() == "x,y\n1,2\n"
-
-    def test_unzip_subset(self, tmp_path):
-        src = tmp_path / "data.zip"
-        with zipfile.ZipFile(src, "w") as zf:
-            zf.writestr("a.csv", "1")
-            zf.writestr("b.csv", "2")
-        got = unzip_file(str(src), str(tmp_path / "o"), members=["b.csv"])
-        assert [os.path.basename(p) for p in got] == ["b.csv"]

@@ -90,13 +90,6 @@ class TestBpe:
         merges, _ = bpe.bpe_train(df, n_merges=5, min_count=2)
         assert merges == []
 
-    def test_symbol_vocab_weights_by_freq(self, spark):
-        df = spark.createDataFrame([(1, "aa aa b")], "doc_id long, text string")
-        symdf = bpe.with_symbols(bpe.word_vocab(df))
-        vocab = {r["sym"]: r["cnt"] for r in bpe.symbol_vocab(symdf).collect()}
-        # 'a' appears twice per 'aa' occurrence (freq 2) = 4; EOW = 3 words... 2 distinct
-        assert vocab["a"] == 4 and vocab["b"] == 1 and vocab[bpe.EOW] == 3
-
     def test_encode_applies_merges_in_order(self, spark):
         rows = [
             (1, "low low low lower lower lowest"),

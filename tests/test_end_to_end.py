@@ -16,57 +16,33 @@ import pytest
 from pyspark.sql import functions as F
 
 from nyc_bikeshare_datawarehouse_spark.sources.trips_datasource import TripsDataSource
-from nyc_bikeshare_datawarehouse_spark.sources.sinks import write_parquet
-from nyc_bikeshare_datawarehouse_spark.warehouse import builders, quality
-from nyc_bikeshare_datawarehouse_spark.warehouse.runner import PipelineRunner, Stage
+from nyc_bikeshare_datawarehouse_spark.warehouse import builders, pipeline, quality
 
 
 @pytest.fixture(scope="module")
 def mart(spark, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("mart"))
     spark.dataSource.register(TripsDataSource)
-
-    def ingest(ctx):
-        return (
-            spark.read.format("bikeshare_trips")
-            .option("rows_per_month", 300)
-            .option("year", 2020)
-            .load()
-        )
-
-    def build(ctx):
-        trips = builders.clean_trips(ctx["ingest"])
-        fact = builders.build_trip_fact(trips).withColumn(
-            "year", F.year("start_time")
-        ).withColumn("month", F.month("start_time"))
-        return {
-            "trip_fact": fact,
-            "dim_station": builders.build_dim_station(trips),
-            "dim_datetime": builders.build_dim_datetime(spark),
-        }
-
-    def gates(ctx):
-        t = ctx["build"]
-        results = quality.check_all(
-            t["trip_fact"], "trip_fact", "trip_id",
-            dims=[(t["dim_station"], "start_station_id", "station_id")],
-        )
-        return all(r.passed for r in results)
-
-    def publish(ctx):
-        t = ctx["build"]
-        write_parquet(t["trip_fact"], f"{out}/trip_fact", partition_by=["year", "month"])
-        write_parquet(t["dim_station"], f"{out}/dim_station")
-        write_parquet(t["dim_datetime"], f"{out}/dim_datetime")
-        return out
-
-    results = PipelineRunner([
-        Stage("ingest", ingest),
-        Stage("build", build, depends_on=["ingest"]),
-        Stage("gates", gates, depends_on=["build"], is_gate=True),
-        Stage("publish", publish, depends_on=["gates"]),
-    ]).run()
-    assert all(r.ok for r in results), [(r.name, r.error) for r in results]
+    raw = (
+        spark.read.format("bikeshare_trips")
+        .option("rows_per_month", 300)
+        .option("year", 2020)
+        .load()
+    )
+    trips = builders.clean_trips(raw)
+    tables = {
+        "trip_fact": builders.build_trip_fact(trips)
+        .withColumn("year", F.year("start_time"))
+        .withColumn("month", F.month("start_time")),
+        "dim_station": builders.build_dim_station(trips),
+        "dim_datetime": builders.build_dim_datetime(spark),
+    }
+    results = quality.check_all(
+        tables["trip_fact"], "trip_fact", "trip_id",
+        dims=[(tables["dim_station"], "start_station_id", "station_id")],
+    )
+    assert all(r.passed for r in results), [r for r in results if not r.passed]
+    pipeline.write_all(tables, out)
     return out
 
 

@@ -204,47 +204,6 @@ class TestDedup:
         with pytest.raises(ValueError, match="bands >= 3"):
             dedup.simhash_candidates(docs, bands=2, conjunction=True)
 
-    def test_prefix_positional_lossless_and_pruning(self, spark):
-        # Engineered for a positional prune that SURVIVES the probing-
-        # prefix filter: docs 1 and 2 (both n=6) share only `s`, which
-        # is doc 1's rarest token (probe position 1, inside its
-        # 3-token probing prefix) and sits at position 4 of doc 2 —
-        # the last slot of its 4-token indexing prefix. Overlap bound
-        # min(1,4) + min(6-1, 6-4) = 3 < required 12/3 = 4, so the
-        # (1,2) candidate dies before verify. m/k tokens get df 3 via
-        # the filler docs so `s` (df 2) outranks them in doc 1 while
-        # the df-1 u tokens outrank it in doc 2. True pairs
-        # ((1,3)/(1,4) at jaccard 5/8, (3,4) identical) have aligned
-        # early matches — never pruned.
-        rows = [
-            (1, "s m1 m2 m3 m4 m5"),
-            (2, "u1 u2 u3 s k1 k2"),
-            (3, "m1 m2 m3 m4 m5 k1 k2"),
-            (4, "m1 m2 m3 m4 m5 k1 k2"),
-        ]
-        df = spark.createDataFrame(rows, "doc_id long, text string")
-        kw = dict(text_col="text", id_col="doc_id", shingle_n=1, min_jaccard=0.5)
-        base = {(r["id_a"], r["id_b"])
-                for r in dedup.prefix_jaccard_candidates(df, **kw).collect()}
-        pos = {(r["id_a"], r["id_b"])
-               for r in dedup.prefix_jaccard_candidates(df, positional=True, **kw).collect()}
-        assert pos <= base and pos < base  # strictly prunes on this shape
-        verified = {
-            (r["id_a"], r["id_b"])
-            for r in dedup.jaccard_verify_pairs(
-                df, dedup.prefix_jaccard_candidates(df, positional=True, **kw), **kw
-            ).collect()
-        }
-        # ground truth from the all-candidate verify: nothing lost
-        truth = {
-            (r["id_a"], r["id_b"])
-            for r in dedup.jaccard_verify_pairs(
-                df, dedup.prefix_jaccard_candidates(df, **kw), **kw
-            ).collect()
-        }
-        assert (1, 2) in base and (1, 2) not in pos  # the engineered prune
-        assert verified == truth == {(1, 3), (1, 4), (3, 4)}
-
     def test_minhash_est_jaccard(self, spark, docs):
         pairs = dedup.minhash_lsh_candidates(docs, num_hashes=32, bands=8)
         got = {(r["id_a"], r["id_b"]): r["est_jaccard"] for r in pairs.collect()}
@@ -729,21 +688,6 @@ class TestSimilarity:
         )
         assert s1 == s2
 
-    def test_srp_arrow_twin_bit_equal(self, spark, sf_dir):
-        # the serving-path matmul twin must produce BIT-IDENTICAL
-        # signatures to the HOF fold on the whole gate corpus — a sign
-        # flip needs |dot| within float64 summation-order error
-        from nyc_bikeshare_datawarehouse_spark.sources.readers import load_table
-
-        emb = load_table(spark, sf_dir, "embeddings")
-        hof = rows_set(
-            emb.select("vec_id", similarity.srp_signature("embedding", 64, 24).alias("sig"))
-        )
-        arrow = rows_set(
-            similarity.srp_signatures_arrow(emb, 64, "vec_id", "embedding", 24)
-        )
-        assert hof == arrow and len(hof) > 0
-
     def test_ivf_kmeans_fit(self, spark, sf_dir):
         pytest.importorskip("pyspark.ml")
         from nyc_bikeshare_datawarehouse_spark.sources.readers import load_table
@@ -847,7 +791,10 @@ class TestSimilarity:
         emb = load_table(spark, sf_dir, "embeddings")
         rows = {r["vec_id"]: list(map(float, r["embedding"])) for r in emb.collect()}
         centers = [rows[i] for i in sorted(rows)[:8]]
-        books = similarity.pq_codebooks_py(emb, m=8, k=16)
+        books = [
+            [list(map(float, c)) for c in book]
+            for book in similarity.pq_codebooks_frame(emb, m=8, k=16).head()["__books"]
+        ]
         path = str(tmp_path / "ivfpq")
         similarity.ivfpq_write(emb, path, n_cells=8, m=8, centers=centers, books=books)
 
@@ -986,11 +933,6 @@ class TestMultimodal:
         assert len(row[1]["feature"]) == 8
         again = {r["asset_id"]: r for r in multimodal.extract_features(assets).collect()}
         assert row[1]["feature"] == again[1]["feature"]
-
-    def test_sample_frames_plan(self, spark, assets):
-        frames = multimodal.sample_frames(assets, every_ms=1000).collect()
-        # 3500 ms at 1000 ms cadence -> frames 0,1,2 at 0/1000/2000 ms
-        assert [(r["frame_idx"], r["frame_ms"]) for r in frames] == [(0, 0), (1, 1000), (2, 2000)]
 
     def test_resize_default_codec_import_gated(self, spark, assets):
         # without PIL in the container, the default codec raises at
@@ -1648,30 +1590,6 @@ class TestTvidVideo:
         assert multimodal.video_scene_stats(
             bad, cut_threshold=1, strict=False
         ).count() == 0
-
-    def test_sample_frames_decode_real_payloads(self, spark, docs):
-        vids = multimodal.synth_video(docs, n_frames=6, frame_ms=200)
-        # 6 frames x 200ms = 1200ms at 500ms cadence -> floor(1200/500) = 2
-        # samples (the metadata-planned path's rule, kept identical here)
-        out = multimodal.sample_frames(vids, every_ms=500, decode=True).collect()
-        per = [r for r in out if r["asset_id"] == 7]
-        assert [(r["frame_idx"], r["frame_ms"]) for r in per] == [
-            (0, 0), (1, 500)
-        ]
-        # sampled instant 500ms falls in frame 2 (500 // 200)
-        got = multimodal.bmp_decode(bytes(per[1]["frame_content"]))[:, :, 0]
-        assert got.reshape(-1).tolist() == self.closed_form_pixels(7, 120)[2]
-
-    def test_sample_frames_non_tvid_keeps_planned_shape(self, spark):
-        meta = ("video/mp4", None, None, None, 2 * 1000)
-        df = spark.createDataFrame(
-            [(5, "video", bytearray(b"OPAQ"), None, meta)],
-            multimodal.ASSET_SCHEMA,
-        )
-        rows = multimodal.sample_frames(df, every_ms=1000, decode=True).collect()
-        assert [(r["frame_idx"], r["frame_content"]) for r in rows] == [
-            (0, None), (1, None)
-        ]
 
 
 class TestImageChecksum:

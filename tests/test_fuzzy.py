@@ -157,49 +157,3 @@ def test_fuzzy_exhaustive_banded_equals_unbanded(spark, sf_dir):
     )
     assert rows_set(banded) == rows_set(plain)
     assert banded.count() > 0
-
-
-class TestJaroWinkler:
-    def test_matches_duckdb_builtin_within_quantization(self):
-        import duckdb
-
-        from nyc_bikeshare_datawarehouse_spark.functions.fuzzy import (
-            jaro_winkler_micro,
-        )
-
-        con = duckdb.connect()
-        cases = [
-            ("martha", "marhta"), ("dixon", "dicksonx"), ("abc", "abc"),
-            ("jellyfish", "smellyfish"), ("crate", "trace"), ("abc", "xyz"),
-            ("dwayne", "duane"), ("a", ""), ("prefix_one", "prefix_two"),
-            ("same", "sam"), ("x", "x"), ("ab", "ba"),
-        ]
-        for a, b in cases:
-            d = con.execute(
-                "SELECT jaro_winkler_similarity(?, ?)", [a, b]
-            ).fetchone()[0]
-            assert abs(jaro_winkler_micro(a, b) / 1_000_000 - d) < 2e-6, (a, b)
-
-    def test_exact_rational_values(self):
-        from nyc_bikeshare_datawarehouse_spark.functions.fuzzy import (
-            jaro_winkler_micro,
-        )
-
-        # martha/marhta: jaro = 0.9(4), prefix 3 -> jw = 0.9611...
-        assert jaro_winkler_micro("martha", "marhta") == 961_111
-        assert jaro_winkler_micro("abc", "abc") == 1_000_000
-        assert jaro_winkler_micro("abc", "xyz") == 0
-
-    def test_spark_column_matches_pure_python(self, spark):
-        from nyc_bikeshare_datawarehouse_spark.functions import fuzzy
-
-        rows = [("martha", "marhta"), ("dixon", "dicksonx"),
-                ("crate", "trace"), (None, "x")]
-        df = spark.createDataFrame(rows, "a string, b string")
-        got = {
-            (r["a"], r["b"]): r["jw_micro"]
-            for r in fuzzy.with_jaro_winkler(df, "a", "b").collect()
-        }
-        for a, b in rows:
-            want = 0 if a is None else fuzzy.jaro_winkler_micro(a, b)
-            assert got[(a, b)] == want

@@ -87,3 +87,45 @@ def test_gates_check_the_written_tables(spark, csv_inputs, monkeypatch):
         files = [urlparse(f).path for f in df.inputFiles()]
         root = os.path.abspath(f"{out}/{name}")
         assert files and all(f.startswith(root + os.sep) for f in files), name
+
+
+def _run_main(monkeypatch, spark, trips, weather, out):
+    """`pipeline.main` in-process on the shared test session; returns
+    its exit code."""
+    import sys
+
+    from nyc_bikeshare_datawarehouse_spark import session
+
+    monkeypatch.setattr(session, "get_spark", lambda *a, **k: spark)
+    monkeypatch.setattr(
+        sys, "argv",
+        ["pipeline", "--trips", trips, "--weather", weather, "--output", out],
+    )
+    with pytest.raises(SystemExit) as exc:
+        pipeline.main()
+    return exc.value.code
+
+
+def test_main_exits_zero_when_every_gate_passes(spark, csv_inputs, monkeypatch, capsys):
+    code = _run_main(monkeypatch, spark, *csv_inputs)
+    lines = capsys.readouterr().out.splitlines()
+    assert code == 0
+    assert lines and all(line.startswith("PASS ") for line in lines)
+
+
+def test_main_exits_one_when_a_gate_fails(spark, csv_inputs, monkeypatch, capsys, tmp_path):
+    # two stations report DIFFERENT readings for one DATE: the rows are not
+    # duplicates, so build_weather_fact keeps both and the weather_fact
+    # unique_pk gate (on date_time) fails
+    trips, _, out = csv_inputs
+    weather = tmp_path / "weather_two_stations.csv"
+    weather.write_text("\n".join([
+        WEATHER_HEADER,
+        *WEATHER_ROWS,
+        "US2,B,2020-01-05,0.30,0,41,46,36,0,,",
+    ]) + "\n")
+    code = _run_main(monkeypatch, spark, trips, str(weather), out)
+    lines = capsys.readouterr().out.splitlines()
+    assert code == 1
+    failed = [line for line in lines if line.startswith("FAIL ")]
+    assert [line.split(":")[0] for line in failed] == ["FAIL weather_fact.unique_pk"]

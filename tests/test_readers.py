@@ -112,14 +112,13 @@ def test_orc_roundtrip_with_pushdown(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from nyc_bikeshare_datawarehouse_spark.sources.readers import read_orc
-    from nyc_bikeshare_datawarehouse_spark.sources.sinks import write_orc
 
     df = spark.createDataFrame(
         [(i, "g%d" % (i % 3), float(i)) for i in range(100)],
         "id long, g string, v double",
     )
     path = str(tmp_path / "orc")
-    write_orc(df, path, partition_by=["g"])
+    df.write.partitionBy("g").orc(path)
     back = read_orc(spark, path)
     assert back.count() == 100
     assert {r["g"] for r in back.select("g").distinct().collect()} == {"g0", "g1", "g2"}
@@ -130,21 +129,6 @@ def test_orc_roundtrip_with_pushdown(spark, tmp_path):
     # partition pruning on the partition column
     pruned = back.filter(F.col("g") == "g1")._jdf.queryExecution().executedPlan().toString()
     assert re.search(r"PartitionFilters: \[[^\]]*g1", pruned)
-
-
-def test_parquet_schema_evolution_merge(spark, tmp_path):
-    from nyc_bikeshare_datawarehouse_spark.sources.readers import read_parquet_evolved
-
-    v1 = str(tmp_path / "v1")
-    v2 = str(tmp_path / "v2")
-    spark.createDataFrame([(1, "a")], "id long, name string").write.parquet(v1)
-    spark.createDataFrame(
-        [(2, "b", "en")], "id long, name string, lang string"
-    ).write.parquet(v2)
-    merged = read_parquet_evolved(spark, v1, v2)
-    assert set(merged.columns) == {"id", "name", "lang"}
-    rows = {r["id"]: r["lang"] for r in merged.collect()}
-    assert rows == {1: None, 2: "en"}  # old files null-fill the new column
 
 
 def test_read_text_lines_and_wholefile(spark, tmp_path):

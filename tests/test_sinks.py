@@ -1,5 +1,5 @@
-"""Sink tests: DDL analogs, truncate-and-load, partitioned writes with
-dynamic partition overwrite (incremental month refresh)."""
+"""Sink tests: catalog-table drop, partitioned writes with dynamic
+partition overwrite (incremental month refresh)."""
 
 from __future__ import annotations
 
@@ -12,7 +12,7 @@ from nyc_bikeshare_datawarehouse_spark.sources import sinks
 @pytest.fixture()
 def catalog_table(spark):
     df = spark.createDataFrame([(1, "a"), (2, "b")], "id int, v string")
-    sinks.create_table(spark, "t_sink", df)
+    df.write.mode("overwrite").format("parquet").saveAsTable("t_sink")
     yield "t_sink"
     sinks.drop_table(spark, "t_sink")
 
@@ -22,34 +22,6 @@ def test_create_and_drop(spark, catalog_table):
     sinks.drop_table(spark, catalog_table)
     assert not spark.catalog.tableExists(catalog_table)
     sinks.drop_table(spark, catalog_table)  # idempotent
-
-
-def test_insert_overwrite_truncates(spark, catalog_table):
-    newer = spark.createDataFrame([(9, "z")], "id int, v string")
-    sinks.insert_overwrite(newer, catalog_table)
-    assert [tuple(r) for r in spark.table(catalog_table).collect()] == [(9, "z")]
-
-
-def test_insert_append(spark, catalog_table):
-    more = spark.createDataFrame([(3, "c")], "id int, v string")
-    sinks.insert_append(more, catalog_table)
-    assert spark.table(catalog_table).count() == 3
-
-
-def test_compact_parquet(spark, tmp_path):
-    src = str(tmp_path / "small")
-    # simulate a small-file problem: 16 files for 160 rows
-    df = spark.range(160).repartition(16)
-    df.write.parquet(src)
-    import glob
-
-    assert len(glob.glob(f"{src}/part-*")) == 16
-    dst = str(tmp_path / "compacted")
-    n = sinks.compact_parquet(spark, src, dst, target_files=2)
-    assert n == 160
-    assert len(glob.glob(f"{dst}/part-*")) == 2
-    got = sorted(r["id"] for r in spark.read.parquet(dst).collect())
-    assert got == list(range(160))
 
 
 def test_schema_evolution_merge(spark, tmp_path):
@@ -84,7 +56,7 @@ def test_drop_table_db_qualified_spares_default_table(spark, tmp_path):
     # dir of an UNRELATED default-database managed table named t.
     spark.sql("CREATE DATABASE IF NOT EXISTS dropdb")
     victim = spark.createDataFrame([(1, "keep")], "id int, v string")
-    sinks.create_table(spark, "t_shared_name", victim)
+    victim.write.mode("overwrite").format("parquet").saveAsTable("t_shared_name")
     qualified = spark.createDataFrame([(2, "bye")], "id int, v string")
     qualified.write.mode("overwrite").format("parquet").saveAsTable("dropdb.t_shared_name")
     try:

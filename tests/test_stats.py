@@ -26,7 +26,7 @@ from contextlib import contextmanager
 
 from pyspark.sql import functions as F
 
-from nyc_bikeshare_datawarehouse_spark.sources.sinks import create_table, drop_table
+from nyc_bikeshare_datawarehouse_spark.sources.sinks import drop_table
 
 
 @contextmanager
@@ -62,7 +62,7 @@ def test_analyze_table_feeds_rowcount_to_planner(spark):
     df = spark.range(0, 1234).select(
         F.col("id").alias("k"), (F.col("id") % 7).alias("v")
     )
-    create_table(spark, name, df)
+    df.write.mode("overwrite").format("parquet").saveAsTable(name)
     try:
         # catalog row counts reach plan stats only under the CBO flag
         # (toPlanStats drops rowCount otherwise) — the lifecycle is
@@ -93,8 +93,8 @@ def test_column_stats_drive_broadcast_decision(spark):
     fact = spark.range(0, 50000).select(
         (F.col("id") % 20000).alias("k"), (F.col("id") * 3).alias("m")
     )
-    create_table(spark, dim_name, dim)
-    create_table(spark, fact_name, fact)
+    dim.write.mode("overwrite").format("parquet").saveAsTable(dim_name)
+    fact.write.mode("overwrite").format("parquet").saveAsTable(fact_name)
     try:
         with _confs(
             spark,

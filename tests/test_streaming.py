@@ -627,76 +627,6 @@ def test_streaming_drift_monitor_end_to_end(spark, sf_dir, tmp_path):
     assert len(got) == 125
 
 
-def test_streaming_attribution_matches_batch_window(spark, sf_dir):
-    from nyc_bikeshare_datawarehouse_spark.streaming.attribution import (
-        streaming_attribution,
-    )
-    from nyc_bikeshare_datawarehouse_spark.plans.queries import QUERIES
-
-    stream = se.stream_events(spark, sf_dir)
-    q = (
-        streaming_attribution(stream)
-        .writeStream.format("memory")
-        .queryName("t_attr")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    cols = [
-        "event_id", "user_id", "purchase_ep",
-        "first_touch_id", "first_touch_type",
-        "last_touch_id", "last_touch_type",
-    ]
-    got = sorted(tuple(r[c] for c in cols) for r in spark.table("t_attr").collect())
-    want = sorted(
-        tuple(r[c] for c in cols)
-        for r in QUERIES["q_attribution"](spark, sf_dir).collect()
-    )
-    assert got == want and len(got) > 0
-
-
-def test_attribution_state_pruned_without_purchases():
-    # ADVICE r08: a touches-only user must not accumulate state without
-    # bound — pruning happens against the batch's max epoch even when no
-    # purchase is processed. Drive _update directly with a stub state.
-    import pandas as pd
-
-    from nyc_bikeshare_datawarehouse_spark.streaming import attribution as at
-
-    class StubState:
-        def __init__(self):
-            self.exists = False
-            self._v = None
-
-        @property
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
-            self.exists = True
-
-    state = StubState()
-    # batch 1: 3 old views, then a view 2 days later — the old views are
-    # outside the new view's 24 h horizon and must be dropped
-    old = [(1000 + i, 10 + i, "view") for i in range(3)]
-    late_ep = 1000 + 2 * at.LOOKBACK_S
-    batch = pd.DataFrame(
-        [*old, (late_ep, 99, "view")], columns=["__ep", "event_id", "ets_type"]
-    )
-    out = list(at._update((7,), iter([batch]), state))
-    assert out == []  # no purchases, nothing emitted
-    eps, ids, ets = state.get
-    assert list(ids) == [99] and list(eps) == [late_ep]
-    # batch 2: a purchase right after still attributes to the kept view
-    batch2 = pd.DataFrame(
-        [(late_ep + 5, 500, "purchase")], columns=["__ep", "event_id", "ets_type"]
-    )
-    (res,) = list(at._update((7,), iter([batch2]), state))
-    assert list(res["first_touch_id"]) == [99] and list(res["last_touch_id"]) == [99]
-
-
 def test_checksum_stream_state_equals_batch_checksum(spark, sf_dir, tmp_path):
     from pyspark.sql import functions as F
 

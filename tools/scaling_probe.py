@@ -30,6 +30,7 @@ Writes SCALING.json and prints a markdown table for BASELINE.md.
 from __future__ import annotations
 
 import argparse
+import functools
 import json
 import math
 import os
@@ -39,10 +40,12 @@ import time
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from nyc_bikeshare_datawarehouse_spark.plans.queries import QUERIES
 from nyc_bikeshare_datawarehouse_spark.session import get_spark
+from nyc_bikeshare_datawarehouse_spark.sources.readers import TABLE_SCHEMAS
 
 SF01 = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 SF001 = "/root/testdata/sf0.01"
@@ -103,173 +106,84 @@ SCALE_PATH = [
 EXACT = ["q_ngram_jaccard", "q_dedup_clusters", "q_ngram_containment"]
 
 
-#: documents schema the replica builder writes — ALSO the cache key: a
-#: stale sfx corpus built before a column was added would fail any probe
-#: query selecting it (UNRESOLVED_COLUMN at 10x), so the marker stores
-#: this list and a mismatch triggers a rebuild instead of a crash.
-DOC_COLS = ["doc_id", "text", "lang", "source", "n_chars"]
+def replicate(spark, replicas: int, table: str, shift=(), transforms=None) -> None:
+    """Write `replicas` copies of the sf0.1 `table` into the sfx corpus.
 
-
-def build_sfx(spark, replicas: int) -> str:
+    Every column of `readers.TABLE_SCHEMAS[table]` is written, so a probe
+    query reads at 10x exactly the columns it reads at sf0.1 (the
+    declared-schema reader would return an unwritten column as NULL).
+    Replica k adds k·(max + 1) to each `shift` key column — keys stay
+    disjoint across replicas — and replaces each column in `transforms`
+    with `transforms[col](k)`; every other column passes through. The
+    `_<TABLE>_READY` marker stores the written column list, so a schema
+    change rebuilds the table instead of reusing a stale one."""
     out = f"{BENCHDATA}/sfx{replicas}"
-    marker = f"{out}/_SCALING_READY"
-    if os.path.exists(marker) and open(marker).read().strip() == ",".join(DOC_COLS):
-        return out
-    docs = spark.read.parquet(f"{SF01}/documents.parquet")
-    max_id = docs.agg(F.max("doc_id")).head()[0] + 1
-    parts = []
-    for k in range(replicas):
-        suffixed = F.array_join(
-            F.transform(F.split(F.col("text"), " "), lambda t: F.concat(t, F.lit(f"_{k}"))),
-            " ",
-        )
-        parts.append(
-            docs.select(
-                (F.col("doc_id") + F.lit(k * max_id)).alias("doc_id"),
-                suffixed.alias("text"),
-                "lang",
-                "source",
-                "n_chars",
-            )
-        )
-    big_docs = parts[0]
-    for p in parts[1:]:
-        big_docs = big_docs.unionByName(p)
-    big_docs.repartition(32).write.mode("overwrite").parquet(f"{out}/documents.parquet")
-
-    emb = spark.read.parquet(f"{SF01}/embeddings.parquet")
-    vmax = emb.agg(F.max("vec_id")).head()[0] + 1
-    dim = len(emb.select("embedding").head()["embedding"])
-    eparts = []
-    for k in range(replicas):
-        rot = k % dim
-        rotated = (
-            F.col("embedding")
-            if rot == 0
-            else F.concat(
-                F.slice("embedding", rot + 1, dim - rot), F.slice("embedding", 1, rot)
-            )
-        )
-        eparts.append(
-            emb.select(
-                (F.col("vec_id") + F.lit(k * vmax)).alias("vec_id"),
-                rotated.alias("embedding"),
-                "label",
-            )
-        )
-    big_emb = eparts[0]
-    for p in eparts[1:]:
-        big_emb = big_emb.unionByName(p)
-    big_emb.repartition(32).write.mode("overwrite").parquet(f"{out}/embeddings.parquet")
-    open(marker, "w").write(",".join(DOC_COLS))
-    return out
-
-
-#: lineitem sidecar schema — column-keyed marker like DOC_COLS/ORDER_COLS
-#: (the original marker was a bare "ok"; the mismatch forces a rebuild)
-LINEITEM_COLS = ["l_orderkey", "l_partkey", "l_suppkey", "l_extendedprice"]
-
-
-def ensure_lineitem_sfx(spark, replicas: int) -> None:
-    """Sidecar lineitem replica set for the basket / co-purchase-graph /
-    ABC probes: replica k shifts l_orderkey, l_partkey AND l_suppkey by
-    k·max, so baskets and both co-occurrence universes are disjoint
-    across replicas — within-order pair structure (basket sizes, pair
-    fan-out Σ|basket|²) is preserved exactly, volume grows 10×; prices
-    pass through untouched for the revenue probes."""
-    out = f"{BENCHDATA}/sfx{replicas}"
-    marker = f"{out}/_LINEITEM_READY"
-    if os.path.exists(marker) and open(marker).read().strip() == ",".join(LINEITEM_COLS):
+    cols = TABLE_SCHEMAS[table].fieldNames()
+    marker = f"{out}/_{table.upper()}_READY"
+    if os.path.exists(marker) and open(marker).read().strip() == ",".join(cols):
         return
-    li = spark.read.parquet(f"{SF01}/lineitem.parquet").select(*LINEITEM_COLS)
-    mo = li.agg(F.max("l_orderkey")).head()[0] + 1
-    mp = li.agg(F.max("l_partkey")).head()[0] + 1
-    ms = li.agg(F.max("l_suppkey")).head()[0] + 1
-    parts = [
-        li.select(
-            (F.col("l_orderkey") + F.lit(k * mo)).alias("l_orderkey"),
-            (F.col("l_partkey") + F.lit(k * mp)).alias("l_partkey"),
-            (F.col("l_suppkey") + F.lit(k * ms)).alias("l_suppkey"),
-            "l_extendedprice",
-        )
-        for k in range(replicas)
-    ]
-    big = parts[0]
-    for p in parts[1:]:
-        big = big.unionByName(p)
-    big.repartition(32).write.mode("overwrite").parquet(f"{out}/lineitem.parquet")
-    open(marker, "w").write(",".join(LINEITEM_COLS))
+    src = spark.read.schema(TABLE_SCHEMAS[table]).parquet(f"{SF01}/{table}.parquet")
+    top = src.agg(*[(F.max(c) + 1).alias(c) for c in shift]).head() if shift else {}
+    transforms = transforms or {}
+
+    def column(c: str, k: int):
+        if c in shift:
+            return (F.col(c) + F.lit(k * top[c])).alias(c)
+        if c in transforms:
+            return transforms[c](k).alias(c)
+        return F.col(c)
+
+    parts = [src.select(*[column(c, k) for c in cols]) for k in range(replicas)]
+    big = functools.reduce(DataFrame.unionByName, parts)
+    big.repartition(32).write.mode("overwrite").parquet(f"{out}/{table}.parquet")
+    open(marker, "w").write(",".join(cols))
 
 
-#: events sidecar schema — column-keyed marker like DOC_COLS, so adding a
-#: column here rebuilds a stale replica set instead of crashing a probe
-EVENT_COLS = ["event_id", "ts", "user_id", "value", "event_type"]
+def _suffix_tokens(k: int):
+    """Replica k's text: every token suffixed `_k` (disjoint shingles)."""
+    return F.array_join(
+        F.transform(F.split(F.col("text"), " "), lambda t: F.concat(t, F.lit(f"_{k}"))),
+        " ",
+    )
 
 
-#: orders sidecar schema — same column-keyed marker contract
-ORDER_COLS = ["o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice", "o_orderdate", "o_orderpriority"]
+def _rotate_embedding(k: int):
+    """Replica k's vector: circularly rotated by k positions."""
+    dim = F.size("embedding")
+    rot = F.lit(k) % dim
+    return F.concat(
+        F.slice("embedding", rot + 1, dim - rot), F.slice("embedding", F.lit(1), rot)
+    )
 
 
-def ensure_orders_sfx(spark, replicas: int) -> None:
-    """Sidecar orders replica set for the customer-analytics probes
-    (gini / RFM / benford): replica k shifts o_orderkey and o_custkey
-    by k·max — customer count (and therefore global-rank input size)
-    grows 10×, per-customer order structure and the price distribution
-    are preserved exactly."""
-    out = f"{BENCHDATA}/sfx{replicas}"
-    marker = f"{out}/_ORDERS_READY"
-    if os.path.exists(marker) and open(marker).read().strip() == ",".join(ORDER_COLS):
-        return
-    o = spark.read.parquet(f"{SF01}/orders.parquet").select(*ORDER_COLS)
-    mo = o.agg(F.max("o_orderkey")).head()[0] + 1
-    mc = o.agg(F.max("o_custkey")).head()[0] + 1
-    parts = [
-        o.select(
-            (F.col("o_orderkey") + F.lit(k * mo)).alias("o_orderkey"),
-            (F.col("o_custkey") + F.lit(k * mc)).alias("o_custkey"),
-            "o_orderstatus",
-            "o_totalprice",
-            "o_orderdate",
-            "o_orderpriority",
-        )
-        for k in range(replicas)
-    ]
-    big = parts[0]
-    for p in parts[1:]:
-        big = big.unionByName(p)
-    big.repartition(32).write.mode("overwrite").parquet(f"{out}/orders.parquet")
-    open(marker, "w").write(",".join(ORDER_COLS))
-
-
-def ensure_events_sfx(spark, replicas: int) -> None:
-    """Sidecar events replica set for per-user window / metrics probes:
-    replica k shifts event_id and user_id by k·max, timestamps and the
-    (value, event_type) payload unchanged — user count (and therefore
-    window-partition count) grows 10×, per-user event density and the
-    score/label joint distribution are preserved exactly. Only the
-    columns probes read are written (EVENT_COLS)."""
-    out = f"{BENCHDATA}/sfx{replicas}"
-    marker = f"{out}/_EVENTS_READY"
-    if os.path.exists(marker) and open(marker).read().strip() == ",".join(EVENT_COLS):
-        return
-    ev = spark.read.parquet(f"{SF01}/events.parquet").select(*EVENT_COLS)
-    me = ev.agg(F.max("event_id")).head()[0] + 1
-    mu = ev.agg(F.max("user_id")).head()[0] + 1
-    parts = [
-        ev.select(
-            (F.col("event_id") + F.lit(k * me)).alias("event_id"),
-            "ts",
-            (F.col("user_id") + F.lit(k * mu)).alias("user_id"),
-            "value",
-            "event_type",
-        )
-        for k in range(replicas)
-    ]
-    big = parts[0]
-    for p in parts[1:]:
-        big = big.unionByName(p)
-    big.repartition(32).write.mode("overwrite").parquet(f"{out}/events.parquet")
-    open(marker, "w").write(",".join(EVENT_COLS))
+#: sidecar tables and the replica key shifts they need, built only when a
+#: probe query reads them: lineitem shifts orders, parts AND suppliers so
+#: baskets and both co-occurrence universes are disjoint across replicas;
+#: orders shifts orders and customers (customer count grows 10x, per-
+#: customer order structure is preserved); events shifts events and users
+#: (user count grows 10x, per-user density is preserved)
+SIDECARS = {
+    "lineitem": (
+        ("l_orderkey", "l_partkey", "l_suppkey"),
+        ("q_basket_rules", "q_triangle_count", "q_shortest_paths",
+         "q_abc_classification", "q_hhi_concentration"),
+    ),
+    "events": (
+        ("event_id", "user_id"),
+        ("q_rolling_median", "q_roc_auc", "q_ab_ttest", "q_spearman_drift",
+         "q_bootstrap_ci", "q_kaplan_meier", "q_seasonal_decompose",
+         "q_cusum_changepoint", "q_holt_winters", "q_markov_attribution",
+         "q_acf_lags", "q_funnel_conversion", "q_dau_mau", "q_wau_sketch",
+         "q_psi_drift"),
+    ),
+    "orders": (
+        ("o_orderkey", "o_custkey"),
+        ("q_gini_concentration", "q_rfm_segments", "q_benford_digits",
+         "q_cohort_ltv", "q_new_vs_returning", "q_hhi_concentration",
+         "q_purchase_cadence", "q_merge_upsert", "q_schema_evolution",
+         "q_schema_evolution_versioned", "q_delete_typed", "q_update_typed"),
+    ),
+}
 
 
 def time_spatial(spark, mult: int, base: int = 15000, warm: bool = False) -> float:
@@ -435,12 +349,6 @@ def main() -> None:
              "since r12, so the claim is alpha ~0)",
     )
     ap.add_argument(
-        "--srp-sig-stage", action="store_true",
-        help="time the SRP signature STAGE alone at sf0.1 and 10x, HOF "
-             "fold vs Arrow matmul twin, and merge a srp_signature_stage "
-             "row (r14 verdict #6)",
-    )
-    ap.add_argument(
         "--er-lever", action="store_true",
         help="time the exact vs distinct-universe entity-resolution funnel "
              "on the SAME repeat-heavy (4x-replicated) sf0.1 corpus",
@@ -448,18 +356,14 @@ def main() -> None:
     args = ap.parse_args()
 
     spark = get_spark("scaling-probe")
-    big = build_sfx(spark, args.replicas)
-    if args.only and any(
-        q in ("q_basket_rules", "q_triangle_count", "q_shortest_paths", "q_abc_classification", "q_hhi_concentration") for q in args.only
-    ):
-        ensure_lineitem_sfx(spark, args.replicas)
-    if args.only and any(q in ("q_rolling_median", "q_roc_auc", "q_ab_ttest", "q_spearman_drift", "q_bootstrap_ci", "q_kaplan_meier", "q_seasonal_decompose", "q_cusum_changepoint", "q_holt_winters", "q_markov_attribution", "q_acf_lags", "q_funnel_conversion", "q_dau_mau", "q_wau_sketch", "q_psi_drift") for q in args.only):
-        ensure_events_sfx(spark, args.replicas)
-    if args.only and any(
-        q in ("q_gini_concentration", "q_rfm_segments", "q_benford_digits", "q_cohort_ltv", "q_new_vs_returning", "q_hhi_concentration", "q_purchase_cadence", "q_merge_upsert", "q_schema_evolution", "q_schema_evolution_versioned", "q_delete_typed", "q_update_typed")
-        for q in args.only
-    ):
-        ensure_orders_sfx(spark, args.replicas)
+    replicate(spark, args.replicas, "documents", shift=("doc_id",),
+              transforms={"text": _suffix_tokens})
+    replicate(spark, args.replicas, "embeddings", shift=("vec_id",),
+              transforms={"embedding": _rotate_embedding})
+    for table, (shift, readers) in SIDECARS.items():
+        if args.only and any(q in readers for q in args.only):
+            replicate(spark, args.replicas, table, shift=shift)
+    big = f"{BENCHDATA}/sfx{args.replicas}"
 
     if args.quantiles:
         from nyc_bikeshare_datawarehouse_spark.operators.quantiles import (
@@ -545,54 +449,6 @@ def main() -> None:
             print(f"{name}: {t_small}s -> {t_big}s  alpha={alpha:.2f} "
                   "(audit-bounded, sf0.01->sf0.1)", flush=True)
         json.dump(merged, open(SCALING_JSON, "w"), indent=2)
-        if not (args.only or args.incremental or args.spatial
-                or args.er_lever or args.srp_sig_stage):
-            return
-
-    if args.srp_sig_stage:
-        from nyc_bikeshare_datawarehouse_spark.functions import similarity
-        from nyc_bikeshare_datawarehouse_spark.sources.readers import load_table
-
-        def run_sig(sf_dir: str, arrow: bool, n_planes: int) -> float:
-            e = load_table(spark, sf_dir, "embeddings")
-            t0 = time.time()
-            if arrow:
-                similarity.srp_signatures_arrow(
-                    e, 64, "vec_id", "embedding", n_planes
-                ).count()
-            else:
-                e.select(
-                    "vec_id",
-                    similarity.srp_signature("embedding", 64, n_planes).alias("sig"),
-                ).count()
-            return round(time.time() - t0, 2)
-
-        # warm both paths (JIT + Arrow workers), then time in one session
-        run_sig(SF01, False, 32); run_sig(SF01, True, 32)
-        t_hof_s = run_sig(SF01, False, 32)
-        t_hof_b = run_sig(big, False, 32)
-        t_arr_s = run_sig(SF01, True, 32)
-        t_arr_b = run_sig(big, True, 32)
-        a_hof = math.log(t_hof_b / t_hof_s) / math.log(args.replicas)
-        a_arr = math.log(t_arr_b / t_arr_s) / math.log(args.replicas)
-        merged = json.load(open(SCALING_JSON))
-        merged["srp_signature_stage"] = {
-            "hof_sf0.1_sec": t_hof_s,
-            f"hof_sf1x{args.replicas}_sec": t_hof_b,
-            "hof_alpha": round(a_hof, 2),
-            "arrow_sf0.1_sec": t_arr_s,
-            f"arrow_sf1x{args.replicas}_sec": t_arr_b,
-            "arrow_alpha": round(a_arr, 2),
-            "step": f"signature stage ALONE (32 planes, dim 64), sf0.1 -> "
-                    f"{args.replicas}x: srp_signature HOF fold vs "
-                    "srp_signatures_arrow matmul twin (bit-equal, pinned "
-                    "in tests/test_functions.py). Serving path uses the "
-                    "Arrow twin; declared queries keep the HOF form for "
-                    "oracle parity.",
-        }
-        json.dump(merged, open(SCALING_JSON, "w"), indent=2)
-        print(f"srp sig HOF  : {t_hof_s}s -> {t_hof_b}s  alpha={a_hof:.2f}")
-        print(f"srp sig Arrow: {t_arr_s}s -> {t_arr_b}s  alpha={a_arr:.2f}")
         if not (args.only or args.incremental or args.spatial or args.er_lever):
             return
 
